@@ -60,11 +60,3 @@ def test_query_output_schema_is_scalar_only(spark, name):
         f"{name} outputs driver-unsortable columns {complex_cols}; "
         "serialize with array_join/to_json in BOTH engines"
     )
-
-
-def test_bench_headline_names_are_registered():
-    import bench
-
-    qs = entry.queries()
-    missing = [n for n in bench.R4_HEADLINE if n not in qs]
-    assert not missing, f"bench.py R4_HEADLINE references unknown queries: {missing}"

@@ -1,10 +1,8 @@
 """Interleaved-straggler replay for the two streaming standing-store
-gates (the round-7 verdict's task #4): the jsonl_audit writer's abort
-discipline is proven under task interleaving in tests/test_pysource.py;
-the foreachBatch gates' equivalent hazard is a crash PARTWAY through the
-multi-store write sequence -- some stores hold the batch's partition,
-others don't, and the stores are mutually inconsistent until the
-checkpoint replay rewrites them.
+gates (the round-7 verdict's task #4): the foreachBatch gates' hazard
+is a crash PARTWAY through the multi-store write sequence -- some
+stores hold the batch's partition, others don't, and the stores are
+mutually inconsistent until the checkpoint replay rewrites them.
 
 Each test crashes the batch body at EVERY cut point of its write
 sequence (ingest_dedup: accepted -> digests -> bands -> shingles;

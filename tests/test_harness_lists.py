@@ -1,131 +1,35 @@
-"""Harness-contract guards: every name the bench, probe, and fixed
-cross-round subset reference must exist in the registry -- a renamed
-query must fail HERE, not silently vanish from the driver's BENCH."""
+"""Harness-contract guard: every query name the benchmark's workloads
+run must exist in the registry with oracle SQL -- a renamed query must
+fail HERE, not silently vanish from ``perfbench``."""
 
 from __future__ import annotations
 
+import pathlib
 import sys
-import os
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def test_bench_headline_names_are_registered():
-    import bench
-    from wsu_cpts_415_spark.registry import REGISTRY
-    import wsu_cpts_415_spark.queries  # noqa: F401 populate
-
-    missing = [n for n in bench.R4_HEADLINE if n not in REGISTRY]
-    assert not missing, f"bench.R4_HEADLINE references unknown queries: {missing}"
-    assert len(set(bench.R4_HEADLINE)) == len(bench.R4_HEADLINE), "duplicate names"
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "perfbench"))
 
 
-def test_probe_names_are_registered():
-    import scale_probe
-    from wsu_cpts_415_spark.registry import REGISTRY
-    import wsu_cpts_415_spark.queries  # noqa: F401
+def test_perfbench_query_lists_are_registered():
+    import workloads
 
-    missing = [n for n in scale_probe.PROBE if n not in REGISTRY]
-    assert not missing, f"scale_probe.PROBE references unknown queries: {missing}"
-    assert len(set(scale_probe.PROBE)) == len(scale_probe.PROBE), (
-        "duplicate names in PROBE (each runs twice per probe)"
+    from wsu_cpts_415_spark.registry import all_queries
+
+    qs = all_queries()
+    named = (
+        list(workloads.Relational.WARMUP)
+        + list(workloads.CURATION_QUERIES)
+        + list(workloads.STREAMING_QUERIES)
     )
+    missing = [n for n in named if n not in qs or qs[n].oracle is None]
+    assert not missing, f"perfbench names without a registered oracle: {missing}"
 
-
-def test_r3_fixed_subset_still_registered():
-    """The cross-round comparison subset must stay runnable forever."""
-    import inspect
-
-    import bench
-    from wsu_cpts_415_spark.registry import REGISTRY
-    import wsu_cpts_415_spark.queries  # noqa: F401
-
-    src = inspect.getsource(bench.main)
-    # r3_set is defined inside main(); reconstruct it by executing the
-    # assignment block is brittle -- instead assert every headline name
-    # in the emitted subtotal set resolves (the set is a subset of
-    # HEADLINE by construction, which the first test already covers).
-    assert "r3_set" in src
-    assert all(n in REGISTRY for n in bench.R4_HEADLINE)
-
-
-def test_canary_queries_registered_and_in_headline():
-    """The machine-speed canary must be a subset of the frozen R4
-    comparator set (so every baseline back to r4 carries its times) and
-    must stay registered."""
-    import bench
-    from wsu_cpts_415_spark.registry import REGISTRY
-    import wsu_cpts_415_spark.queries  # noqa: F401
-
-    for n in bench.CANARY_QUERIES:
-        assert n in REGISTRY, n
-        assert n in bench.R4_HEADLINE, n
-
-
-def test_canary_normalizes_uniform_machine_slowdown():
-    """A uniform 2x machine slowdown must produce ZERO flags; a query
-    that regressed beyond the machine ratio must still flag, with the
-    canary-adjusted ratio."""
-    import bench
-
-    timings = {n: 1.0 for n in bench.CANARY_QUERIES}
-    timings["steady_op"] = 2.0
-    timings["regressed_op"] = 8.0
-    prior = {n: 0.5 for n in bench.CANARY_QUERIES}
-    prior["steady_op"] = 1.0
-    prior["regressed_op"] = 1.0
-
-    canary = bench._canary_ratio(timings, prior)
-    assert canary is not None and canary["ratio"] == 2.0
-
-    speed = canary["ratio"]
-    flagged = {
-        name: round(t / speed / prior[name], 2)
-        for name, t in timings.items()
-        if (
-            name in prior
-            and prior[name] >= bench.MIN_PRIOR_SEC
-            and t / speed > prior[name] * bench.REGRESSION_RATIO
-            and t / speed - prior[name] > bench.MIN_DELTA_SEC
-        )
-    }
-    assert flagged == {"regressed_op": 4.0}
-
-
-def test_canary_absent_from_baseline_is_none():
-    """Baselines that predate the canary set (or lack one member) must
-    yield None -- the guard then falls back to ratio 1.0, the
-    pre-canary behavior."""
-    import bench
-
-    timings = {n: 1.0 for n in bench.CANARY_QUERIES}
-    prior = {n: 0.5 for n in list(bench.CANARY_QUERIES)[:-1]}
-    assert bench._canary_ratio(timings, prior) is None
-
-
-def test_jobs_canary_members_registered():
-    """Informational driver-heavy canary: members must stay registered
-    (they span rounds 4-6, so unlike the scan canary they are pinned to
-    the registry, not the frozen R4 comparator list)."""
-    import bench
-    from wsu_cpts_415_spark.registry import REGISTRY
-    import wsu_cpts_415_spark.queries  # noqa: F401
-
-    for n in bench.CANARY_JOBS_QUERIES:
-        assert n in REGISTRY, n
-
-
-def test_env_skew_detector_marks_nonuniform_machine():
-    """When the driver-heavy reference inflates far beyond the scan
-    canary (the round-10 host finding), the regressions block must mark
-    env_skewed so flags read as suspect, not as plan regressions."""
-    import bench
-
-    timings = {n: 1.1 for n in bench.CANARY_QUERIES}       # scan: 1.1x
-    timings.update({n: 3.0 for n in bench.CANARY_JOBS_QUERIES})  # jobs: 3x
-    prior = {n: 1.0 for n in bench.CANARY_QUERIES}
-    prior.update({n: 1.0 for n in bench.CANARY_JOBS_QUERIES})
-    canary = bench._canary_ratio(timings, prior)
-    jobs_now = sum(timings[n] for n in bench.CANARY_JOBS_QUERIES)
-    jobs_then = sum(prior[n] for n in bench.CANARY_JOBS_QUERIES)
-    assert jobs_now / jobs_then > 1.3 * canary["ratio"]  # the detector fires
+    # the relational workload runs every q<N> the TPC-H modules register
+    tpch = [
+        n for n, q in qs.items()
+        if q.fn.__module__.endswith((".tpch", ".tpch2")) and n[1].isdigit()
+    ]
+    assert sorted(n.split("_")[0] for n in tpch) == sorted(
+        f"q{i}" for i in range(1, 23)
+    )
+    assert all(qs[n].oracle for n in tpch)

@@ -176,30 +176,3 @@ def test_orc_roundtrip_all_tables(spark, tmp_path):
         a = sorted(map(str, df.collect()))
         b = sorted(map(str, back.collect()))
         assert a == b, f"{name} ORC round-trip mismatch"
-
-
-def test_format_roundtrip_lossless(spark, tmp_path):
-    """parquet/ORC/CSV/JSON stores reproduce lineitem (timestamps,
-    doubles, strings) bit-for-bit under the pinned options."""
-    from wsu_cpts_415_spark.io.formats import FORMATS, read_store, write_store
-    from wsu_cpts_415_spark.io.tables import load_table
-    from wsu_cpts_415_spark.schemas import FIXTURE_SCHEMAS
-
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    want = sorted(tuple(r) for r in li.collect())
-    for fmt in FORMATS:
-        path = str(tmp_path / f"store_{fmt}")
-        write_store(li, path, fmt)
-        back = read_store(spark, path, fmt, schema=FIXTURE_SCHEMAS["lineitem"])
-        assert back.schema == li.schema, fmt
-        got = sorted(tuple(r) for r in back.collect())
-        assert got == want, f"{fmt} round-trip diverged"
-
-
-def test_text_formats_require_schema(spark, tmp_path):
-    import pytest as _pytest
-
-    from wsu_cpts_415_spark.io.formats import read_store
-
-    with _pytest.raises(ValueError):
-        read_store(spark, str(tmp_path), "csv")

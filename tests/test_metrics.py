@@ -84,25 +84,6 @@ def test_flagship_broadcast_bytes_are_dimension_sized(spark):
     assert prof["scan_rows"] > 10 * 1500
 
 
-def test_advise_shuffle_partitions_scales_with_volume(spark):
-    """The advisor must recommend ceil(shuffle_bytes / target) within
-    [floor, cap], so a tiny query advises the floor and a tighter
-    target raises the count."""
-    from wsu_cpts_415_spark.ops.metrics import advise_shuffle_partitions
-
-    df = (
-        load_table(spark, SF_ORACLE, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-    )
-    wide = advise_shuffle_partitions(df, target_mb=128)
-    tight = advise_shuffle_partitions(df, target_mb=1)
-    assert wide["advised_partitions"] == 1  # well under 128MB at sf0.01
-    assert tight["advised_partitions"] >= wide["advised_partitions"]
-    expected = -(-tight["shuffle_bytes"] // (1024 * 1024))
-    assert tight["advised_partitions"] == max(1, expected)
-
-
 def test_ingest_gate_shuffles_sketches_not_text(spark):
     """The ingest gate's measured movement must be sketch-sized: the
     shuffle carries digests / band keys / shingle arrays, never the

@@ -765,8 +765,7 @@ def test_prefix_filter_ssjoin_plan(spark, qs):
             continue
         assert read.count(":") - 1 <= 2, f"scan too wide: {read}"
     # round-9 generation-time bounds, pinned so a refactor cannot
-    # silently undo the measured 508x enumeration cut
-    # (scale_probe_er_x100_r9.json):
+    # silently undo the measured 508x enumeration cut (round 9, x100):
     # (a) the length bucket is an EQUI-key of the self-join -- bkt must
     #     appear among the join keys, not only as a filter condition;
     # (b) the packed-sketch intersection bound evaluates INSIDE the

@@ -9,7 +9,8 @@
   cosine query vector) run ZERO Spark jobs on a steady-state second
   call -- the multi-action sweep's contract;
 * gate-memo hits reuse ONE persisted frame per site instead of
-  re-persisting per call (the release list stays bounded).
+  re-persisting per call (the release list stays bounded), and never
+  hand a caller another plan's frame.
 """
 
 from __future__ import annotations
@@ -92,27 +93,41 @@ def test_staged_model_folds_run_zero_jobs_when_warm(spark):
 
 
 def test_gate_memo_hit_reuses_one_persisted_frame(spark):
-    from wsu_cpts_415_spark.ops.staging import (
-        _CACHE,
-        clear_staged,
-        maybe_broadcast,
-    )
+    from wsu_cpts_415_spark.ops import staging
 
-    clear_staged()
+    staging.clear_staged()
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     key = ("r13_gate_persist_probe", SF)
     try:
-        before = {k for k in _CACHE if k[0] == "__gate_persist"}
         for _ in range(3):
-            maybe_broadcast(df, 10_000, persist_input=True, stats_key=key)
-        after = [
-            k for k in _CACHE if k[0] == "__gate_persist" and k not in before
-        ]
-        assert len(after) == 1, (
-            f"expected one memoized persisted frame for the site, got "
-            f"{len(after)}"
+            staging.maybe_broadcast(
+                df, 10_000, persist_input=True, stats_key=key
+            )
+        assert len(staging._TRACKED) == 1, (
+            f"expected one tracked persist for the site, got "
+            f"{len(staging._TRACKED)}"
         )
+    finally:
+        staging.clear_staged()
+
+
+def test_gate_memo_never_hands_back_another_plans_frame(spark):
+    """Two different frames under one ``stats_key``: the memo may reuse
+    the first frame's (rows, bytes), but each call must return the rows
+    of the frame it was given."""
+    from wsu_cpts_415_spark.ops.staging import clear_staged, maybe_broadcast
+
+    clear_staged()
+    key = ("r13_gate_two_plans_probe", SF)
+    first = spark.range(10).select(F.col("id").alias("k"))
+    second = spark.range(100, 110).select(F.col("id").alias("k"))
+    try:
+        maybe_broadcast(first, 10_000, persist_input=True, stats_key=key)
+        out = maybe_broadcast(
+            second, 10_000, persist_input=True, stats_key=key
+        )
+        assert sorted(r.k for r in out.collect()) == list(range(100, 110))
     finally:
         clear_staged()

@@ -318,3 +318,63 @@ def test_every_raw_broadcast_hint_is_adjudicated_bounded():
         "(round-10 verdict, unigram_logprob_score class):\n"
         + "\n".join(problems)
     )
+
+
+# ---------------------------------------------------------------------------
+# Lint #3: every package module is reachable from a real entry point --
+# the driver contract, the CLI, or the benchmark -- by a static walk of
+# import statements (lazy imports inside functions included).  A module
+# only tests import is dead code that the suite keeps alive.
+
+ROOT = PKG.parent
+ENTRY_POINTS = [
+    ROOT / "__spark_entry__.py",
+    PKG / "__main__.py",
+    *sorted((ROOT / "perfbench").glob("*.py")),
+]
+
+
+def _module_name(path: pathlib.Path) -> str:
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported(path: pathlib.Path) -> set[str]:
+    """Dotted names ``path`` imports, with every parent package."""
+    import ast
+
+    pkg = _module_name(path).split(".")
+    if path.name != "__init__.py":
+        pkg = pkg[:-1]
+    names: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                base = ".".join(pkg[: len(pkg) - node.level + 1] + [base]).strip(".")
+            names.add(base)
+            names.update(f"{base}.{a.name}" for a in node.names)
+    out: set[str] = set()
+    for name in names:
+        parts = name.split(".")
+        out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return out
+
+
+def test_every_package_module_is_reachable():
+    modules = {_module_name(p): p for p in PKG.rglob("*.py")}
+    seen = {_module_name(PKG / "__main__.py")}
+    todo = [m for p in ENTRY_POINTS for m in _imported(p) & modules.keys()]
+    while todo:
+        mod = todo.pop()
+        if mod not in seen:
+            seen.add(mod)
+            todo.extend(_imported(modules[mod]) & modules.keys())
+    unreached = sorted(modules.keys() - seen)
+    assert not unreached, (
+        "package modules no entry point imports (delete them, or wire "
+        "them into a query, pipeline, CLI command or the benchmark):\n"
+        + "\n".join(unreached)
+    )

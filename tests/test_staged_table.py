@@ -339,3 +339,20 @@ def test_gate_stats_memo_skips_the_aggregate_action(spark, docs_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert jobs2, "post-clear gate call should have re-run the stats job"
+
+
+def test_build_log_keys_each_dataset(spark, docs_dir, staging_root, tmp_path):
+    """One layer name staged over two datasets logs two build entries:
+    the log key carries the dataset, so their build costs never merge."""
+    from wsu_cpts_415_spark.ops.staging import staging_build_log
+
+    other = str(tmp_path / "corpus2")
+    load_table(spark, docs_dir, "documents").limit(20).coalesce(1).write.parquet(
+        f"{other}/documents.parquet"
+    )
+    for d in (docs_dir, other):
+        staged_table(spark, "probe_log", d, lambda d=d: _build(spark, d))
+    entries = [k for k in staging_build_log() if k.startswith("layer:probe_log@")]
+    assert sorted(entries) == sorted(
+        f"layer:probe_log@{d}" for d in (docs_dir, other)
+    )

@@ -293,173 +293,6 @@ def test_rollup_survives_midbatch_kill(spark, tmp_path, provider):
     assert got == want
 
 
-def test_tws_user_profile_compiles(spark):
-    """transformWithStateInPandas (Spark 4.x StatefulProcessor API):
-    analysis-only check -- the operator must compile against this Spark
-    (key/output schemas resolve, plan is streaming) even though the
-    container lacks the protobuf runtime the state-API client needs at
-    execution time (streaming/tws.py module docstring)."""
-    from wsu_cpts_415_spark.streaming.tws import user_profile_updates
-
-    df = user_profile_updates(read_events_stream(spark, SF_SMOKE))
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == [
-        "user_id",
-        "n_events",
-        "total_value",
-        "n_purchases",
-        "last_ts",
-    ]
-
-
-def test_tws_user_profile_equals_batch(spark):
-    """End-to-end transformWithStateInPandas run (requires protobuf in
-    the worker env; skipped where absent): the StatefulProcessor's final
-    per-user profile must equal the plain batch groupBy."""
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from wsu_cpts_415_spark.streaming.tws import user_profile_updates
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_available_now(
-            user_profile_updates(read_events_stream(spark, SF_SMOKE)),
-            "t_tws_profile",
-            output_mode="update",
-        )
-        final = (
-            out.groupBy("user_id")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        "n_events", "total_value", "n_purchases", "last_ts"
-                    ),
-                    "n_events",
-                ).alias("p")
-            )
-            .select(
-                "user_id",
-                "p.n_events",
-                F.round("p.total_value", 4).alias("total_value"),
-                "p.n_purchases",
-                "p.last_ts",
-            )
-        )
-        got = sorted(map(tuple, final.collect()))
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    batch = (
-        load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).alias("n_purchases"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    assert got == sorted(map(tuple, batch.collect()))
-
-
-def test_tws_processor_logic_against_fake_state(spark):
-    """Transport-free proof of the StatefulProcessor SEMANTICS: drive
-    UserProfileProcessor through the ValueState contract with an
-    in-memory fake handle (exists/get/update), feeding each user's rows
-    in multiple micro-batch slices and in per-batch pandas chunks, and
-    require the final emitted profile to equal the batch groupBy over
-    the same events.  This pins the processor's accumulation arithmetic
-    and replay posture (state carries across batches; the last emission
-    per user wins) independently of the protobuf state client that the
-    container cannot run (streaming/tws.py module docstring)."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from wsu_cpts_415_spark.streaming.tws import UserProfileProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, FakeValueState())
-
-    events = (
-        load_table(spark, SF_SMOKE, "events")
-        .select("user_id", "event_type", "value", "ts")
-        .toPandas()
-        .sort_values("ts", kind="mergesort")
-        .reset_index(drop=True)
-    )
-    # three micro-batches in event-time order, each batch further split
-    # into two pandas chunks per user (the iterator-of-DataFrames shape
-    # handleInputRows actually receives)
-    cuts = [0, len(events) // 3, 2 * len(events) // 3, len(events)]
-    final = {}
-    procs = {}
-    for b in range(3):
-        batch = events.iloc[cuts[b]:cuts[b + 1]]
-        for uid, grp in batch.groupby("user_id"):
-            if uid not in procs:
-                p = UserProfileProcessor()
-                p.init(FakeHandle())
-                procs[uid] = p
-            mid = len(grp) // 2
-            chunks = [c for c in (grp.iloc[:mid], grp.iloc[mid:]) if len(c)]
-            (out,) = list(
-                procs[uid].handleInputRows((uid,), iter(chunks), None)
-            )
-            final[uid] = out  # update mode: latest emission wins
-    got = sorted(
-        (
-            int(o["user_id"][0]),
-            int(o["n_events"][0]),
-            round(float(o["total_value"][0]), 4),
-            int(o["n_purchases"][0]),
-            o["last_ts"][0].to_pydatetime(),
-        )
-        for o in final.values()
-    )
-    batch_truth = (
-        load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).alias("n_purchases"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    assert got == sorted(map(tuple, batch_truth.collect()))
-
-
 def test_watermark_drops_late_rows_and_reports_metric(spark, tmp_path):
     """Watermark semantics end-to-end, including the TWO-WATERMARK model
     (SPARK-40925): the late-events filter uses the watermark as of the
@@ -525,50 +358,3 @@ def test_watermark_drops_late_rows_and_reports_metric(spark, tmp_path):
     days = sorted(r["w"]["start"].day for r in rows)
     assert dropped == 1, f"expected 1 watermark-dropped row, got {dropped}"
     assert days == [10, 10], f"late March-1 row leaked into results: {days}"
-
-
-def test_foreachbatch_jsonl_audit_sink(spark, tmp_path):
-    """Composition: Structured Streaming -> foreachBatch -> the custom
-    Python DataSource WRITER (jsonl_audit).  Each micro-batch publishes
-    its own directory with a control-total sidecar; the union of the
-    sidecars must reconcile with the batch-mode row count -- streaming
-    landing zones with per-batch audit trails, end to end through the
-    v2 write protocol."""
-    import json
-    import os
-
-    from wsu_cpts_415_spark.io.pysource import register_jsonl_audit_sink
-
-    register_jsonl_audit_sink(spark)
-    out_root = str(tmp_path / "land")
-
-    def _sink(batch_df, batch_id):
-        (
-            batch_df.write.format("jsonl_audit")
-            .option("path", f"{out_root}/batch_{batch_id:05d}")
-            .option("total_col", "value")
-            .mode("append")
-            .save()
-        )
-
-    q = (
-        read_events_stream(spark, SF_SMOKE)
-        .select("event_id", "value")
-        .writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    total_rows, total_value = 0, 0.0
-    for d in sorted(os.listdir(out_root)):
-        control = json.load(
-            open(os.path.join(out_root, d, "_control_totals.json"))
-        )
-        total_rows += control["n_rows"]
-        total_value += control["total_value"]
-    batch = load_table(spark, SF_SMOKE, "events")
-    assert total_rows == batch.count()
-    exact = batch.groupBy().sum("value").head()[0]
-    assert abs(total_value - exact) < 1e-6

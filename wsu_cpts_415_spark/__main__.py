@@ -9,12 +9,12 @@ correlation / graph_filter / load_data, minus the Tkinter GUI):
     python -m wsu_cpts_415_spark ingest <crawl_root> <store_dir>
                                         [--rejects DIR] [--jsonl DIR]
                                         [--totals DIR]
-    python -m wsu_cpts_415_spark bench  (alias of bench.py)
 
 Every reference analysis is a named query here (`run ref_link_analysis`,
 `run ref_trending_rankings`, `run ref_correlation_matrix`,
 `run ref_scc_rollup`); results print to stdout or write to parquet
-instead of MongoDB collections.
+instead of MongoDB collections.  Timing lives in the benchmark
+(``python3 perfbench/run.py``, workloads declared in BENCHMARK.json).
 """
 
 from __future__ import annotations
@@ -53,7 +53,7 @@ def main(argv: list[str] | None = None) -> int:
     pap.add_argument(
         "--queries",
         nargs="*",
-        help="query names (default: the bench headline set)",
+        help="query names (default: the full registry)",
     )
 
     shp = sub.add_parser(
@@ -65,7 +65,7 @@ def main(argv: list[str] | None = None) -> int:
     shp.add_argument(
         "--queries",
         nargs="*",
-        help="query names (default: the fixed round-3 bench subset)",
+        help="query names (default: the full registry)",
     )
 
     confp = sub.add_parser(
@@ -195,7 +195,6 @@ def main(argv: list[str] | None = None) -> int:
         if args.queries:
             names = args.queries
         else:
-            # full registry since round 5 (bench runs everything too)
             names = sorted(qs)
         audits = [audit(n, qs[n].fn(spark, args.sf_dir)) for n in names]
         md = render_markdown(audits, args.sf_dir)

@@ -85,24 +85,3 @@ def shuffle_profile(df: DataFrame, materialize: bool = True) -> dict:
 
     walk(df._jdf.queryExecution().executedPlan())
     return totals
-
-
-def advise_shuffle_partitions(
-    df: DataFrame, target_mb: int = 128, floor: int = 1, cap: int = 100_000
-) -> dict:
-    """Size ``spark.sql.shuffle.partitions`` from MEASURED shuffle volume:
-    profile the query, divide its total shuffle bytes by the target
-    partition size, and clamp.  The advisory version of what AQE's
-    coalescing does at runtime -- useful for pinning the INITIAL
-    partition count on a recurring job so the first run isn't wildly
-    over- or under-partitioned.
-
-    Returns the profile plus ``advised_partitions``."""
-    prof = shuffle_profile(df)
-    target_bytes = target_mb * 1024 * 1024
-    advised = max(
-        floor, min(cap, -(-prof["shuffle_bytes"] // target_bytes))
-    )  # ceil division
-    prof["advised_partitions"] = int(advised)
-    prof["target_mb"] = target_mb
-    return prof

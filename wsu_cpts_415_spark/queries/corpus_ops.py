@@ -578,7 +578,7 @@ def redact_transform_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: regexp_replace evaluates inside codegen at the scan; the only
     shuffle carries per-(type, shape) partial aggregates.  The same
-    expression applied with a writer (io/formats.py) IS the redaction
+    expression applied before a parquet write IS the redaction
     pass over a 100 TB corpus -- this query is its dry-run audit.
     """
     from wsu_cpts_415_spark.io.tables import load_table as _lt

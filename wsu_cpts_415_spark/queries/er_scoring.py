@@ -250,8 +250,8 @@ def er_match_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # candidates are exactly (W-1) * n regardless of how many docs share a
 # key prefix, because the window is over SORT POSITIONS, not key-equal
 # blocks (measured: x100 candidate count is 100x the x10 count to
-# within the W-1 boundary rows; wall 6.7 s warm at x100 in
-# scale_probe_er_x100_r8.json, vs the lev key's 26.5M-pair blowup).
+# within the W-1 boundary rows; wall 6.7 s warm at x100 in round 8,
+# vs the lev key's 26.5M-pair blowup).
 # Saturation of the leading key components only shifts WHICH docs are
 # adjacent -- a recall policy, tuned like any SNM key (multi-pass with
 # rotated keys in production); the key already ends with (n_chars,
@@ -893,8 +893,8 @@ def snm_window_pairs(
     via the rank-block equi-join (each left row replicated to its own
     and the next block, so no range-condition nested loop).  Shared by
     the multi-pass candidate union, the multi-pass recall audit, and
-    the window-size sweep in scale_probe.py (recall-vs-cost is a dial:
-    candidates are exactly (w-1)*n - boundary, linear in w)."""
+    a window-size sweep (recall-vs-cost is a dial: candidates are
+    exactly (w-1)*n - boundary, linear in w)."""
     ranked = _snm_ranked_staged(spark, sf_dir)
     left = ranked.select(
         F.col("doc_id").alias("ida"),
@@ -931,14 +931,13 @@ def _multipass_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs only (no payload columns shuffle).
 
     SNM's seat was re-priced OUT in round 11 (round-10 verdict): the
-    standing window sweep (``scale_probe.py er_snm_sweep``) measured its
-    marginal recall over lev+LSH at ZERO for every window w=5/10/20 at
-    both x10 and x100 while it contributed ~2M of 17.6M x100 candidates
-    (~11% of linear scoring cost) -- the deployed default is the
-    measured frontier.  ``sorted_neighborhood_pairs`` stays as the
-    taught standalone pass and the sweep keeps re-pricing the seat
-    whenever the corpus changes; on a corpus where the sweep measures
-    nonzero marginal, add ``snm_window_pairs`` back to this union."""
+    standing window sweep measured its marginal recall over lev+LSH at
+    ZERO for every window w=5/10/20 at both x10 and x100 while it
+    contributed ~2M of 17.6M x100 candidates (~11% of linear scoring
+    cost) -- the deployed default is the measured frontier.
+    ``sorted_neighborhood_pairs`` stays as the taught standalone pass;
+    on a corpus where a window sweep measures nonzero marginal, add
+    ``snm_window_pairs`` back to this union."""
     from wsu_cpts_415_spark.queries.similarity import lsh_band_candidates
 
     lev = lev_candidates(spark, sf_dir).select("doc_a", "doc_b")
@@ -1055,8 +1054,8 @@ def er_multipass_match_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Why it exists: ``er_multipass_recall`` MEASURED the single lev pass
     at 0.307 blocking recall against exact J >= 4/5 ground truth while
-    the multi-generator union reaches 0.9997 (x100,
-    scale_probe_er_recall_x100_r9.json) -- the generators miss
+    the multi-generator union reaches 0.9997 (x100, round 9) -- the
+    generators miss
     differently (lev: leading-token edits; LSH: signature chance only),
     so production record linkage scores the UNION (Christen 2012's
     multi-pass blocking).  This query turns that measurement into the

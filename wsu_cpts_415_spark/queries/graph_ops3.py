@@ -65,9 +65,9 @@ def _contraction_round(edges: DataFrame) -> DataFrame:
     its own distinct dedupes; duplicate factor is bounded by vertex
     degree), and the small-star union's two branches reuse one
     exchange.  Round-10 1M-chain measurement: 63 -> 34 s same-machine
-    at identical 21 rounds and identical components
-    (graph_topology_probe_r10.json; an explode-based single-window
-    variant measured 43 s -- the union + ReusedExchange form wins).
+    at identical 21 rounds and identical components (an
+    explode-based single-window variant measured 43 s -- the union +
+    ReusedExchange form wins).
 
     * large-star: around every center ``c``, attach each strictly
       larger neighbor ``x`` to ``m = least(min(N(c)), c)`` -- output
@@ -104,10 +104,9 @@ def star_contraction_components(
     ``graph_ops.min_label_components``, diameter-independent rounds.
 
     ``stats`` (optional out-param): records ``rounds`` -- the number of
-    contraction rounds to fixpoint -- for the pathological-topology
-    probe (graph_topology_probe.py), which verifies the O(log n) round
-    bound on adversarial shapes the fixtures' dense 2-3-diameter
-    near-dup clusters never exercise."""
+    contraction rounds to fixpoint -- so a caller can verify the
+    O(log n) round bound on adversarial shapes the fixtures' dense
+    2-3-diameter near-dup clusters never exercise."""
     edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))

@@ -70,7 +70,7 @@ Honest fixture note: this synthetic corpus has a deliberately narrow
 vocabulary (931 distinct shingles at sf0.1), so prefix df's stay large
 and token order alone prunes weakly -- which is exactly why round 9
 moved two more bounds INTO pair generation.  Measured funnel
-(scale_probe_er_x100_r9.json) at x100: 284,686 prefix-join rows ->
+(round 9) at x100: 284,686 prefix-join rows ->
 116,014 distinct candidate pairs -> 90,396 after the accumulated
 positional bound -> 25,743 after the histogram suffix filter = exactly
 the 25,743 verified pairs.  Round 8's generation (token-hash key only,

@@ -33,8 +33,8 @@ from wsu_cpts_415_spark.streaming.jobs import (
 #     i.e. strictly LESS chance of evicting a signup before its matching
 #     purchase arrives at long replay lengths.
 # Per-batch cost is a fixed state-store commit across every store
-# instance plus an offset/commit-log round (measured in
-# streaming_phase_probe_r13.json), so an N-file backlog at 1 file per
+# instance plus an offset/commit-log round (measured per phase in
+# round 13), so an N-file backlog at 1 file per
 # trigger pays N of them where ceil(N/64) suffice -- the x10 fixture's
 # streaming family was ~8x its sf0.1 cost almost entirely from batch
 # count.  At 100 TB the same knob is sized by micro-batch latency

@@ -1,6 +1,7 @@
 """TPC-H-shaped headline queries on the fixture star schema.
 
-These are the bench workload (bench.py) -- classic OLAP shapes whose
+With tpch2.py these are the benchmark's ``relational`` workload
+(``perfbench/run.py``, BENCHMARK.json) -- classic OLAP shapes whose
 physical plans exercise scan pruning, partial aggregation, broadcast vs
 shuffle join selection, and top-k.  Query letters follow TPC-H numbering
 loosely; predicates are adapted to the fixture's value domains

@@ -21,7 +21,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _default_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on, so a
+    bare ``get_spark()`` never runs more task threads than the host has."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+_DEFAULT_CPUS = _default_cpus()
 
 
 def get_spark(

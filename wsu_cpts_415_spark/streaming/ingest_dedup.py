@@ -38,8 +38,8 @@ signal attach -- a cross-doc xxhash64 collision inflates one
 intersection with probability ~|A||B|/2^64 < 1e-13 per pair, and the
 oracle-checked batch face (queries/dedup_policy.py:ingest_dedup_gate,
 whose DuckDB oracle intersects the STRING shingles) would surface any
-hit.  Measured cost curve: streaming_store_probe_r9.json -- steady
-per-batch wall flat from x10 to x100 standing corpora.
+hit.  Measured cost curve (round 9): steady per-batch wall flat from
+x10 to x100 standing corpora.
 """
 
 from __future__ import annotations
@@ -129,8 +129,8 @@ def init_standing_stores(
     ``corpus_fingerprint``) written after a successful build makes init
     a READ when it matches: one corpus scan to recompute the
     fingerprint, no store touch.  A changed corpus (mismatch) rebuilds
-    and re-marks.  Measured x100: 102 s build -> ~seconds on restart
-    (streaming_store_probe_r10.json reinit_sec).
+    and re-marks.  Measured x100 (round 10): 102 s build -> ~seconds
+    on restart.
 
     The build itself computes the shingle/hash projection ONCE and
     derives bands + compact shingle arrays from it (previously

@@ -183,7 +183,7 @@ def run_available_now(stream_df: DataFrame, name: str, output_mode: str = "compl
     match/arrive, never on watermark advance), so skipping the empty
     batch cannot change the sink contents; it removes one full
     state-store commit + offset/commit-log round per query (measured
-    -26% on the 5-shape phase probe, streaming_nodata_ab_r13.json).
+    -26% over 5 streaming shapes in round 13).
     A STANDING stream (the ingest/line gates use their own writeStream
     paths) keeps the default: there, eager state cleanup between lulls
     is the point."""
