@@ -15,3 +15,14 @@ def spark():
         extra_conf={"spark.sql.shuffle.partitions": "8"},
     )
     yield spark
+
+
+def jobs_during(spark, group: str, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(list(sc.statusTracker().getJobIdsForGroup(group)))

@@ -12,6 +12,8 @@ from datetime import date
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import jobs_during
+
 from wsu_cpts_415_spark.io.ingest import (
     control_totals,
     decode_crawl,
@@ -148,6 +150,21 @@ def test_ingest_end_to_end(spark, crawl_root, tmp_path):
     }
     assert totals["2007-03-01"]["parsed_lines"] == 3
     assert totals["2007-03-01"]["sum_views"] == 3050
+
+
+def test_ingest_job_count_guard(spark, crawl_root, tmp_path):
+    """parsed/written/rejected are Observations on the writes that run
+    anyway: no count jobs and no store re-read (13 jobs with them)."""
+    out = tmp_path / "guard"
+    n = jobs_during(
+        spark,
+        "ingest-job-guard",
+        lambda: ingest_crawl(
+            spark, crawl_root, str(out / "store"), str(out / "rejects"),
+            str(out / "jsonl"), str(out / "totals"),
+        ),
+    )
+    assert n <= 6, n
 
 
 def test_reference_parity_pipelines_run_on_ingested_store(spark, crawl_root, tmp_path):

@@ -6,10 +6,12 @@ and trending math is spot-checked on handcrafted rows."""
 from __future__ import annotations
 
 import math
+import warnings
 
+import pytest
 from pyspark.sql import Row
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_during
 from wsu_cpts_415_spark.pipelines.scc import (
     scc_components,
     strongly_connected_components,
@@ -73,48 +75,132 @@ def tarjan_scc(vertices: list[str], edges: list[tuple[str, str]]) -> dict[str, s
     return label
 
 
-def _run_scc(spark, vertices, edges):
+def _graph(spark, vertices, edges):
     vdf = spark.createDataFrame([Row(id=v) for v in vertices])
     edf = spark.createDataFrame([Row(src=s, dst=d) for s, d in edges])
-    got = {
-        r["id"]: r["component"]
-        for r in strongly_connected_components(vdf, edf).collect()
-    }
+    return vdf, edf
+
+
+def _run_scc(spark, vertices, edges):
+    # a graph inside the hop budget must not report an exhausted budget
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", "SCC budget", RuntimeWarning)
+        comps = strongly_connected_components(*_graph(spark, vertices, edges))
+    got = {r["id"]: r["component"] for r in comps.collect()}
     assert got == tarjan_scc(vertices, edges)
 
 
-def test_scc_arbitrary_graph(spark):
+def _ring(prefix: str, n: int) -> list[tuple[str, str]]:
+    return [(f"{prefix}{i}", f"{prefix}{(i + 1) % n}") for i in range(n)]
+
+
+SCC_GRAPHS = {
     # two cycles bridged one-way, a chain, a self-loop, an isolate, and a
     # dangling edge to a non-vertex
-    vertices = list("abcdefghij")
-    edges = [
-        ("a", "b"), ("b", "c"), ("c", "a"),          # SCC {a,b,c}
-        ("c", "d"), ("d", "e"), ("e", "d"),          # bridge -> SCC {d,e}
-        ("f", "g"), ("g", "h"),                      # chain: singletons
-        ("i", "i"),                                  # self-loop singleton
-        ("e", "zz"),                                 # dangling, ignored
-    ]
-    _run_scc(spark, vertices, edges)
-
-
-def test_scc_nested_peeling(spark):
+    "arbitrary": (
+        list("abcdefghij"),
+        [
+            ("a", "b"), ("b", "c"), ("c", "a"),          # SCC {a,b,c}
+            ("c", "d"), ("d", "e"), ("e", "d"),          # bridge -> SCC {d,e}
+            ("f", "g"), ("g", "h"),                      # chain: singletons
+            ("i", "i"),                                  # self-loop singleton
+            ("e", "zz"),                                 # dangling, ignored
+        ],
+    ),
     # chain of cycles forces multiple peel rounds: 1->2->3 block chain
-    vertices = [f"n{i}" for i in range(9)]
-    edges = (
+    "nested_peeling": (
+        [f"n{i}" for i in range(9)],
         [("n0", "n1"), ("n1", "n2"), ("n2", "n0")]
         + [("n3", "n4"), ("n4", "n5"), ("n5", "n3")]
         + [("n6", "n7"), ("n7", "n8"), ("n8", "n6")]
-        + [("n2", "n3"), ("n5", "n6")]  # one-way bridges
+        + [("n2", "n3"), ("n5", "n6")],  # one-way bridges
+    ),
+    # rings converge at step counts that are not multiples of 3
+    "ring4": ([f"a{i}" for i in range(4)], _ring("a", 4)),
+    "ring7": ([f"b{i}" for i in range(7)], _ring("b", 7)),
+    "duplicate_edges": (
+        list("pqrs"),
+        [("p", "q"), ("q", "r"), ("r", "p")] * 3 + [("r", "s")] * 2 + [("s", "s")],
+    ),
+    # a 4-chain into a 5-ring and a 3-tail out of it: several trim rounds
+    "chain_into_ring": (
+        [f"c{i}" for i in range(4)] + [f"r{i}" for i in range(5)]
+        + [f"t{i}" for i in range(3)],
+        [("c0", "c1"), ("c1", "c2"), ("c2", "c3"), ("c3", "r0")]
+        + _ring("r", 5)
+        + [("r2", "t0"), ("t0", "t1"), ("t1", "t2")],
+    ),
+    # edges through ids that are not vertices never close a cycle
+    "dangling_ids": (
+        list("uvw"),
+        [("u", "v"), ("v", "ghost"), ("ghost", "u"), ("w", "ghost2"),
+         ("ghost3", "w"), ("v", "w"), ("w", "v")],
+    ),
+}
+
+
+@pytest.mark.parametrize("graph", sorted(SCC_GRAPHS))
+def test_scc_matches_tarjan(spark, graph):
+    _run_scc(spark, *SCC_GRAPHS[graph])
+
+
+def test_scc_ring_beyond_hop_budget_warns(spark):
+    """A 40-ring outruns the 15-hop budget: labels come back split (each
+    vertex its own id), and the exhausted budget is reported, not silent."""
+    ring = [f"r{i:02d}" for i in range(40)]
+    edges = [(ring[i], ring[(i + 1) % 40]) for i in range(40)]
+    with pytest.warns(RuntimeWarning, match=r"after 2 peel rounds.*38 vertices"):
+        comps = strongly_connected_components(
+            *_graph(spark, ring, edges), max_rounds=2
+        )
+    assert {r["id"]: r["component"] for r in comps.collect()} == {v: v for v in ring}
+
+
+def test_scc_job_count_guard(spark):
+    """Trim counts, remaining counts and convergence ride on the
+    checkpoint jobs as Observations: no limit(1).count() probes and no
+    join+count convergence checks (206-207 jobs with them)."""
+    vdf, edf = _graph(spark, *SCC_GRAPHS["nested_peeling"])
+    n = jobs_during(
+        spark, "scc-job-guard", lambda: strongly_connected_components(vdf, edf)
     )
-    _run_scc(spark, vertices, edges)
+    assert n <= 113, n
 
 
 def test_scc_videos_graph_matches_tarjan(spark):
     videos = videos_nested(spark, SF_SMOKE)
     vertices = [r["id"] for r in videos.select("id").collect()]
     edges = [(r["src"], r["dst"]) for r in video_edges(videos).collect()]
-    got = {r["id"]: r["component"] for r in scc_components(videos).collect()}
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", "SCC budget", RuntimeWarning)
+        comps = scc_components(videos)
+    got = {r["id"]: r["component"] for r in comps.collect()}
     assert got == tarjan_scc(vertices, edges)
+
+
+def test_correlation_matrix_single_month_crawl(spark, tmp_path):
+    """One crawl directory makes upload_day/month/year constant: their
+    pairs are NULL ("Near-Zero") instead of an ANSI DIVIDE_BY_ZERO, and
+    every other pair is still a real correlation."""
+    from wsu_cpts_415_spark.io.ingest import decode_crawl, scan_crawl_lines, to_nested
+    from wsu_cpts_415_spark.pipelines.correlation import NUMERIC_COLS, correlation_matrix
+
+    day = tmp_path / "080409"
+    day.mkdir()
+    (day / "crawl.txt").write_text(
+        "vidA\tu1\t700\tMusic\t300\t1000\t4.5\t10\t5\n"
+        "vidB\tu2\t711\tComedy\t25\t2000\t3.0\t3\t1\n"
+        "vidC\tu3\t100\tMusic\t4000\t50\t5.0\t1\t9\n"
+    )
+    typed, _ = decode_crawl(scan_crawl_lines(spark, str(tmp_path)))
+    rows = correlation_matrix(to_nested(typed)).collect()
+    constant = {"upload_day", "upload_month", "upload_year"}
+    assert len(rows) == len(NUMERIC_COLS) * (len(NUMERIC_COLS) - 1) // 2
+    for r in rows:
+        if {r["col_a"], r["col_b"]} & constant:
+            assert r["corr"] is None and r["classification"] == "Near-Zero", r
+        else:
+            assert -1.0 <= r["corr"] <= 1.0, r
 
 
 def test_trending_score_math(spark):

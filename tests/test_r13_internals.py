@@ -4,7 +4,9 @@
   and RESTORES the session value (a standing stream started after a
   registry replay must keep its configured behavior);
 * the streaming replay still matches its batch twin with the no-data
-  batch skipped (semantic pin for the -20% A/B win);
+  batch skipped (semantic pin for the -20% A/B win), and the one shape
+  that needs the no-data batch -- an append-mode aggregation over a
+  watermark -- is refused instead of silently emitting nothing;
 * the staged_model folds (zipf routing count, semdedup centroids,
   cosine query vector) run ZERO Spark jobs on a steady-state second
   call -- the multi-action sweep's contract;
@@ -15,7 +17,10 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+from tests.conftest import jobs_during
 
 SF = "/root/testdata/sf0.001"
 
@@ -64,14 +69,30 @@ def test_streaming_replay_matches_batch_without_nodata_batch(spark):
     assert got == want
 
 
-def _jobs_during(spark, group: str, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return len(list(sc.statusTracker().getJobIdsForGroup(group)))
+def test_run_available_now_refuses_append_watermark_aggregation(spark):
+    from wsu_cpts_415_spark.streaming.jobs import (
+        read_events_stream,
+        run_available_now,
+        tumbling_counts,
+    )
+
+    spark.conf.set(NODATA_KEY, "true")
+    with pytest.raises(ValueError, match="no-data micro-batch"):
+        run_available_now(
+            tumbling_counts(read_events_stream(spark, SF)),
+            "t_r13_append_wm_agg",
+            output_mode="append",
+        )
+    # refused before the replay touches the session
+    assert spark.conf.get(NODATA_KEY) == "true"
+
+
+def test_append_mode_without_aggregation_still_replays(spark):
+    from wsu_cpts_415_spark.queries.streaming_q import (
+        streaming_stream_stream_join,
+    )
+
+    assert streaming_stream_stream_join(spark, SF).count() > 0
 
 
 def test_staged_model_folds_run_zero_jobs_when_warm(spark):
@@ -86,7 +107,7 @@ def test_staged_model_folds_run_zero_jobs_when_warm(spark):
         (semdedup_prune, "semdedup"),
         (cosine_topk_pandas, "cosq"),
     ]:
-        n = _jobs_during(
+        n = jobs_during(
             spark, f"r13-fold-audit-{name}", lambda: fn(spark, SF)
         )
         assert n == 0, f"{name}: {n} build-phase jobs on a warm call"

@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 # positional contract, data_types.py:9-21: (name, cast or None for string)
@@ -194,17 +194,29 @@ def ingest_crawl(
     """End-to-end load (the whole of load.py + mongo_loader.py as one job):
     scan -> decode/reject -> nest -> dedup -> parquet partitioned by
     upload_date, with optional reject / JSON-lines / control-total side
-    sinks.  Returns the reference's stats line (mongo_loader.py:232-238)."""
+    sinks.  Returns the reference's stats line (mongo_loader.py:232-238).
+
+    The stats cost no job of their own: each count is an ``Observation``
+    on a write that runs anyway -- ``parsed`` on the dedup write's input,
+    ``written`` on its output, ``rejected`` on the reject write (a plain
+    count only when there is no ``reject_dir``).  ``validate_store``
+    remains the store's end-to-end reconciliation."""
     raw = scan_crawl_lines(spark, root).cache()  # typed + rejects both
-    # re-read the tree otherwise: the reject write and reject count were
-    # each a full re-scan + re-split of every input line
+    # read it; otherwise each would re-scan + re-split every input line
     typed, rejects = decode_crawl(raw)
-    typed = typed.cache()  # three actions below: count, totals, write
+    typed = typed.cache()  # up to three writes below: jsonl, totals, store
     nested = to_nested(typed)
-    deduped = dedup_first_writer(nested)
+
+    def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+        obs = Observation()
+        return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
     if reject_dir is not None:
-        rejects.write.mode("overwrite").json(reject_dir)
+        observed_rejects, rejected_obs = counted(rejects)
+        observed_rejects.write.mode("overwrite").json(reject_dir)
+        rejected = rejected_obs.get["n"]
+    else:
+        rejected = rejects.count()
     if jsonl_dir is not None:
         (
             nested.select(
@@ -218,11 +230,11 @@ def ingest_crawl(
     if totals_dir is not None:
         control_totals(typed).write.mode("overwrite").json(totals_dir)
 
+    parsed_in, parsed_obs = counted(nested)
+    deduped, written_obs = counted(dedup_first_writer(parsed_in))
     deduped.write.mode("overwrite").partitionBy("upload_date").parquet(out_dir)
 
-    parsed = typed.count()
-    rejected = rejects.count()
-    written = spark.read.parquet(out_dir).count()
+    parsed, written = parsed_obs.get["n"], written_obs.get["n"]
     typed.unpersist()
     raw.unpersist()
     return IngestStats(

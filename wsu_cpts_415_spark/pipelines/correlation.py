@@ -4,7 +4,7 @@ big_data/scripts/analysis/correlation_analysis.py:45-110).
 The reference assembles a VectorUDT column with VectorAssembler and calls
 ``ml.stat.Correlation.corr`` (one extra ML-format conversion pass plus a
 driver-side 8x8 matrix).  Spark-first, the same matrix is 28 pairwise
-``F.corr`` aggregate expressions in ONE hash-aggregate pass -- a single
+Pearson aggregate expressions in ONE hash-aggregate pass -- a single
 scan, map-side partials, one row out; no vector conversion, no ML jar.
 Output is long-form ``(col_a, col_b, corr)`` for the upper triangle
 (i < j; the diagonal is identically 1), which is stable to hash-compare
@@ -57,14 +57,25 @@ def correlation_matrix(videos: DataFrame, decimals: int = 5) -> DataFrame:
     """Upper-triangle pairwise Pearson correlations, one aggregate pass,
     with the sign-bucket classification (M4).
 
-    28 ``corr`` aggregates share the scan and the (single-row) shuffle;
-    the stack() unpivot to long form is driver-negligible.  At 100 TB this
-    is the minimal plan: you cannot compute a correlation matrix in less
-    than one pass over the data."""
+    Each pair is ``covar_samp(a, b) / (stddev_samp(a) * stddev_samp(b))``
+    under ``try_divide``; the 28 pairs share the scan and the
+    (single-row) shuffle, and the stack() unpivot to long form costs
+    next to nothing.  At 100 TB this is the minimal plan: you cannot
+    compute a correlation matrix in less than one pass over the data.
+
+    A constant column (a single-month crawl makes ``upload_month`` and
+    ``upload_year`` constant) has zero variance, so its pairs are NULL
+    (classified "Near-Zero") -- where ``F.corr`` raises DIVIDE_BY_ZERO
+    under ANSI mode, the Spark 4 default."""
     num = numeric_projection(videos)
     pairs = list(combinations(NUMERIC_COLS, 2))
     agg_row = num.agg(
-        *[F.corr(a, b).alias(f"c_{a}__{b}") for a, b in pairs]
+        *[
+            F.try_divide(
+                F.covar_samp(a, b), F.stddev_samp(a) * F.stddev_samp(b)
+            ).alias(f"c_{a}__{b}")
+            for a, b in pairs
+        ]
     )
     stack_args = ", ".join(
         f"'{a}', '{b}', round(c_{a}__{b}, {decimals})" for a, b in pairs

@@ -164,6 +164,20 @@ def running_user_totals(events: DataFrame) -> DataFrame:
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
+def _aggregates_over_watermark(plan, under_aggregate: bool = False) -> bool:
+    """Whether the (JVM) logical ``plan`` has an EventTimeWatermark below
+    an Aggregate."""
+    name = plan.nodeName()
+    if under_aggregate and name == "EventTimeWatermark":
+        return True
+    under_aggregate = under_aggregate or name == "Aggregate"
+    children = plan.children()
+    return any(
+        _aggregates_over_watermark(children.apply(i), under_aggregate)
+        for i in range(children.size())
+    )
+
+
 def run_available_now(stream_df: DataFrame, name: str, output_mode: str = "complete") -> DataFrame:
     """Materialize a streaming DataFrame with trigger(availableNow): process
     the full backlog, then stop.  Returns the in-memory sink contents.
@@ -184,9 +198,22 @@ def run_available_now(stream_df: DataFrame, name: str, output_mode: str = "compl
     batch cannot change the sink contents; it removes one full
     state-store commit + offset/commit-log round per query (measured
     -26% over 5 streaming shapes in round 13).
+    The one shape that does emit on watermark advance -- an append-mode
+    aggregation over an event-time watermark, whose final windows close
+    only on that empty batch -- would silently lose them here, so it is
+    refused with ``ValueError`` (read off the analyzed plan).
     A STANDING stream (the ingest/line gates use their own writeStream
     paths) keeps the default: there, eager state cleanup between lulls
     is the point."""
+    if output_mode == "append" and _aggregates_over_watermark(
+        stream_df._jdf.queryExecution().analyzed()
+    ):
+        raise ValueError(
+            f"{name}: an append-mode aggregation over an event-time "
+            "watermark emits its final windows only on a no-data "
+            "micro-batch, which run_available_now skips; use complete "
+            "or update mode"
+        )
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
