@@ -12,7 +12,9 @@ partial state really happened (the earlier store holds the batch
 partition, the later one doesn't), then replays through the real stream
 from the same checkpoint and asserts the final state is exactly the
 clean-run state -- dynamic partition overwrite + exclude_batch +
-derive-from-landed must converge from ANY interleaving."""
+deriving every store from one materialization of the admitted rows
+(whose lineage cannot reach the standing stores) must converge from ANY
+interleaving."""
 
 from __future__ import annotations
 

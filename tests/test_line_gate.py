@@ -149,3 +149,23 @@ def test_zero_admitted_replay_clears_stale_partitions(spark, stores):
     ]
     counts = spark.read.parquet(stores["store"] + "/line_counts")
     assert counts.agg(F.max("n_docs")).collect()[0][0] == 1  # corpus only
+
+
+def test_empty_batch_writes_nothing_and_drops_stale_partitions(spark, stores):
+    """A degenerate (empty) micro-batch admits nothing and writes no
+    partition; a stale ``_batch=<id>`` partition an earlier attempt of
+    the same batch left is dropped."""
+    empty = spark.createDataFrame([], SCHEMA)
+    assert apply_line_gate_batch(empty, 0, stores["store"], stores["accepted"]) == 0
+    assert not os.path.exists(stores["accepted"])
+    batch = spark.createDataFrame([(41, _doc("x", "y"))], SCHEMA)
+    assert apply_line_gate_batch(batch, 1, stores["store"], stores["accepted"]) == 1
+    assert apply_line_gate_batch(empty, 1, stores["store"], stores["accepted"]) == 0
+    assert not [
+        f for f in os.listdir(stores["accepted"]) if f.startswith("_batch=")
+    ]
+    assert [
+        f
+        for f in os.listdir(stores["store"] + "/line_counts")
+        if f.startswith("_batch=")
+    ] == ["_batch=-1"]

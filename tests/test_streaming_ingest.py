@@ -14,12 +14,19 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import jobs_during
 from wsu_cpts_415_spark.streaming.ingest_dedup import (
+    apply_ingest_batch,
     init_standing_stores,
     stream_ingest_with_dedup,
 )
 
 SCHEMA = "doc_id long, text string"
+
+# Spark jobs one BATCH1 micro-batch may run: measured 15 on 4 cores.
+# The probe-and-re-read landing ran 36-37 in the caller's job group and
+# 3 more (the concurrent store writes) outside it.
+JOB_BOUND = 15
 
 
 def _write(spark, rows, path):
@@ -292,3 +299,62 @@ def test_reinit_survives_corrupt_marker(spark, stores):
         .collect()
     )
     assert ids == [1]
+
+
+def test_batch_job_count_guard(spark, stores):
+    """One gated micro-batch runs a bounded number of Spark jobs, every
+    one of them inside the caller's job group: the gate materializes
+    once (no probe job, no landed re-read, no footer inference on the
+    store reads) and the concurrent store writes inherit the group."""
+    batch = spark.createDataFrame(BATCH1, SCHEMA)
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    n = jobs_during(
+        spark,
+        "ingest-batch-census",
+        lambda: apply_ingest_batch(batch, 0, stores["store"], stores["accepted"]),
+    )
+    escaped = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert not escaped, f"jobs outside the caller's job group: {sorted(escaped)}"
+    assert _accepted_ids(spark, stores["accepted"]) == [11]
+    assert n <= JOB_BOUND, f"{n} jobs for one micro-batch"
+
+
+def test_stream_scans_each_batch_once(spark, stores):
+    """The gate, its materialization and every store write read the
+    micro-batch from ONE scan: the stream's numInputRows per batch is
+    exactly the rows offered in it (a second scan would double it)."""
+    _write(spark, BATCH1, stores["src"])
+    _write(spark, BATCH2, stores["src"])
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stores["src"])
+    )
+    q = stream_ingest_with_dedup(
+        stream, stores["store"], stores["accepted"], stores["ckpt"]
+    )
+    assert [p.numInputRows for p in q.recentProgress] == [len(BATCH1), len(BATCH2)]
+    assert _accepted_ids(spark, stores["accepted"]) == [11, 21]
+
+
+def test_empty_batch_writes_nothing_and_drops_stale_partitions(spark, stores):
+    """A degenerate (empty) micro-batch admits nothing and writes no
+    partition; a stale ``_batch=<id>`` partition an earlier attempt of
+    the same batch left in any store is dropped."""
+    import os
+
+    empty = spark.createDataFrame([], SCHEMA)
+    assert apply_ingest_batch(empty, 0, stores["store"], stores["accepted"]) == 0
+    assert not os.path.exists(stores["accepted"])
+    # an earlier attempt of batch 1 landed doc 11 everywhere
+    batch = spark.createDataFrame(BATCH1, SCHEMA)
+    assert apply_ingest_batch(batch, 1, stores["store"], stores["accepted"]) == 1
+    assert apply_ingest_batch(empty, 1, stores["store"], stores["accepted"]) == 0
+    for base in (
+        stores["accepted"],
+        *(f"{stores['store']}/{name}" for name in ("digests", "bands", "shingles")),
+    ):
+        assert [f for f in os.listdir(base) if f.startswith("_batch=")] == (
+            [] if base == stores["accepted"] else ["_batch=-1"]
+        ), base

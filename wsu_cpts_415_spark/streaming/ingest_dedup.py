@@ -6,7 +6,7 @@ Each micro-batch of arriving documents is gated BEFORE landing:
 
   1. exact gate -- batch docs whose text digest already exists in the
      standing digest store are dropped (within-batch exact dups keep the
-     min doc_id);
+     min doc_id: one ``min(struct(doc_id, ...))`` aggregate per digest);
   2. near-dup gate -- the batch's LSH band table joins the standing band
      store (batch side broadcast: a per-batch sliver), collisions are
      verified by exact shingle Jaccard, and docs at/above the threshold
@@ -16,11 +16,25 @@ Each micro-batch of arriving documents is gated BEFORE landing:
      shingles are appended to the standing stores, so batch N+1 dedups
      against everything batch N admitted.
 
+Landing (``_land``, shared with streaming/line_gate.py): the admitted
+rows and their store projections are materialized ONCE, by an eager
+local checkpoint whose job also counts them (an ``Observation``; no
+probe job).  The accepted write goes first, then the three store
+appends run concurrently, all from that materialization.  Its lineage
+cannot reach the standing stores, so no write re-runs the gate against
+stores that earlier writes of the same batch have changed.  Its blocks
+are batch-sized, and Spark's ContextCleaner removes them once the
+driver JVM garbage-collects the frame, which it may as soon as the
+batch body returns.  The gate and the landing scan the micro-batch
+once, and the standing stores are read with their written schemas (no
+footer-inference job).
+
 Exactly-once: every store write is partitioned by batch id via dynamic
 partition overwrite (the idempotent-by-batch-id pattern proven in
 streaming/jobs.py) -- a batch replayed after a mid-commit crash rewrites
 its own partitions, so neither the corpus stores nor the accepted store
-can double-apply.
+can double-apply.  A batch that admits nothing writes nothing and drops
+any partition a prior attempt of it left.
 
 Scale posture: per-batch cost is O(standing-store scan) + O(collisions),
 independent of the standing corpus's PAIR count; the standing stores are
@@ -44,26 +58,40 @@ x10 to x100 standing corpora.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
-from wsu_cpts_415_spark.queries.similarity import bands_of, hashed_of
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.util import inheritable_thread_target
+
+from wsu_cpts_415_spark.queries.similarity import (
+    bands_from_hashed,
+    bands_of,
+    hashed_of,
+)
 
 JACCARD_THRESHOLD = 0.5  # the 4-band/2-row s-curve midpoint
 
+# the compact standing-shingle form: one 64-bit hash per shingle string
+_H64 = "transform(shingles, s -> xxhash64(s))"
+
+
+def _digest() -> Column:
+    return F.md5(F.encode("text", "UTF-8")).alias("digest")
+
 
 def _digests_of(docs: DataFrame) -> DataFrame:
-    return docs.select("doc_id", F.md5(F.encode("text", "UTF-8")).alias("digest"))
+    return docs.select("doc_id", _digest())
 
 
 def _h64_of(docs: DataFrame) -> DataFrame:
     """(doc_id, h64): the compact 64-bit shingle-hash array per doc --
     the standing shingle store's row format (8 bytes per shingle; the
     raw n-gram strings never leave the batch that produced them)."""
-    return hashed_of(docs).select(
-        "doc_id",
-        F.expr("transform(shingles, s -> xxhash64(s))").alias("h64"),
-    )
+    return hashed_of(docs).select("doc_id", F.expr(_H64).alias("h64"))
 
 
 def corpus_fingerprint(corpus_docs: DataFrame) -> list[int]:
@@ -135,8 +163,6 @@ def init_standing_stores(
     The build itself computes the shingle/hash projection ONCE and
     derives bands + compact shingle arrays from it (previously
     ``bands_of`` and ``_h64_of`` each re-ran the shingle math)."""
-    from wsu_cpts_415_spark.queries.similarity import bands_from_hashed
-
     fp = corpus_fingerprint(corpus_docs)
     if _read_marker(spark, store_dir) == fp and _stores_readable(
         spark, store_dir
@@ -156,12 +182,11 @@ def init_standing_stores(
         ).write.mode("overwrite").partitionBy("_batch").parquet(
             f"{store_dir}/bands"
         )
-        hashed.select(
-            "doc_id",
-            F.expr("transform(shingles, s -> xxhash64(s))").alias("h64"),
-        ).withColumn("_batch", F.lit(-1)).write.mode(
-            "overwrite"
-        ).partitionBy("_batch").parquet(f"{store_dir}/shingles")
+        hashed.select("doc_id", F.expr(_H64).alias("h64")).withColumn(
+            "_batch", F.lit(-1)
+        ).write.mode("overwrite").partitionBy("_batch").parquet(
+            f"{store_dir}/shingles"
+        )
     finally:
         hashed.unpersist()
     # marker LAST: a crash mid-build leaves no marker, so the next init
@@ -176,11 +201,9 @@ def gate_batch(
     store_dir: str,
     threshold: float = JACCARD_THRESHOLD,
     exclude_batch: int | None = None,
-    _persists: list | None = None,
 ) -> DataFrame:
-    """Pure gating logic (no writes): return the surviving rows of
-    ``batch_df`` after the exact and near-dup gates against the standing
-    stores.
+    """Pure gating logic (no writes): ``gate_against`` over the standing
+    stores under ``store_dir``.
 
     ``exclude_batch`` makes the gate REPLAY-DETERMINISTIC: a batch
     replayed after a crash that landed some of its own store partitions
@@ -189,18 +212,22 @@ def gate_batch(
     forever), so the reads drop the ``_batch=<exclude_batch>``
     partitions before gating.
 
-    A missing store (first run with no ``--init-corpus``: the standing
-    corpus starts empty and batch 0 creates the stores) gates against an
-    empty standing frame of the right schema instead of crashing the
-    stream with PATH_NOT_FOUND from inside the first micro-batch."""
+    Each store is read with the schema it was written with (the empty
+    frame's schema plus ``_batch int``), so a read infers nothing from
+    parquet footers and costs no job.  A missing store (first run with
+    no ``--init-corpus``: the standing corpus starts empty and batch 0
+    creates the stores) gates against an empty standing frame of that
+    schema instead of crashing the stream with PATH_NOT_FOUND from
+    inside the first micro-batch."""
     from pyspark.errors import AnalysisException
 
     spark = batch_df.sparkSession
     nil = batch_df.limit(0)
 
     def read_store(name: str, empty: DataFrame) -> DataFrame:
+        schema = StructType([*empty.schema, StructField("_batch", IntegerType())])
         try:
-            df = spark.read.parquet(f"{store_dir}/{name}")
+            df = spark.read.schema(schema).parquet(f"{store_dir}/{name}")
         except AnalysisException:  # store not created yet -> empty corpus
             return empty
         if exclude_batch is not None:
@@ -214,9 +241,7 @@ def gate_batch(
     std_sh = read_store("shingles", _h64_of(nil)).select(
         F.col("doc_id").alias("old_doc"), F.col("h64").alias("old_h64")
     )
-    return gate_against(
-        batch_df, std_digests, std_bands, std_sh, threshold, _persists=_persists
-    )
+    return gate_against(batch_df, std_digests, std_bands, std_sh, threshold)
 
 
 def gate_against(
@@ -225,7 +250,6 @@ def gate_against(
     std_bands: DataFrame,
     std_sh: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
-    _persists: list | None = None,
 ) -> DataFrame:
     """Store-free core of the gate (standing state passed as DataFrames):
     exact digest gate (within-batch keeps the min doc_id), LSH + exact
@@ -237,76 +261,61 @@ def gate_against(
     Registered as the oracle-checked query ``ingest_dedup_gate``
     (queries/dedup_policy.py), whose DuckDB oracle intersects the raw
     STRING shingles -- so the compact representation is pinned against
-    exact string Jaccard."""
-    docs = batch_df
-    digests = _digests_of(docs)
-    # within-batch exact dedup: keep the min doc_id per digest
-    keep_exact = digests.groupBy("digest").agg(F.min("doc_id").alias("doc_id"))
-    fresh = keep_exact.join(std_digests.select("digest"), "digest", "left_anti")
-    survivors = docs.join(fresh.select("doc_id"), "doc_id")
+    exact string Jaccard.
+
+    Returns the admitted rows: every column of ``batch_df`` plus the
+    standing-store projections the landing step writes -- ``digest``,
+    the base hashes ``hs`` (bands) and the compact ``h64`` array.  The
+    plan reads ``batch_df`` once: within-batch exact dedup is one
+    aggregate, ``min(struct(doc_id, ...))`` per digest, and every later
+    step derives from its output."""
+    rest = [c for c in batch_df.columns if c != "doc_id"]
+    survivors = (
+        batch_df.select(_digest(), F.struct("doc_id", *rest).alias("row"))
+        .groupBy("digest")
+        .agg(F.min("row").alias("row"))
+        .join(std_digests, "digest", "left_anti")
+        .select("row.*", "digest")
+    )
 
     # near-dup gate: batch bands vs standing bands + within-batch pairs.
-    # The batch hash projection feeds four consumers (bands + both
-    # verification sides); persist it once, registered for release with
-    # the session cache manager.
-    from pyspark import StorageLevel
-
-    from wsu_cpts_415_spark.ops.staging import track_persist
-    from wsu_cpts_415_spark.queries.similarity import bands_from_hashed
-
-    hashed = hashed_of(survivors)
-    if hashed.storageLevel == StorageLevel.NONE:
-        hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-        if _persists is not None:
-            # per-batch caller (streaming sink) releases in its finally;
-            # tracking session-wide would grow one entry per micro-batch
-            _persists.append(hashed)
-        else:
-            track_persist(hashed)
+    # Candidate pairs are NOT deduplicated before verification: a pair
+    # colliding in several of the N_BANDS bands is verified once per
+    # band, which costs less on batch-sized inputs than the shuffle a
+    # dropDuplicates adds.  Every rejection feeds one left-anti join, so
+    # the rejected sets need no distinct either.
+    hashed = hashed_of(survivors).select("doc_id", "hs", F.expr(_H64).alias("h64"))
     b_bands = bands_from_hashed(hashed)
-    b_sh = hashed.select(
-        "doc_id",
-        F.expr("transform(shingles, s -> xxhash64(s))").alias("h64"),
-    )
-    cand_corpus = (
-        std_bands.join(
-            F.broadcast(b_bands.withColumnRenamed("doc_id", "new_doc")),
-            ["b", "h1", "h2"],
-        )
-        .select("new_doc", "old_doc")
-        .dropDuplicates(["new_doc", "old_doc"])
-    )
+    b_sh = hashed.select("doc_id", "h64")
+    cand_corpus = std_bands.join(
+        F.broadcast(b_bands.withColumnRenamed("doc_id", "new_doc")),
+        ["b", "h1", "h2"],
+    ).select("new_doc", "old_doc")
     inter_c = F.size(F.array_intersect("h64", "old_h64"))
     rejected_vs_corpus = (
         cand_corpus.join(
             F.broadcast(b_sh.withColumnRenamed("doc_id", "new_doc")), "new_doc"
         )
         .join(std_sh, "old_doc")
-        .withColumn(
-            "jaccard",
+        .filter(
             inter_c.cast("double")
-            / (F.size("h64") + F.size("old_h64") - inter_c),
+            / (F.size("h64") + F.size("old_h64") - inter_c)
+            >= threshold
         )
-        .filter(F.col("jaccard") >= threshold)
         .select("new_doc")
-        .distinct()
     )
     # within-batch near-dups: LSH self-join on the (small) batch band
     # table; the LARGER doc_id of each verified pair is dropped
     a, c = b_bands.alias("a"), b_bands.alias("c")
-    cand_self = (
-        a.join(
-            c,
-            (F.col("a.b") == F.col("c.b"))
-            & (F.col("a.h1") == F.col("c.h1"))
-            & (F.col("a.h2") == F.col("c.h2"))
-            & (F.col("a.doc_id") < F.col("c.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("keep_doc"),
-            F.col("c.doc_id").alias("drop_doc"),
-        )
-        .dropDuplicates(["keep_doc", "drop_doc"])
+    cand_self = a.join(
+        c,
+        (F.col("a.b") == F.col("c.b"))
+        & (F.col("a.h1") == F.col("c.h1"))
+        & (F.col("a.h2") == F.col("c.h2"))
+        & (F.col("a.doc_id") < F.col("c.doc_id")),
+    ).select(
+        F.col("a.doc_id").alias("keep_doc"),
+        F.col("c.doc_id").alias("drop_doc"),
     )
     sa = b_sh.select(F.col("doc_id").alias("keep_doc"), F.col("h64").alias("ka"))
     sb = b_sh.select(F.col("doc_id").alias("drop_doc"), F.col("h64").alias("kb"))
@@ -314,18 +323,17 @@ def gate_against(
     rejected_in_batch = (
         cand_self.join(F.broadcast(sa), "keep_doc")
         .join(F.broadcast(sb), "drop_doc")
-        .withColumn(
-            "jaccard",
-            inter_s.cast("double") / (F.size("ka") + F.size("kb") - inter_s),
+        .filter(
+            inter_s.cast("double") / (F.size("ka") + F.size("kb") - inter_s)
+            >= threshold
         )
-        .filter(F.col("jaccard") >= threshold)
         .select(F.col("drop_doc").alias("new_doc"))
-        .distinct()
     )
-    rejected = rejected_vs_corpus.unionByName(rejected_in_batch).distinct()
-    return survivors.join(
+    rejected = rejected_vs_corpus.unionByName(rejected_in_batch)
+    admitted = hashed.join(
         rejected.withColumnRenamed("new_doc", "doc_id"), "doc_id", "left_anti"
     )
+    return survivors.join(admitted, "doc_id")
 
 
 def _drop_batch_partition(spark: SparkSession, base_dir: str, batch_id: int) -> None:
@@ -341,111 +349,107 @@ def _drop_batch_partition(spark: SparkSession, base_dir: str, batch_id: int) -> 
         fs.delete(path, True)
 
 
+def _write_batch(df: DataFrame, batch_id: int, base_dir: str) -> None:
+    """Write ``df`` as the ``_batch=<batch_id>`` partition of
+    ``base_dir`` by dynamic partition overwrite: a replay rewrites the
+    partition instead of appending to it."""
+    (
+        df.withColumn("_batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch")
+        .parquet(base_dir)
+    )
+
+
+def _land(
+    gated: DataFrame,
+    batch_id: int,
+    accepted_dir: str,
+    accepted_cols: list[str],
+    derived: dict[str, Callable[[DataFrame], DataFrame]],
+) -> int:
+    """Land one gated micro-batch and return the number of rows admitted.
+
+    ``gated`` is materialized ONCE, by an eager local checkpoint whose
+    job also counts its rows (an ``Observation``, no separate probe).
+    The checkpoint cuts the lineage: nothing written below can re-run
+    the gate, whose plan reads the standing stores this step appends
+    to.  The checkpoint's blocks hold the admitted rows of one batch;
+    Spark's ContextCleaner removes them once the driver JVM has
+    garbage-collected the frame, which it may as soon as this call
+    returns (at the latest on the cleaner's periodic GC).
+
+    Zero admitted: nothing is written, and every ``_batch=<id>``
+    partition a prior attempt of this batch left (the accepted store
+    may not exist yet, and a replay's gate outcome may have changed --
+    e.g. a restart with a stricter threshold against the same
+    checkpoint) is dropped, since dynamic overwrite with zero rows
+    touches nothing.  Otherwise the ``accepted_cols`` projection lands
+    in ``accepted_dir`` FIRST; then each ``derived[base_dir](landing)``
+    is written concurrently (independent batch-sized jobs, so the wall
+    is the slowest write, not the sum of their fixed write/commit
+    overheads).  The writer threads inherit the caller's job group and
+    local properties, so job-group accounting and ``cancelJobGroup``
+    cover them."""
+    spark = gated.sparkSession
+    obs = Observation()
+    landing = gated.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    admitted = obs.get["n"]
+    if admitted == 0:
+        for base in (accepted_dir, *derived):
+            _drop_batch_partition(spark, base, batch_id)
+        return 0
+    _write_batch(landing.select(*accepted_cols), batch_id, accepted_dir)
+
+    def write(base: str, derive: Callable[[DataFrame], DataFrame]) -> None:
+        _write_batch(derive(landing), batch_id, base)
+
+    with ThreadPoolExecutor(max_workers=len(derived)) as pool:
+        # one wrapper per task: each thread gets its own copy of the
+        # caller's local properties
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write), base, derive)
+            for base, derive in derived.items()
+        ]
+        for f in futures:
+            f.result()
+    return admitted
+
+
 def apply_ingest_batch(
     batch_df: DataFrame,
     batch_id: int,
     store_dir: str,
     accepted_dir: str,
     threshold: float = JACCARD_THRESHOLD,
-) -> None:
+) -> int:
     """Idempotent per-batch body: gate, land survivors, extend the
     standing stores -- every write into a _batch=<id> partition via
-    dynamic overwrite (replay rewrites, never duplicates).
+    dynamic overwrite (replay rewrites, never duplicates).  Returns the
+    number of documents admitted.
 
     Ordering is load-bearing: the gated batch lands in the accepted
-    store FIRST, and the standing-store appends are derived from the
-    LANDED files, not from the gate's lazy plan -- the gate's lineage
-    reads the standing stores, so writing a store mid-sequence
-    invalidates the cached gate plan and a re-execution would see the
-    batch's own rows as already-standing (gating everything out)."""
-    spark = batch_df.sparkSession
-    batch_df.persist()
-    persists: list = []
-    accepted = gate_batch(
-        batch_df, store_dir, threshold, exclude_batch=batch_id,
-        _persists=persists,
-    ).persist()
-    persists.append(accepted)
-    try:
-        # the probe below and the accepted write share the persisted
-        # plan, so the standing-store scans + LSH joins run once per
-        # batch, not twice
-        if accepted.limit(1).count() == 0:
-            # nothing admitted: the accepted store may not even exist
-            # yet, so the write-then-derive sequence below would crash
-            # on an unreadable empty directory.  But a REPLAY whose gate
-            # outcome changed (e.g. the stream restarted with a stricter
-            # --threshold against the same checkpoint) may have left the
-            # prior attempt's partitions for this batch behind -- and
-            # dynamic overwrite with zero rows touches nothing -- so
-            # drop this batch's partitions explicitly to keep replays
-            # deterministic under any threshold.
-            for base in (
-                accepted_dir,
-                f"{store_dir}/digests",
-                f"{store_dir}/bands",
-                f"{store_dir}/shingles",
-            ):
-                _drop_batch_partition(spark, base, batch_id)
-            return
-        opts = {"partitionOverwriteMode": "dynamic"}
-        (
-            accepted.withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**opts)
-            .partitionBy("_batch")
-            .parquet(accepted_dir)
-        )
-        landed = (
-            spark.read.parquet(accepted_dir)
-            .filter(F.col("_batch") == batch_id)
-            .drop("_batch")
-        )
-        # one shingle projection for both derived stores (bands_of and
-        # _h64_of would each re-run the shingle math), and the three
-        # store appends submitted CONCURRENTLY: they are independent
-        # jobs over a ~batch-sized input, so the wall is the slowest
-        # write, not the sum of three fixed write/commit overheads
-        # (measured ~1.9 s -> ~0.8 s per batch at x10)
-        from concurrent.futures import ThreadPoolExecutor
-
-        from wsu_cpts_415_spark.queries.similarity import bands_from_hashed
-
-        landed_hashed = hashed_of(landed).persist()
-        persists.append(landed_hashed)
-        derived = (
-            ("digests", _digests_of(landed)),
-            ("bands", bands_from_hashed(landed_hashed)),
-            (
-                "shingles",
-                landed_hashed.select(
-                    "doc_id",
-                    F.expr(
-                        "transform(shingles, s -> xxhash64(s))"
-                    ).alias("h64"),
-                ),
-            ),
-        )
-
-        def _write(item) -> None:
-            name, df = item
-            (
-                df.withColumn("_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .options(**opts)
-                .partitionBy("_batch")
-                .parquet(f"{store_dir}/{name}")
-            )
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(_write, derived))
-    finally:
-        for df in persists:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        batch_df.unpersist()
+    store FIRST, and the digest / band / shingle appends all derive from
+    ONE materialization of the admitted rows and their projections
+    (``_land``), whose lineage cannot reach the standing stores.  The
+    gate's lazy plan does reach them: derived from it, every write would
+    re-run the whole gate (store scans and joins) while earlier writes
+    of the same batch change those stores.  The gate and its
+    materialization scan ``batch_df`` once."""
+    return _land(
+        gate_batch(batch_df, store_dir, threshold, exclude_batch=batch_id),
+        batch_id,
+        accepted_dir,
+        batch_df.columns,
+        {
+            f"{store_dir}/digests": lambda d: d.select("doc_id", "digest"),
+            f"{store_dir}/bands": bands_from_hashed,
+            f"{store_dir}/shingles": lambda d: d.select("doc_id", "h64"),
+        },
+    )
 
 
 def stream_ingest_with_dedup(
@@ -455,10 +459,12 @@ def stream_ingest_with_dedup(
     checkpoint_dir: str,
     threshold: float = JACCARD_THRESHOLD,
     on_batch_end=None,
-) -> None:
+) -> StreamingQuery:
     """Run the gated ingest over a documents stream with
-    trigger(availableNow).  ``on_batch_end(batch_id)`` is the same
-    failure-injection seam as stream_maintain_rollup."""
+    trigger(availableNow) and return the finished query (its
+    ``recentProgress`` holds one entry per micro-batch).
+    ``on_batch_end(batch_id)`` is the same failure-injection seam as
+    stream_maintain_rollup."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         apply_ingest_batch(batch_df, batch_id, store_dir, accepted_dir, threshold)
@@ -472,3 +478,4 @@ def stream_ingest_with_dedup(
         .start()
     )
     q.awaitTermination()
+    return q

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from wsu_cpts_415_spark.queries.llm_filters import BOILERPLATE_DF, LINE_TOKENS
 
@@ -133,19 +134,22 @@ def gate_line_batch(
     exclude_batch: int | None = None,
 ) -> DataFrame:
     """Gate ``batch_df`` against the standing line store, returning the
-    admitted document rows.  Missing store (first run, no bootstrap) ==
+    admitted document rows.  The store is read with its written schema
+    (no footer inference); a missing store (first run, no bootstrap) ==
     empty standing state; ``exclude_batch`` keeps replays deterministic
     exactly as in ingest_dedup.gate_batch."""
     from pyspark.errors import AnalysisException
 
     spark = batch_df.sparkSession
+    empty = doc_line_counts(batch_df.limit(0))
+    schema = StructType([*empty.schema, StructField("_batch", IntegerType())])
     try:
-        std = spark.read.parquet(f"{store_dir}/line_counts")
+        std = spark.read.schema(schema).parquet(f"{store_dir}/line_counts")
         if exclude_batch is not None:
             std = std.filter(F.col("_batch") != exclude_batch)
         std = std.drop("_batch")
     except AnalysisException:  # store not created yet -> empty corpus
-        std = doc_line_counts(batch_df.limit(0))
+        std = empty
     verdicts = gate_lines_against(batch_df, std, threshold)
     return batch_df.join(
         verdicts.filter(F.col("admitted")).select("doc_id"), "doc_id"
@@ -187,50 +191,29 @@ def apply_line_gate_batch(
     store_dir: str,
     accepted_dir: str,
     threshold: float = LINE_BP_THRESHOLD,
-) -> None:
+) -> int:
     """Idempotent per-batch body: gate, land survivors, extend the line
     store -- every write into a _batch=<id> partition via dynamic
-    overwrite.  Same write-then-derive ordering as the dedup gate: the
-    store append is derived from the LANDED accepted files so a lazy
-    re-execution of the gate plan cannot observe the batch's own store
-    rows."""
-    from wsu_cpts_415_spark.streaming.ingest_dedup import (
-        _drop_batch_partition,
-    )
+    overwrite.  Returns the number of documents admitted.  Lands through
+    the dedup gate's ``ingest_dedup._land``: the admitted rows are
+    materialized once, with lineage cut from the line store, so the
+    accepted write (first) and the line-store append both derive from
+    rows a re-execution of the gate cannot change.  ``batch_df`` is
+    persisted because the gate's plan reads it three times (twice
+    through its line segmentation, once in the join back to the
+    admitted ids) and the stream must scan it once."""
+    from wsu_cpts_415_spark.streaming.ingest_dedup import _land
 
-    spark = batch_df.sparkSession
     batch_df.persist()
-    accepted = gate_line_batch(
-        batch_df, store_dir, threshold, exclude_batch=batch_id
-    ).persist()
     try:
-        if accepted.limit(1).count() == 0:
-            for base in (accepted_dir, f"{store_dir}/line_counts"):
-                _drop_batch_partition(spark, base, batch_id)
-            return
-        opts = {"partitionOverwriteMode": "dynamic"}
-        (
-            accepted.withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**opts)
-            .partitionBy("_batch")
-            .parquet(accepted_dir)
-        )
-        landed = (
-            spark.read.parquet(accepted_dir)
-            .filter(F.col("_batch") == batch_id)
-            .drop("_batch")
-        )
-        (
-            doc_line_counts(landed)
-            .withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**opts)
-            .partitionBy("_batch")
-            .parquet(f"{store_dir}/line_counts")
+        return _land(
+            gate_line_batch(batch_df, store_dir, threshold, exclude_batch=batch_id),
+            batch_id,
+            accepted_dir,
+            batch_df.columns,
+            {f"{store_dir}/line_counts": doc_line_counts},
         )
     finally:
-        accepted.unpersist()
         batch_df.unpersist()
 
 
