@@ -13,16 +13,26 @@ multimodal_decode_features).  These tests enforce that contract locally:
   crash on a list column (so the oracle suite, which routes every compare
   through it, is genuinely running the stricter contract);
 * every registered query has an oracle entry, or is on the explicit
-  rows-only allowlist (the driver scores a missing oracle as a failure).
+  rows-only allowlist (the driver scores a missing oracle as a failure);
+* the fixture views behind the SQL queries are registered once per
+  session and dataset, and never answer for another dataset: the driver
+  runs sf0.001 and sf0.01 in one session.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import sys
 
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entry
-from tests.oracle_util import driver_canonicalize
+from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.oracle_util import compare, driver_canonicalize, duck_connect
+from wsu_cpts_415_spark.io import tables
+from wsu_cpts_415_spark.registry import all_queries
 
 # Queries intentionally without DuckDB oracle SQL (driver does a weaker
 # rows-only check).  Keep EMPTY unless a query is truly SQL-inexpressible.
@@ -60,3 +70,66 @@ def test_query_output_schema_is_scalar_only(spark, name):
         f"{name} outputs driver-unsortable columns {complex_cols}; "
         "serialize with array_join/to_json in BOTH engines"
     )
+
+
+def _check(spark, name: str, sf_dir: str) -> None:
+    compare(entry.queries()[name](spark, sf_dir), duck_connect(sf_dir),
+            entry.oracle_sql()[name])
+
+
+def test_views_follow_the_dataset_when_alternating(spark):
+    for sf_dir in (SF_SMOKE, SF_ORACLE, SF_SMOKE):
+        for name in ("q6_forecast_revenue", "q1_pricing_summary"):
+            _check(spark, name, sf_dir)
+
+
+def test_new_session_resolves_its_own_views(spark):
+    _check(spark, "q6_forecast_revenue", SF_SMOKE)
+    other = spark.newSession()
+    _check(other, "q6_forecast_revenue", SF_ORACLE)
+    _check(spark, "q6_forecast_revenue", SF_SMOKE)
+    _check(other, "q1_pricing_summary", SF_SMOKE)
+
+
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_replaced_table_file_is_seen(spark, tmp_path, layout):
+    """A table rewritten in place -- the file itself, or the one part
+    file of a parquet directory -- is re-read by the next call."""
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf_dir)
+    os.chmod(sf_dir, 0o755)
+    target = os.path.join(sf_dir, "lineitem.parquet")
+    if layout == "dir":
+        os.remove(target)
+        os.mkdir(target)
+        target = os.path.join(target, "part-0.parquet")
+        shutil.copyfile(os.path.join(SF_SMOKE, "lineitem.parquet"), target)
+    # q6 reads lineitem only: its oracle is the dataset lineitem came from
+    q6 = entry.queries()["q6_forecast_revenue"]
+    sql = entry.oracle_sql()["q6_forecast_revenue"]
+    compare(q6(spark, sf_dir), duck_connect(SF_SMOKE), sql)
+    os.chmod(target, 0o644)
+    shutil.copyfile(os.path.join(SF_ORACLE, "lineitem.parquet"), target)
+    compare(q6(spark, sf_dir), duck_connect(SF_ORACLE), sql)
+
+
+def test_tpch_round_loads_each_table_once(spark, monkeypatch):
+    """q1-q22 in one fresh session over one dataset read the fixture
+    tables once, for the session's views -- not once per query."""
+    calls = []
+    load = tables.load_table
+
+    def counting(*args, **kwargs):
+        calls.append(args[-1])
+        return load(*args, **kwargs)
+
+    # the module attribute, and every module that bound it by name
+    for module in list(sys.modules.values()):
+        if getattr(module, "load_table", None) is load:
+            monkeypatch.setattr(module, "load_table", counting)
+    session = spark.newSession()
+    tpch = [q.fn for n, q in all_queries().items() if n[0] == "q" and n[1].isdigit()]
+    assert len(tpch) == 22
+    for fn in tpch:
+        fn(session, SF_SMOKE)
+    assert sorted(calls) == sorted(tables.TABLE_NAMES)

@@ -218,30 +218,6 @@ BROADCAST_ALLOWLIST: dict[str, dict[str, tuple[int, str]]] = {
         "sa": (1, "enum: per-source vocab size"),
         "sb": (1, "enum: per-source vocab size"),
     },
-    "queries/tpch.py": {
-        "customer": (4, "scaling-dim: TPC-H customer"),
-        "nation": (2, "fixed-dim: nation is 25 rows by TPC-H spec"),
-        "part": (2, "scaling-dim: TPC-H part"),
-        "region": (1, "fixed-dim: region is 5 rows by TPC-H spec"),
-        "supplier": (1, "scaling-dim: TPC-H supplier"),
-    },
-    "queries/tpch2.py": {
-        "avg_bal": (1, "scalar: global average balance"),
-        "customer": (2, "scaling-dim: TPC-H customer"),
-        "excluded": (1, "scaling-dim: supplier subset"),
-        "max_rev": (1, "scalar: global max revenue"),
-        "n1": (2, "fixed-dim: nation alias (25 rows)"),
-        "n2": (2, "fixed-dim: nation alias (25 rows)"),
-        "nation": (3, "fixed-dim: nation is 25 rows by TPC-H spec"),
-        "part": (5, "scaling-dim: TPC-H part (filtered slivers)"),
-        "part_avg": (1, "scaling-dim: per-partkey threshold"),
-        "part_f": (2, "scaling-dim: part size-filter sliver (q2)"),
-        "qualifying": (1, "scaling-dim: supplier subset over promo qty"),
-        "region": (2, "fixed-dim: region is 5 rows by TPC-H spec"),
-        "sup_nat": (2, "scaling-dim: EUROPE supplier sliver (q2)"),
-        "supplier": (6, "scaling-dim: TPC-H supplier"),
-        "total": (1, "scalar: 0.5% value threshold"),
-    },
     "queries/training_prep.py": {
         "base": (1, "enum: per-lang base rate"),
         "ratio": (1, "enum: N_BUCKETS literal hash buckets"),

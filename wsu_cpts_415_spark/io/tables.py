@@ -293,7 +293,37 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
+def _file_stamp(path: str) -> tuple | None:
+    """(mtime_ns, size) of a table file; for a parquet directory, the
+    sorted (name, mtime_ns, size) of its entries.  None when missing."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return st.st_mtime_ns, st.st_size
+        with os.scandir(path) as it:
+            entries = [(e.name, e.stat()) for e in it]
+        return tuple(sorted((n, e.st_mtime_ns, e.st_size) for n, e in entries))
+    except OSError:
+        return None
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL surface."""
+    """Register every fixture table as a temp view for the SQL surface.
+
+    Temp views are session-scoped, so the session remembers the dataset
+    its views were last built from: ``sf_dir`` and each table file's
+    stamp.  A call for that same dataset is a no-op; any other
+    ``sf_dir``, or a table file replaced since, re-registers every view.
+    Only the current dataset is kept, so alternating datasets re-register
+    each time, and a new session (``spark.newSession()``) starts empty.
+    Nothing else may register temp views under the fixture table names.
+    """
+    dataset = (sf_dir, tuple(
+        _file_stamp(os.path.join(sf_dir, f"{name}.parquet")) for name in TABLE_NAMES
+    ))
+    if getattr(spark, "_graft_views", None) == dataset:
+        return
+    spark._graft_views = None  # a failed re-registration leaves no record
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
+    spark._graft_views = dataset

@@ -198,8 +198,6 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a pivot over an enumerated IN list is exactly one grouped
     aggregate with |statuses| conditional columns -- same single
     shuffle as the longhand CASE form."""
-    from wsu_cpts_415_spark.io.tables import load_table, register_views
-
     register_views(spark, sf_dir)
     return spark.sql(
         """
