@@ -3,7 +3,7 @@
 The driver regenerates /root/testdata between rounds and has shipped the
 events ``ts`` column as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS).
 ``load_table`` sniffs the unit from the parquet footer
-(io/tables.py:_events_ts_is_nanos); these tests pin the contract: whatever
+(io/tables.py:events_ts_read_plan); these tests pin the contract: whatever
 the physical unit, the engine-facing timestamps must agree with what an
 independent reader (DuckDB) sees.  Round-3 regression: a hardcoded
 ns->us division corrupted every ts when the fixture switched to MICROS,

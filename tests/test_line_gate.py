@@ -52,8 +52,7 @@ def _accepted_ids(spark, path):
 @pytest.fixture()
 def stores(spark, tmp_path):
     store = str(tmp_path / "store")
-    corpus = spark.createDataFrame([(1, _doc("a", "b"))], SCHEMA)
-    init_line_store(spark, corpus, store)
+    init_line_store(spark, spark.createDataFrame(CORPUS, SCHEMA), store)
     return {
         "store": store,
         "src": str(tmp_path / "incoming"),
@@ -62,6 +61,7 @@ def stores(spark, tmp_path):
     }
 
 
+CORPUS = [(1, _doc("a", "b"))]
 BATCH1 = [
     (10, _doc("a", "c")),  # shares line a with corpus doc 1 -> ratio 0.5 -> reject
     (11, _doc("d", "e")),  # novel -> admit
@@ -169,3 +169,68 @@ def test_empty_batch_writes_nothing_and_drops_stale_partitions(spark, stores):
         for f in os.listdir(stores["store"] + "/line_counts")
         if f.startswith("_batch=")
     ] == ["_batch=-1"]
+
+
+def test_stream_scans_each_batch_once(spark, stores):
+    """The gate, its materialization and the store writes read the
+    micro-batch from ONE scan (``apply_line_gate_batch`` persists it for
+    the gate's three reads): the stream's numInputRows per batch is
+    exactly the rows offered in it."""
+    _write(spark, BATCH1, stores["src"])
+    _write(spark, BATCH2, stores["src"])
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stores["src"])
+    )
+    q = stream_ingest_line_gate(
+        stream, stores["store"], stores["accepted"], stores["ckpt"]
+    )
+    assert [p.numInputRows for p in q.recentProgress] == [len(BATCH1), len(BATCH2)]
+    assert _accepted_ids(spark, stores["accepted"]) == [11, 21]
+
+
+def test_reinit_same_corpus_is_a_read_and_preserves_batches(spark, stores):
+    """Gate restart: a second init over the SAME corpus must skip the
+    rebuild, whose whole-store overwrite would wipe the _batch>=0
+    partitions the gate had appended."""
+    _write(spark, BATCH1, stores["src"])
+    _run(spark, stores["src"], stores["store"], stores["accepted"], stores["ckpt"])
+    part = os.path.join(stores["store"], "line_counts", "_batch=0")
+    assert os.path.isdir(part)
+    init_line_store(spark, spark.createDataFrame(CORPUS, SCHEMA), stores["store"])
+    assert os.path.isdir(part), "line_counts lost its appended batch on re-init"
+    # BATCH2's doc 20 shares line d with admitted doc 11: still rejected
+    _write(spark, BATCH2, stores["src"])
+    _run(spark, stores["src"], stores["store"], stores["accepted"], stores["ckpt"])
+    assert _accepted_ids(spark, stores["accepted"]) == [11, 21]
+
+
+def test_reinit_rebuilds_when_store_lost_despite_marker(spark, stores):
+    """A matching marker must NOT make init a no-op when line_counts was
+    lost: the gate would read the missing store as an empty corpus and
+    silently admit the corpus's boilerplate."""
+    import shutil
+
+    shutil.rmtree(f"{stores['store']}/line_counts")
+    init_line_store(spark, spark.createDataFrame(CORPUS, SCHEMA), stores["store"])
+    counts = spark.read.parquet(stores["store"] + "/line_counts")
+    assert counts.agg(F.sum("n_docs")).collect()[0][0] == 2  # corpus doc's 2 lines
+    _write(spark, BATCH1, stores["src"])
+    _run(spark, stores["src"], stores["store"], stores["accepted"], stores["ckpt"])
+    assert _accepted_ids(spark, stores["accepted"]) == [11]
+
+
+def test_reinit_survives_corrupt_marker(spark, stores):
+    """A corrupt marker file (half-written crash artifact) must trigger a
+    rebuild, not an exception out of the restart check."""
+    import pathlib
+
+    marker = pathlib.Path(stores["store"]) / "_corpus_id_line"
+    next(marker.glob("*.parquet")).write_bytes(b"not a parquet file")
+    init_line_store(spark, spark.createDataFrame(CORPUS, SCHEMA), stores["store"])
+    counts = spark.read.parquet(stores["store"] + "/line_counts")
+    assert counts.agg(F.sum("n_docs")).collect()[0][0] == 2
+    _write(spark, BATCH1, stores["src"])
+    _run(spark, stores["src"], stores["store"], stores["accepted"], stores["ckpt"])
+    assert _accepted_ids(spark, stores["accepted"]) == [11]

@@ -354,3 +354,28 @@ def test_every_package_module_is_reachable():
         "them into a query, pipeline, CLI command or the benchmark):\n"
         + "\n".join(unreached)
     )
+
+
+# ---------------------------------------------------------------------------
+# Lint #4: every standing stream runs through ONE foreachBatch runner and
+# lands through ONE idempotent-by-batch-id writer, both in
+# streaming/jobs.py (``run_foreach_batch``, ``write_batch``).  A second
+# copy of either is how the exactly-once protocol drifts between streams.
+
+_RUNNER_HOME = PKG / "streaming" / "jobs.py"
+_RUNNER_TOKENS = (".foreachBatch(", "partitionOverwriteMode")
+
+
+def test_foreach_batch_runner_and_batch_writer_live_in_streaming_jobs():
+    offenders = [
+        f"{path.relative_to(PKG.parent)}:{lineno}: {line.strip()}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path != _RUNNER_HOME
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if any(tok in line for tok in _RUNNER_TOKENS)
+    ]
+    assert not offenders, (
+        "a foreachBatch runner or dynamic-partition-overwrite writer "
+        "outside streaming/jobs.py -- use jobs.run_foreach_batch and "
+        "jobs.write_batch:\n" + "\n".join(offenders)
+    )

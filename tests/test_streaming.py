@@ -74,8 +74,8 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     from wsu_cpts_415_spark.schemas import EVENTS_RAW
 
     from wsu_cpts_415_spark.io.tables import (
-        _events_ts_is_nanos,
         epoch_int64_to_timestamp,
+        events_ts_read_plan,
     )
 
     src = tmp_path / "src"
@@ -86,7 +86,8 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     # the fixture's physical unit varies by round (ns or us); the
     # magnitude-adaptive conversion is unit-proof, but the 60-day shift
     # below must still be expressed in the file's raw unit
-    per_us = 1000 if _events_ts_is_nanos(f"{SF_SMOKE}/events.parquet") else 1
+    raw = events_ts_read_plan(f"{SF_SMOKE}/events.parquet")[0] == "raw"
+    per_us = 1000 if raw else 1
 
     def run_once(name):
         raw = (
@@ -142,7 +143,7 @@ def test_foreachbatch_parquet_sink(spark, tmp_path):
     batch = load_table(spark, SF_SMOKE, "events")
     got = spark.read.parquet(out)
     assert got.count() == batch.count()
-    assert set(got.columns) == set(batch.columns) | {"_batch_id"}
+    assert set(got.columns) == set(batch.columns) | {"_batch"}
     # replay with same checkpoint: no new input -> no new rows
     stream_to_parquet(read_events_stream(spark, SF_SMOKE), out, ckpt)
     assert spark.read.parquet(out).count() == batch.count()

@@ -261,6 +261,37 @@ def test_gate_markers_are_per_gate(spark, tmp_path):
     assert os.path.isdir(os.path.join(store, "digests"))
 
 
+@pytest.mark.parametrize("gate", ["dedup", "line"])
+def test_reinit_rebuilds_when_corpora_differ_only_in_duplicate_rows(
+    spark, tmp_path, gate
+):
+    """{x, y, y} and {x, z, z} have the same row count and the same xor
+    of per-row hashes (each duplicate pair cancels), so a (count, xor)
+    marker built from the first would make init over the second trust
+    stores of the wrong corpus.  The marker's seeded sum tells them
+    apart: the second init must rebuild."""
+    from wsu_cpts_415_spark.streaming.ingest_dedup import _digests_of
+    from wsu_cpts_415_spark.streaming.line_gate import (
+        doc_line_counts,
+        init_line_store,
+    )
+
+    init, name, rows_of = {
+        "dedup": (init_standing_stores, "digests", _digests_of),
+        "line": (init_line_store, "line_counts", doc_line_counts),
+    }[gate]
+    x = (1, "alpha beta alpha beta")
+    y = (2, "gamma delta gamma delta")
+    z = (3, "omicron pi omicron pi")
+    store = str(tmp_path / "store")
+    init(spark, spark.createDataFrame([x, y, y], SCHEMA), store)
+    second = spark.createDataFrame([x, z, z], SCHEMA)
+    init(spark, second, store)
+    want = rows_of(second)
+    got = spark.read.parquet(f"{store}/{name}").select(*want.columns)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 def test_reinit_rebuilds_when_store_lost_despite_marker(spark, stores):
     """Round-11 hardening: a matching _corpus_id marker must NOT make
     init a no-op when a store subdir was deleted or lost -- the skip

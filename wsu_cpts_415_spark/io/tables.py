@@ -145,14 +145,6 @@ def events_ts_read_plan(path: str) -> tuple[str, Column | None]:
     return "native", None
 
 
-def _events_ts_is_nanos(path: str) -> bool:
-    """Back-compat shim: True when ``events.ts`` needs the raw-read path.
-
-    (Historically "is nanos"; now any shape Spark can't scan natively.)
-    """
-    return events_ts_read_plan(path)[0] == "raw"
-
-
 def _spark_native_type(arrow_type) -> T.DataType | None:
     """The Spark type that scans an arrow-typed parquet column natively.
 

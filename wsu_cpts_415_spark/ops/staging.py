@@ -340,17 +340,32 @@ def _docs_stat(sf_dir: str):
         return None
 
 
+def content_fingerprint(df: DataFrame, cols: list[str]) -> tuple[int, int, int]:
+    """(row count, xor, seeded sum) of per-row hashes of ``cols``: an
+    order-insensitive content identity in one aggregate job.  Two
+    independent 64-bit aggregates because xor alone cancels on
+    duplicate-row pairs ({x, y, y} and {x, z, z} xor alike) and aliases
+    on a single non-crypto collision; the decimal SUM of a
+    differently-seeded hash makes accidental aliasing negligible (a pair
+    of inputs must collide in BOTH linear forms).  The staging layers
+    and the streaming gates' restart markers both key on it."""
+    from pyspark.sql import functions as F
+
+    c = ", ".join(cols)
+    row = df.agg(
+        F.count("*"),
+        F.expr(f"bit_xor(xxhash64({c}))"),
+        F.expr(f"sum(cast(xxhash64('fp2', {c}) as decimal(38,0)))"),
+    ).collect()[0]
+    return (int(row[0]), int(row[1] or 0), int(row[2] or 0))
+
+
 def _corpus_fp(spark: SparkSession, sf_dir: str):
-    """(row count, xor, seeded sum) of per-row full-column hashes of the
-    documents table: an order-insensitive corpus identity covering EVERY
-    column (doc_id, text, lang, source, n_chars -- the streaming gate's
-    (doc_id, text) form would alias fixtures that differ only in
-    metadata columns).  Two independent 64-bit aggregates because xor
-    alone cancels on duplicate-row pairs and aliases on a single
-    non-crypto collision; the decimal SUM of a differently-seeded hash
-    makes accidental aliasing negligible (a corpus pair must collide in
-    BOTH linear forms).  Memoized per session; None when the table is
-    unreadable (caller falls back to session staging).
+    """``content_fingerprint`` of the documents table over EVERY column
+    (doc_id, text, lang, source, n_chars -- the streaming gates' (doc_id,
+    text) form would alias fixtures that differ only in metadata
+    columns).  Memoized per session; None when the table is unreadable
+    (caller falls back to session staging).
 
     The content scan itself is also memoized DURABLY: a sidecar in the
     (ownership-vetted) staging root keys the fingerprint by the parquet
@@ -360,8 +375,6 @@ def _corpus_fp(spark: SparkSession, sf_dir: str):
     first staged read.  Any stat change (parquet layouts are written
     whole) falls back to the real scan and rewrites the sidecar
     atomically."""
-    from pyspark.sql import functions as F
-
     def build():
         root = _staging_root()
         stat = _docs_stat(sf_dir)
@@ -379,24 +392,12 @@ def _corpus_fp(spark: SparkSession, sf_dir: str):
         try:
             from wsu_cpts_415_spark.io.tables import load_table
 
-            row = (
-                load_table(spark, sf_dir, "documents")
-                .agg(
-                    F.count("*"),
-                    F.expr(
-                        "bit_xor(xxhash64(doc_id, text, lang, source,"
-                        " n_chars))"
-                    ),
-                    F.expr(
-                        "sum(cast(xxhash64('fp2', doc_id, text, lang,"
-                        " source, n_chars) as decimal(38,0)))"
-                    ),
-                )
-                .collect()[0]
+            fp = content_fingerprint(
+                load_table(spark, sf_dir, "documents"),
+                ["doc_id", "text", "lang", "source", "n_chars"],
             )
         except Exception:
             return None
-        fp = (int(row[0]), int(row[1] or 0), int(row[2] or 0))
         if sidecar is not None:
             try:
                 os.makedirs(os.path.dirname(sidecar), exist_ok=True)

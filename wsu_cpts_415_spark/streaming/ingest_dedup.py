@@ -29,12 +29,12 @@ batch body returns.  The gate and the landing scan the micro-batch
 once, and the standing stores are read with their written schemas (no
 footer-inference job).
 
-Exactly-once: every store write is partitioned by batch id via dynamic
-partition overwrite (the idempotent-by-batch-id pattern proven in
-streaming/jobs.py) -- a batch replayed after a mid-commit crash rewrites
-its own partitions, so neither the corpus stores nor the accepted store
-can double-apply.  A batch that admits nothing writes nothing and drops
-any partition a prior attempt of it left.
+Exactly-once: the foreachBatch protocol of streaming/jobs.py -- every
+store write is this batch's ``_batch=<id>`` partition, so a batch
+replayed after a mid-commit crash rewrites its own partitions, and a
+batch that admits nothing drops any partition a prior attempt left.
+Both gates share this module's landing (``_land``), standing-store
+reader (``_read_store``) and init path (``_init_stores``).
 
 Scale posture: per-batch cost is O(standing-store scan) + O(collisions),
 independent of the standing corpus's PAIR count; the standing stores are
@@ -60,17 +60,25 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from decimal import Decimal
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
+from wsu_cpts_415_spark.ops.staging import content_fingerprint
 from wsu_cpts_415_spark.queries.similarity import (
     bands_from_hashed,
     bands_of,
     hashed_of,
+)
+from wsu_cpts_415_spark.streaming.jobs import (
+    drop_batch,
+    run_foreach_batch,
+    write_batch,
 )
 
 JACCARD_THRESHOLD = 0.5  # the 4-band/2-row s-curve midpoint
@@ -94,106 +102,105 @@ def _h64_of(docs: DataFrame) -> DataFrame:
     return hashed_of(docs).select("doc_id", F.expr(_H64).alias("h64"))
 
 
-def corpus_fingerprint(corpus_docs: DataFrame) -> list[int]:
-    """(row count, xor of per-doc 64-bit hashes): an order-insensitive
-    corpus identity, one scan of (doc_id, text).  Used to decide whether
-    an existing standing store was built from THIS corpus -- the
-    restart-skip check below -- at a cost linear in corpus bytes with a
-    tiny constant, vs the shingle+band build it avoids."""
-    row = corpus_docs.agg(
-        F.count("*"), F.expr("bit_xor(xxhash64(doc_id, text))")
-    ).collect()[0]
-    return [int(row[0]), int(row[1] or 0)]
+def _read_store(
+    spark: SparkSession,
+    path: str,
+    empty: DataFrame,
+    exclude_batch: int | None = None,
+) -> DataFrame:
+    """The standing store at ``path``, read with the schema it was
+    written with (``empty``'s schema plus ``_batch int``), so the read
+    infers nothing from parquet footers and costs no job.
 
-
-def _marker_path(store_dir: str, gate: str = "dedup") -> str:
-    # per-GATE marker name: if two gates ever share a store_dir, one
-    # gate's marker must not make the other skip its own build
-    return f"{store_dir}/_corpus_id_{gate}"
-
-
-def _read_marker(
-    spark: SparkSession, store_dir: str, gate: str = "dedup"
-) -> list[int] | None:
-    # ANY read failure means "no trustworthy marker": a corrupt or
-    # half-written marker file raises SparkException (not
-    # AnalysisException), and trusting it -- or crashing on it -- would
-    # either skip a needed rebuild or wedge the gate; rebuilding is
-    # always the safe answer
+    A missing store (first run with no ``--init-corpus``: the standing
+    corpus starts empty and batch 0 creates the store) reads as
+    ``empty`` instead of crashing the stream with PATH_NOT_FOUND from
+    inside the first micro-batch.  ``exclude_batch`` makes the gate
+    REPLAY-DETERMINISTIC: a batch replayed after a crash that landed some
+    of its own store partitions must not gate against them (it would
+    see its own rows as standing and admit nothing, leaving the stores
+    missing this batch's rows forever), so the read drops the
+    ``_batch=<exclude_batch>`` partition."""
+    schema = StructType([*empty.schema, StructField("_batch", IntegerType())])
     try:
-        row = spark.read.parquet(_marker_path(store_dir, gate)).collect()
-        if len(row) != 1:
-            return None
-        return [int(row[0]["n_docs"]), int(row[0]["xor_hash"])]
+        df = spark.read.schema(schema).parquet(path)
+    except AnalysisException:  # store not created yet -> empty corpus
+        return empty
+    if exclude_batch is not None:
+        df = df.filter(F.col("_batch") != exclude_batch)
+    return df.drop("_batch")
+
+
+def _init_stores(
+    spark: SparkSession,
+    corpus_docs: DataFrame,
+    store_dir: str,
+    gate: str,
+    stores: dict[str, DataFrame],
+) -> None:
+    """Build each named standing store under ``store_dir`` from the
+    corpus (the nightly maintenance job's output) as its base
+    ``_batch=-1`` partition, unless this gate already built them all
+    from this corpus.  ``stores`` maps each store name to its base rows.
+
+    Restart-skip (round 10): the stores are durable tables, so a gate
+    RESTART over the same corpus must not pay the O(corpus) rebuild --
+    and, worse, the rebuild's whole-store ``overwrite`` would wipe every
+    ``_batch>=0`` partition the running gate had appended.  A one-row
+    per-gate marker (``_corpus_id_<gate>``, so gates sharing a
+    ``store_dir`` never skip each other's builds) holds the corpus's
+    ``content_fingerprint`` over (doc_id, text).  Init is a READ -- one
+    corpus scan for the fingerprint, no store touch -- only when the
+    marker matches AND every named store's footer resolves: a store
+    lost while its marker survived must rebuild, not leave the gate
+    gating against an empty corpus.  Any marker read failure (a corrupt
+    or half-written file raises SparkException) counts as no marker:
+    rebuilding is always the safe answer.  The marker is written LAST,
+    so a crash mid-build leaves none.  Measured x100 (round 10): 102 s
+    build -> ~seconds on restart."""
+    fp = content_fingerprint(corpus_docs, ["doc_id", "text"])
+    marker = f"{store_dir}/_corpus_id_{gate}"
+    try:
+        (row,) = spark.read.parquet(marker).collect()
+        if (row["n_docs"], row["xor_hash"], int(row["sum_hash"])) == fp:
+            for name in stores:  # footer reads only, no job
+                spark.read.parquet(f"{store_dir}/{name}").schema
+            return
     except Exception:
-        return None
-
-
-def _stores_readable(spark: SparkSession, store_dir: str) -> bool:
-    """True iff all three standing stores exist and their parquet
-    footers resolve -- schema inference only, no job.  Guards the
-    restart-skip: a matching marker with a missing/corrupt store must
-    rebuild, not no-op."""
-    for name in ("digests", "bands", "shingles"):
-        try:
-            spark.read.parquet(f"{store_dir}/{name}").schema
-        except Exception:
-            return False
-    return True
+        pass
+    for name, rows in stores.items():
+        rows.withColumn("_batch", F.lit(-1)).write.mode(
+            "overwrite"
+        ).partitionBy("_batch").parquet(f"{store_dir}/{name}")
+    spark.createDataFrame(
+        [(fp[0], fp[1], Decimal(fp[2]))],
+        "n_docs long, xor_hash long, sum_hash decimal(38,0)",
+    ).coalesce(1).write.mode("overwrite").parquet(marker)
 
 
 def init_standing_stores(
     spark: SparkSession, corpus_docs: DataFrame, store_dir: str
 ) -> None:
     """Materialize the standing digest / band / shingle stores from the
-    corpus (the nightly maintenance job's output).  Base data lands in
-    the _batch=-1 partition so batch appends stay idempotent.
-
-    Restart-skip (round 10): the stores are durable tables, so a gate
-    RESTART over the same corpus must not pay the O(corpus) shingle +
-    band rebuild -- and, worse, the rebuild's plain ``overwrite`` would
-    wipe every ``_batch>=0`` partition the running gate had appended.
-    A one-row ``_corpus_id`` marker (count + xor-of-doc-hashes,
-    ``corpus_fingerprint``) written after a successful build makes init
-    a READ when it matches: one corpus scan to recompute the
-    fingerprint, no store touch.  A changed corpus (mismatch) rebuilds
-    and re-marks.  Measured x100 (round 10): 102 s build -> ~seconds
-    on restart.
-
-    The build itself computes the shingle/hash projection ONCE and
-    derives bands + compact shingle arrays from it (previously
-    ``bands_of`` and ``_h64_of`` each re-ran the shingle math)."""
-    fp = corpus_fingerprint(corpus_docs)
-    if _read_marker(spark, store_dir) == fp and _stores_readable(
-        spark, store_dir
-    ):
-        # marker alone is not enough: if a store subdir was deleted or
-        # lost while the marker survived, a silent no-op here would make
-        # the gate fail later reading missing stores
-        return
-    base = corpus_docs
-    hashed = hashed_of(base).persist()
+    corpus through ``_init_stores`` (restart-skip included).  The build
+    computes the shingle/hash projection ONCE and derives bands +
+    compact shingle arrays from it (``persist`` is lazy: a restart-skip
+    never computes it)."""
+    hashed = hashed_of(corpus_docs).persist()
     try:
-        _digests_of(base).withColumn("_batch", F.lit(-1)).write.mode(
-            "overwrite"
-        ).partitionBy("_batch").parquet(f"{store_dir}/digests")
-        bands_from_hashed(hashed).withColumn(
-            "_batch", F.lit(-1)
-        ).write.mode("overwrite").partitionBy("_batch").parquet(
-            f"{store_dir}/bands"
-        )
-        hashed.select("doc_id", F.expr(_H64).alias("h64")).withColumn(
-            "_batch", F.lit(-1)
-        ).write.mode("overwrite").partitionBy("_batch").parquet(
-            f"{store_dir}/shingles"
+        _init_stores(
+            spark,
+            corpus_docs,
+            store_dir,
+            "dedup",
+            {
+                "digests": _digests_of(corpus_docs),
+                "bands": bands_from_hashed(hashed),
+                "shingles": hashed.select("doc_id", F.expr(_H64).alias("h64")),
+            },
         )
     finally:
         hashed.unpersist()
-    # marker LAST: a crash mid-build leaves no marker, so the next init
-    # rebuilds instead of trusting half-written stores
-    spark.createDataFrame(
-        [(fp[0], fp[1])], "n_docs long, xor_hash long"
-    ).coalesce(1).write.mode("overwrite").parquet(_marker_path(store_dir))
 
 
 def gate_batch(
@@ -203,42 +210,20 @@ def gate_batch(
     exclude_batch: int | None = None,
 ) -> DataFrame:
     """Pure gating logic (no writes): ``gate_against`` over the standing
-    stores under ``store_dir``.
-
-    ``exclude_batch`` makes the gate REPLAY-DETERMINISTIC: a batch
-    replayed after a crash that landed some of its own store partitions
-    must not gate against them (it would see its own rows as standing
-    and admit nothing, leaving the stores missing this batch's bands
-    forever), so the reads drop the ``_batch=<exclude_batch>``
-    partitions before gating.
-
-    Each store is read with the schema it was written with (the empty
-    frame's schema plus ``_batch int``), so a read infers nothing from
-    parquet footers and costs no job.  A missing store (first run with
-    no ``--init-corpus``: the standing corpus starts empty and batch 0
-    creates the stores) gates against an empty standing frame of that
-    schema instead of crashing the stream with PATH_NOT_FOUND from
-    inside the first micro-batch."""
-    from pyspark.errors import AnalysisException
-
+    stores under ``store_dir``, each read by ``_read_store`` (a missing
+    store is an empty corpus; ``exclude_batch`` keeps replays
+    deterministic)."""
     spark = batch_df.sparkSession
     nil = batch_df.limit(0)
 
-    def read_store(name: str, empty: DataFrame) -> DataFrame:
-        schema = StructType([*empty.schema, StructField("_batch", IntegerType())])
-        try:
-            df = spark.read.schema(schema).parquet(f"{store_dir}/{name}")
-        except AnalysisException:  # store not created yet -> empty corpus
-            return empty
-        if exclude_batch is not None:
-            df = df.filter(F.col("_batch") != exclude_batch)
-        return df.drop("_batch")
+    def read(name: str, empty: DataFrame) -> DataFrame:
+        return _read_store(spark, f"{store_dir}/{name}", empty, exclude_batch)
 
-    std_digests = read_store("digests", _digests_of(nil)).select("digest")
-    std_bands = read_store("bands", bands_of(nil)).select(
+    std_digests = read("digests", _digests_of(nil)).select("digest")
+    std_bands = read("bands", bands_of(nil)).select(
         F.col("doc_id").alias("old_doc"), "b", "h1", "h2"
     )
-    std_sh = read_store("shingles", _h64_of(nil)).select(
+    std_sh = read("shingles", _h64_of(nil)).select(
         F.col("doc_id").alias("old_doc"), F.col("h64").alias("old_h64")
     )
     return gate_against(batch_df, std_digests, std_bands, std_sh, threshold)
@@ -336,32 +321,6 @@ def gate_against(
     return survivors.join(admitted, "doc_id")
 
 
-def _drop_batch_partition(spark: SparkSession, base_dir: str, batch_id: int) -> None:
-    """Remove a ``_batch=<id>`` partition directory if it exists, via the
-    Hadoop FileSystem API (works on any scheme the session can write).
-    This is what dynamic partition overwrite does for partitions present
-    in the new data; the zero-admitted replay path has no new data, so
-    stale partitions from a prior attempt must be dropped explicitly."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/_batch={batch_id}")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(path):
-        fs.delete(path, True)
-
-
-def _write_batch(df: DataFrame, batch_id: int, base_dir: str) -> None:
-    """Write ``df`` as the ``_batch=<batch_id>`` partition of
-    ``base_dir`` by dynamic partition overwrite: a replay rewrites the
-    partition instead of appending to it."""
-    (
-        df.withColumn("_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch")
-        .parquet(base_dir)
-    )
-
-
 def _land(
     gated: DataFrame,
     batch_id: int,
@@ -400,12 +359,12 @@ def _land(
     admitted = obs.get["n"]
     if admitted == 0:
         for base in (accepted_dir, *derived):
-            _drop_batch_partition(spark, base, batch_id)
+            drop_batch(spark, base, batch_id)
         return 0
-    _write_batch(landing.select(*accepted_cols), batch_id, accepted_dir)
+    write_batch(landing.select(*accepted_cols), batch_id, accepted_dir)
 
     def write(base: str, derive: Callable[[DataFrame], DataFrame]) -> None:
-        _write_batch(derive(landing), batch_id, base)
+        write_batch(derive(landing), batch_id, base)
 
     with ThreadPoolExecutor(max_workers=len(derived)) as pool:
         # one wrapper per task: each thread gets its own copy of the
@@ -460,22 +419,14 @@ def stream_ingest_with_dedup(
     threshold: float = JACCARD_THRESHOLD,
     on_batch_end=None,
 ) -> StreamingQuery:
-    """Run the gated ingest over a documents stream with
-    trigger(availableNow) and return the finished query (its
-    ``recentProgress`` holds one entry per micro-batch).
-    ``on_batch_end(batch_id)`` is the same failure-injection seam as
-    stream_maintain_rollup."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_ingest_batch(batch_df, batch_id, store_dir, accepted_dir, threshold)
-        if on_batch_end is not None:
-            on_batch_end(batch_id)
-
-    q = (
-        stream_docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Run the gated ingest over a documents stream through
+    ``jobs.run_foreach_batch`` and return the finished query;
+    ``on_batch_end`` is the runner's failure-injection seam."""
+    return run_foreach_batch(
+        stream_docs,
+        lambda batch_df, batch_id: apply_ingest_batch(
+            batch_df, batch_id, store_dir, accepted_dir, threshold
+        ),
+        checkpoint_dir,
+        on_batch_end,
     )
-    q.awaitTermination()
-    return q

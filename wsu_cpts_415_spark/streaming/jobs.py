@@ -17,11 +17,12 @@ with maxFilesPerTrigger batching.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
@@ -202,9 +203,8 @@ def run_available_now(stream_df: DataFrame, name: str, output_mode: str = "compl
     aggregation over an event-time watermark, whose final windows close
     only on that empty batch -- would silently lose them here, so it is
     refused with ``ValueError`` (read off the analyzed plan).
-    A STANDING stream (the ingest/line gates use their own writeStream
-    paths) keeps the default: there, eager state cleanup between lulls
-    is the point."""
+    A STANDING stream (``run_foreach_batch``) keeps the default: there,
+    eager state cleanup between lulls is the point."""
     if output_mode == "append" and _aggregates_over_watermark(
         stream_df._jdf.queryExecution().analyzed()
     ):
@@ -237,27 +237,66 @@ def run_available_now(stream_df: DataFrame, name: str, output_mode: str = "compl
     return stream_df.sparkSession.table(name)
 
 
-def stream_to_parquet(
-    stream_df: DataFrame, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Streaming -> storage via foreachBatch: each micro-batch lands in
-    its own ``_batch_id=<n>`` partition via DYNAMIC partition overwrite,
-    so a batch replayed after a mid-batch failure overwrites its own
-    partition instead of appending a duplicate -- foreachBatch is
-    at-least-once, and idempotent-by-batch-id is what upgrades it to
-    exactly-once (a plain append would double-apply on replay; the
-    failure-injection test in tests/test_streaming.py proves the
-    difference).  This is the S9-sink analog for streams; swap the body
-    for MERGE INTO on a lakehouse table format."""
+# --- the exactly-once foreachBatch protocol -------------------------------
+#
+# Every standing stream (the parquet sink, the rollup maintainer, the
+# dedup and boilerplate gates) pairs a replayable source with a sink
+# that is idempotent by batch id: each micro-batch lands in its own
+# ``_batch=<id>`` partition of every store it writes, by DYNAMIC
+# partition overwrite.  foreachBatch is at-least-once -- a batch whose
+# body ran but whose checkpoint commit did not is replayed on restart --
+# and the replay rewrites its own partitions instead of appending a
+# duplicate (a plain append would double-apply; the failure-injection
+# tests in tests/test_streaming.py, test_streaming_ingest.py and
+# test_line_gate.py prove the difference).  A replay that now writes
+# nothing drops the partitions its earlier attempt left
+# (``drop_batch``), since an overwrite with zero rows touches nothing.
+
+
+def write_batch(df: DataFrame, batch_id: int, base_dir: str) -> None:
+    """Write ``df`` as the ``_batch=<batch_id>`` partition of
+    ``base_dir`` by dynamic partition overwrite: a replay rewrites the
+    partition (and wipes any partial files a crashed write left there)
+    instead of appending to it."""
+    (
+        df.withColumn("_batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch")
+        .parquet(base_dir)
+    )
+
+
+def drop_batch(spark: SparkSession, base_dir: str, batch_id: int) -> None:
+    """Remove a ``_batch=<id>`` partition directory if it exists, via the
+    Hadoop FileSystem API (works on any scheme the session can write)."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/_batch={batch_id}")
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(path):
+        fs.delete(path, True)
+
+
+def run_foreach_batch(
+    stream_df: DataFrame,
+    body: Callable[[DataFrame, int], object],
+    checkpoint_dir: str,
+    on_batch_end: Callable[[int], object] | None = None,
+) -> StreamingQuery:
+    """Run ``body(batch_df, batch_id)`` on every micro-batch of
+    ``stream_df`` with trigger(availableNow) under ``checkpoint_dir``,
+    and return the finished query (its ``recentProgress`` holds one
+    entry per micro-batch).  ``body`` must be idempotent by batch id
+    (``write_batch``).
+
+    ``on_batch_end(batch_id)`` fires after the body and BEFORE the
+    checkpoint commits the batch -- the failure-injection seam (raise
+    there to simulate dying mid-commit) and a metrics hook."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
+        body(batch_df, batch_id)
+        if on_batch_end is not None:
+            on_batch_end(batch_id)
 
     q = (
         stream_df.writeStream.foreachBatch(_sink)
@@ -266,30 +305,37 @@ def stream_to_parquet(
         .start()
     )
     q.awaitTermination()
+    return q
+
+
+def stream_to_parquet(
+    stream_df: DataFrame, out_dir: str, checkpoint_dir: str
+) -> StreamingQuery:
+    """Streaming -> storage: each micro-batch lands in its own
+    ``_batch=<n>`` partition of ``out_dir`` (``write_batch``), so a
+    replayed batch overwrites itself.  This is the S9-sink analog for
+    streams; swap the body for MERGE INTO on a lakehouse table format."""
+    return run_foreach_batch(
+        stream_df,
+        lambda batch_df, batch_id: write_batch(batch_df, batch_id, out_dir),
+        checkpoint_dir,
+    )
 
 
 def apply_rollup_batch(
     batch_df: DataFrame, batch_id: int, events_dir: str, rollup_dir: str
 ) -> None:
     """Idempotent per-batch body of the rollup maintainer: land the batch
-    in its own ``_batch=<n>`` events-store partition (dynamic overwrite:
-    a replay rewrites the same partition, never duplicates it -- and
-    wipes any partial files a crashed write left there), then re-roll
-    only the days the batch touches from the FULL store.  Both steps are
-    replay-idempotent: the day recompute reads the store, so applying
-    the same batch twice converges to the same rollup rows."""
+    in its own ``_batch=<n>`` events-store partition (``write_batch``),
+    then re-roll only the days the batch touches from the FULL store.
+    Both steps are replay-idempotent: the day recompute reads the store,
+    so applying the same batch twice converges to the same rollup rows."""
     from wsu_cpts_415_spark.io.maintenance import refresh_daily_rollup
 
     spark = batch_df.sparkSession
     batch_df.persist()
     try:
-        (
-            batch_df.withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(events_dir)
-        )
+        write_batch(batch_df, batch_id, events_dir)
         refresh_daily_rollup(spark, events_dir, rollup_dir, batch_df)
     finally:
         batch_df.unpersist()
@@ -301,30 +347,22 @@ def stream_maintain_rollup(
     rollup_dir: str,
     checkpoint_dir: str,
     on_batch_end=None,
-) -> None:
+) -> StreamingQuery:
     """Streaming continuous-aggregate maintenance: each micro-batch lands
     in the events store and only its touched days are re-rolled and
     upserted (io.maintenance.refresh_daily_rollup).  The streaming face
     of the hypertable-rollup pattern -- state lives in the store, not
     the stream, and exactly-once comes from the idempotent-by-batch-id
     sink (apply_rollup_batch) under the checkpoint's replay bookkeeping.
-
-    ``on_batch_end(batch_id)`` fires after the sink body and BEFORE the
-    checkpoint commits the batch -- the failure-injection seam (raise
-    there to simulate dying mid-commit) and a metrics hook."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_rollup_batch(batch_df, batch_id, events_dir, rollup_dir)
-        if on_batch_end is not None:
-            on_batch_end(batch_id)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    ``on_batch_end`` is ``run_foreach_batch``'s seam."""
+    return run_foreach_batch(
+        stream_df,
+        lambda batch_df, batch_id: apply_rollup_batch(
+            batch_df, batch_id, events_dir, rollup_dir
+        ),
+        checkpoint_dir,
+        on_batch_end,
     )
-    q.awaitTermination()
 
 
 def seasonal_alerts(

@@ -11,12 +11,9 @@ accepted store and their per-line postings extend the standing
 line-frequency store, so batch N+1 gates against everything batch N
 admitted.
 
-Exactly-once: the same idempotent-by-batch-id discipline as the dedup
-gate -- every store write is partitioned by batch id via dynamic
-partition overwrite, the gate reads EXCLUDE the replaying batch's own
-partitions, and the zero-admitted replay path clears stale partitions
-explicitly (gate outcomes may change if the stream restarts with a
-different threshold against the same checkpoint).
+Exactly-once, landing, store reads and restart-skip init: the dedup
+gate's shared protocol (streaming/ingest_dedup.py, over the foreachBatch
+runner and batch writer of streaming/jobs.py).
 
 Scale posture: the standing store holds (digest, n_docs) aggregates --
 8-byte xxhash64 digests, never line text -- so the per-batch gate cost
@@ -30,9 +27,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.streaming import StreamingQuery
 
 from wsu_cpts_415_spark.queries.llm_filters import BOILERPLATE_DF, LINE_TOKENS
+from wsu_cpts_415_spark.streaming.ingest_dedup import (
+    _init_stores,
+    _land,
+    _read_store,
+)
+from wsu_cpts_415_spark.streaming.jobs import run_foreach_batch
 
 # reject a document when at least this fraction of its lines is boilerplate
 LINE_BP_THRESHOLD = 0.5
@@ -133,23 +136,16 @@ def gate_line_batch(
     threshold: float = LINE_BP_THRESHOLD,
     exclude_batch: int | None = None,
 ) -> DataFrame:
-    """Gate ``batch_df`` against the standing line store, returning the
-    admitted document rows.  The store is read with its written schema
-    (no footer inference); a missing store (first run, no bootstrap) ==
-    empty standing state; ``exclude_batch`` keeps replays deterministic
-    exactly as in ingest_dedup.gate_batch."""
-    from pyspark.errors import AnalysisException
-
-    spark = batch_df.sparkSession
-    empty = doc_line_counts(batch_df.limit(0))
-    schema = StructType([*empty.schema, StructField("_batch", IntegerType())])
-    try:
-        std = spark.read.schema(schema).parquet(f"{store_dir}/line_counts")
-        if exclude_batch is not None:
-            std = std.filter(F.col("_batch") != exclude_batch)
-        std = std.drop("_batch")
-    except AnalysisException:  # store not created yet -> empty corpus
-        std = empty
+    """Gate ``batch_df`` against the standing line store (read by
+    ``ingest_dedup._read_store``: a missing store is an empty corpus,
+    ``exclude_batch`` keeps replays deterministic), returning the
+    admitted document rows."""
+    std = _read_store(
+        batch_df.sparkSession,
+        f"{store_dir}/line_counts",
+        doc_line_counts(batch_df.limit(0)),
+        exclude_batch,
+    )
     verdicts = gate_lines_against(batch_df, std, threshold)
     return batch_df.join(
         verdicts.filter(F.col("admitted")).select("doc_id"), "doc_id"
@@ -159,29 +155,14 @@ def gate_line_batch(
 def init_line_store(
     spark: SparkSession, corpus_docs: DataFrame, store_dir: str
 ) -> None:
-    """Bootstrap the standing line-frequency store from a corpus (the
-    nightly maintenance job's output); base data in _batch=-1.
-
-    Same restart-skip as ingest_dedup.init_standing_stores: a matching
-    ``_corpus_id`` marker makes re-init one corpus scan (and protects
-    the gate's appended ``_batch>=0`` partitions from the rebuild's
-    plain overwrite); marker written only after a successful build."""
-    from wsu_cpts_415_spark.streaming.ingest_dedup import (
-        _marker_path,
-        _read_marker,
-        corpus_fingerprint,
-    )
-
-    fp = corpus_fingerprint(corpus_docs)
-    if _read_marker(spark, store_dir, gate="line") == fp:
-        return
-    doc_line_counts(corpus_docs).withColumn("_batch", F.lit(-1)).write.mode(
-        "overwrite"
-    ).partitionBy("_batch").parquet(f"{store_dir}/line_counts")
-    spark.createDataFrame(
-        [(fp[0], fp[1])], "n_docs long, xor_hash long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        _marker_path(store_dir, gate="line")
+    """Bootstrap the standing line-frequency store from a corpus through
+    ``ingest_dedup._init_stores`` (restart-skip included)."""
+    _init_stores(
+        spark,
+        corpus_docs,
+        store_dir,
+        "line",
+        {"line_counts": doc_line_counts(corpus_docs)},
     )
 
 
@@ -202,8 +183,6 @@ def apply_line_gate_batch(
     persisted because the gate's plan reads it three times (twice
     through its line segmentation, once in the join back to the
     admitted ids) and the stream must scan it once."""
-    from wsu_cpts_415_spark.streaming.ingest_dedup import _land
-
     batch_df.persist()
     try:
         return _land(
@@ -224,22 +203,15 @@ def stream_ingest_line_gate(
     checkpoint_dir: str,
     threshold: float = LINE_BP_THRESHOLD,
     on_batch_end=None,
-) -> None:
-    """Run the boilerplate gate over a documents stream with
-    trigger(availableNow); ``on_batch_end(batch_id)`` is the
-    failure-injection seam shared with the other foreachBatch jobs."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_line_gate_batch(
+) -> StreamingQuery:
+    """Run the boilerplate gate over a documents stream through
+    ``jobs.run_foreach_batch`` and return the finished query;
+    ``on_batch_end`` is the runner's failure-injection seam."""
+    return run_foreach_batch(
+        stream_docs,
+        lambda batch_df, batch_id: apply_line_gate_batch(
             batch_df, batch_id, store_dir, accepted_dir, threshold
-        )
-        if on_batch_end is not None:
-            on_batch_end(batch_id)
-
-    q = (
-        stream_docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
+        on_batch_end,
     )
-    q.awaitTermination()
