@@ -379,3 +379,26 @@ def test_foreach_batch_runner_and_batch_writer_live_in_streaming_jobs():
         "outside streaming/jobs.py -- use jobs.run_foreach_batch and "
         "jobs.write_batch:\n" + "\n".join(offenders)
     )
+
+
+# ---------------------------------------------------------------------------
+# Lint #5: the streaming layer builds no DataFrame from Python rows.  A
+# ``createDataFrame`` there forks the Python worker daemon for what is
+# JVM-side work (the gates' one-row restart marker was the only site);
+# build such frames with ``spark.range(1).select(F.lit(...))``.
+
+_STREAMING = PKG / "streaming"
+
+
+def test_streaming_builds_no_dataframe_from_python_rows():
+    offenders = [
+        f"{path.relative_to(PKG.parent)}:{lineno}: {line.strip()}"
+        for path in sorted(_STREAMING.glob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert not offenders, (
+        "createDataFrame in streaming/ starts a Python worker -- build "
+        "the frame JVM-side (spark.range(1).select(F.lit(...))):\n"
+        + "\n".join(offenders)
+    )

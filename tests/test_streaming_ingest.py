@@ -389,3 +389,137 @@ def test_empty_batch_writes_nothing_and_drops_stale_partitions(spark, stores):
         assert [f for f in os.listdir(base) if f.startswith("_batch=")] == (
             [] if base == stores["accepted"] else ["_batch=-1"]
         ), base
+
+
+def _init_for(gate):
+    from wsu_cpts_415_spark.streaming.line_gate import init_line_store
+
+    return {"dedup": init_standing_stores, "line": init_line_store}[gate]
+
+
+def _grouped_jobs(spark, group, fn):
+    """(jobs ``fn()`` runs in job group ``group``, jobs it runs outside
+    any group)."""
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    n = jobs_during(spark, group, fn)
+    return n, set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
+# Spark jobs one init may run, on 4 cores: a cold build is the corpus
+# checkpoint (which also observes the fingerprint; one job per AQE query
+# stage), one write per store and the marker write; a restart is the
+# marker read, the fingerprint aggregate and one footer read per store.
+# The fingerprint job, createDataFrame marker and schema-inferring
+# marker read made a cold build 6 (dedup) and 6 (line) jobs and a
+# restart 7 and 5.
+INIT_JOB_BOUND = {"dedup": 5, "line": 6}
+RESTART_JOB_BOUND = {"dedup": 6, "line": 4}
+
+INIT_CORPUS = [
+    (1, "alpha beta alpha beta"),
+    (2, "gamma delta gamma delta epsilon"),
+    (3, "gamma delta gamma delta epsilon"),
+    (4, "solo"),
+]
+
+
+@pytest.mark.parametrize("gate", ["dedup", "line"])
+def test_init_job_count_guard(spark, tmp_path, gate, monkeypatch):
+    """A cold build over a fresh ``store_dir`` runs a bounded number of
+    jobs, all in the caller's job group, and builds no frame from Python
+    rows (that forks a Python worker for the one-row marker)."""
+    from pyspark.sql import SparkSession
+
+    corpus = spark.createDataFrame(INIT_CORPUS, SCHEMA)
+
+    def refuse(*_a, **_k):
+        raise AssertionError("init built a DataFrame from Python rows")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    n, escaped = _grouped_jobs(
+        spark,
+        f"init-census-{gate}",
+        lambda: _init_for(gate)(spark, corpus, str(tmp_path / "store")),
+    )
+    assert not escaped, f"jobs outside the caller's job group: {sorted(escaped)}"
+    assert n <= INIT_JOB_BOUND[gate], f"{n} jobs for a cold {gate} init"
+
+
+@pytest.mark.parametrize("gate", ["dedup", "line"])
+def test_restart_job_count_guard(spark, tmp_path, gate):
+    """A restart over the same corpus and intact stores is a read: the
+    marker read (pinned schema), the fingerprint and the footer checks,
+    within a bounded number of jobs, all in the caller's job group."""
+    import os
+
+    corpus = spark.createDataFrame(INIT_CORPUS, SCHEMA)
+    store = str(tmp_path / "store")
+    init = _init_for(gate)
+    init(spark, corpus, store)
+    stamp = {
+        d: os.stat(os.path.join(store, d)).st_mtime_ns for d in os.listdir(store)
+    }
+    n, escaped = _grouped_jobs(
+        spark, f"restart-census-{gate}", lambda: init(spark, corpus, store)
+    )
+    assert not escaped, f"jobs outside the caller's job group: {sorted(escaped)}"
+    assert n <= RESTART_JOB_BOUND[gate], f"{n} jobs for a {gate} restart"
+    assert {
+        d: os.stat(os.path.join(store, d)).st_mtime_ns for d in os.listdir(store)
+    } == stamp, "the restart rewrote a store or the marker"
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(1, "alpha beta alpha beta")],
+        [
+            (1, "alpha beta alpha beta"),
+            (2, "gamma delta gamma delta"),
+            (2, "gamma delta gamma delta"),
+        ],
+        [],
+    ],
+    ids=["one-doc", "x-y-y", "empty"],
+)
+@pytest.mark.parametrize("gate", ["dedup", "line"])
+def test_init_stores_equal_their_direct_derivations(spark, tmp_path, gate, rows):
+    """Every store a build writes holds exactly its direct derivation
+    from the corpus, all of it in the ``_batch=-1`` partition; the
+    marker is the corpus's ``content_fingerprint``; and the build's
+    materialization is released before init returns."""
+    import os
+
+    from wsu_cpts_415_spark.ops.staging import content_fingerprint
+    from wsu_cpts_415_spark.queries.similarity import bands_of
+    from wsu_cpts_415_spark.streaming.ingest_dedup import (
+        _digests_of,
+        _h64_of,
+        _read_store,
+    )
+    from wsu_cpts_415_spark.streaming.line_gate import doc_line_counts
+
+    corpus = spark.createDataFrame(rows, SCHEMA)
+    store = str(tmp_path / "store")
+    derivations = {
+        "dedup": {"digests": _digests_of, "bands": bands_of, "shingles": _h64_of},
+        "line": {"line_counts": doc_line_counts},
+    }[gate]
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    _init_for(gate)(spark, corpus, store)
+    assert jsc.getPersistentRDDs().size() == persisted, "init left blocks cached"
+    for name, derive in derivations.items():
+        want = derive(corpus)
+        got = _read_store(spark, f"{store}/{name}", want.limit(0))
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        ), name
+        parts = [f for f in os.listdir(f"{store}/{name}") if f.startswith("_batch=")]
+        assert parts == ([] if not rows else ["_batch=-1"]), name
+    (marker,) = spark.read.parquet(f"{store}/_corpus_id_{gate}").collect()
+    fp = content_fingerprint(corpus, ["doc_id", "text"])
+    assert tuple(marker) == fp
+    if not rows:
+        assert fp == (0, 0, 0)

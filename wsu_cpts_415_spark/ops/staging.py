@@ -37,7 +37,7 @@ import time
 from typing import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 
 def _ctx_token(sc) -> str:
@@ -340,6 +340,35 @@ def _docs_stat(sf_dir: str):
         return None
 
 
+def fingerprint_aggs(cols: list[str]) -> list[Column]:
+    """The three aggregates of ``content_fingerprint`` over ``cols``,
+    named as the streaming gates' marker columns (``n_docs``,
+    ``xor_hash``, ``sum_hash``): their one definition, shared by the
+    collected fingerprint and by an ``Observation`` of it on a scan that
+    also does other work."""
+    from pyspark.sql import functions as F
+
+    c = ", ".join(cols)
+    return [
+        F.count(F.lit(1)).alias("n_docs"),
+        F.expr(f"bit_xor(xxhash64({c}))").alias("xor_hash"),
+        F.expr(f"sum(cast(xxhash64('fp2', {c}) as decimal(38,0)))").alias(
+            "sum_hash"
+        ),
+    ]
+
+
+def fingerprint_of(row) -> tuple[int, int, int]:
+    """The ``content_fingerprint`` tuple from a row (or an observed
+    metrics dict) of ``fingerprint_aggs``; an empty input's NULL xor and
+    sum read as 0."""
+    return (
+        int(row["n_docs"]),
+        int(row["xor_hash"] or 0),
+        int(row["sum_hash"] or 0),
+    )
+
+
 def content_fingerprint(df: DataFrame, cols: list[str]) -> tuple[int, int, int]:
     """(row count, xor, seeded sum) of per-row hashes of ``cols``: an
     order-insensitive content identity in one aggregate job.  Two
@@ -349,15 +378,7 @@ def content_fingerprint(df: DataFrame, cols: list[str]) -> tuple[int, int, int]:
     differently-seeded hash makes accidental aliasing negligible (a pair
     of inputs must collide in BOTH linear forms).  The staging layers
     and the streaming gates' restart markers both key on it."""
-    from pyspark.sql import functions as F
-
-    c = ", ".join(cols)
-    row = df.agg(
-        F.count("*"),
-        F.expr(f"bit_xor(xxhash64({c}))"),
-        F.expr(f"sum(cast(xxhash64('fp2', {c}) as decimal(38,0)))"),
-    ).collect()[0]
-    return (int(row[0]), int(row[1] or 0), int(row[2] or 0))
+    return fingerprint_of(df.agg(*fingerprint_aggs(cols)).collect()[0])
 
 
 def _corpus_fp(spark: SparkSession, sf_dir: str):

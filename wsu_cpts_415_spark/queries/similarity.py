@@ -45,19 +45,21 @@ _DUCK_SHINGLES_LIST = (
 )
 
 
-def _spark_shingled(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingles) with tokens/shingles materialized as real
-    columns.  Nested lambdas over an inline expression would re-evaluate
-    split(text) for every shingle position and every seed (measured 40 s
-    vs 0.3 s at sf0.1); staging each array through a Project computes it
-    once per row."""
-    toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
+def _spark_shingled(docs: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, shingles) with tokens/shingles materialized as
+    real columns.  Nested lambdas over an inline expression would
+    re-evaluate split(text) for every shingle position and every seed
+    (measured 40 s vs 0.3 s at sf0.1); staging each array through a
+    Project computes it once per row.  ``keep`` names columns of
+    ``docs`` carried through unchanged."""
+    toks = docs.select("doc_id", *keep, F.split("text", " ").alias("toks"))
     # size < 2 guard: Spark's sequence(1, 0) counts DOWN to [1, 0] and
     # element_at(toks, 0) throws, where DuckDB's generate_series(1, 0)
     # is simply empty -- a one-word document must yield an empty shingle
     # set in both engines (and must not crash a streaming ingest batch)
     return toks.select(
         "doc_id",
+        *keep,
         F.expr(
             "CASE WHEN size(toks) < 2 THEN cast(array() as array<string>)"
             " ELSE array_distinct(transform(sequence(1, size(toks) - 1),"
@@ -86,12 +88,13 @@ _SPARK_BASE_HASHES = (
 )
 
 
-def _spark_hashed(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingles, hs): shingle set + base hashes, each
+def _spark_hashed(docs: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, shingles, hs): shingle set + base hashes, each
     materialized once per row (base hash already reduced mod p so the
-    seeded multiply never overflows int64)."""
-    return _spark_shingled(docs).select(
-        "doc_id", "shingles", F.expr(_SPARK_BASE_HASHES).alias("hs")
+    seeded multiply never overflows int64); ``keep`` as in
+    ``_spark_shingled``."""
+    return _spark_shingled(docs, *keep).select(
+        "doc_id", *keep, "shingles", F.expr(_SPARK_BASE_HASHES).alias("hs")
     )
 
 

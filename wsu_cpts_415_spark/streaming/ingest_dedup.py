@@ -17,17 +17,22 @@ Each micro-batch of arriving documents is gated BEFORE landing:
      against everything batch N admitted.
 
 Landing (``_land``, shared with streaming/line_gate.py): the admitted
-rows and their store projections are materialized ONCE, by an eager
-local checkpoint whose job also counts them (an ``Observation``; no
-probe job).  The accepted write goes first, then the three store
-appends run concurrently, all from that materialization.  Its lineage
-cannot reach the standing stores, so no write re-runs the gate against
-stores that earlier writes of the same batch have changed.  Its blocks
-are batch-sized, and Spark's ContextCleaner removes them once the
-driver JVM garbage-collects the frame, which it may as soon as the
-batch body returns.  The gate and the landing scan the micro-batch
-once, and the standing stores are read with their written schemas (no
+rows and their store projections are materialized ONCE by
+``_materialize_and_write``, an eager local checkpoint whose job also
+counts them (an ``Observation``; no probe job).  The accepted write
+goes first, then the three store appends run concurrently, all from
+that materialization.  Its lineage cannot reach the standing stores,
+so no write re-runs the gate against stores that earlier writes of the
+same batch have changed.  Its batch-sized blocks are released once the
+writes finish.  The gate and the landing scan the micro-batch once,
+and the standing stores are read with their written schemas (no
 footer-inference job).
+
+Init (``_init_stores``, shared too) builds the stores through the same
+helper: one corpus scan is materialized as the rows every store derives
+from, observes the corpus fingerprint on the way (no fingerprint job),
+and feeds the concurrent store writes; the restart marker is written
+last, from a JVM-side frame, so init starts no Python worker.
 
 Exactly-once: the foreachBatch protocol of streaming/jobs.py -- every
 store write is this batch's ``_batch=<id>`` partition, so a batch
@@ -60,7 +65,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
-from decimal import Decimal
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -69,8 +73,13 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
-from wsu_cpts_415_spark.ops.staging import content_fingerprint
+from wsu_cpts_415_spark.ops.staging import (
+    content_fingerprint,
+    fingerprint_aggs,
+    fingerprint_of,
+)
 from wsu_cpts_415_spark.queries.similarity import (
+    _spark_hashed,
     bands_from_hashed,
     bands_of,
     hashed_of,
@@ -131,17 +140,40 @@ def _read_store(
     return df.drop("_batch")
 
 
+# the standing stores' base rows, derived from the (doc_id, digest, hs,
+# h64) rows both the per-batch landing and the corpus build materialize
+_STORES: dict[str, Callable[[DataFrame], DataFrame]] = {
+    "digests": lambda d: d.select("doc_id", "digest"),
+    "bands": bands_from_hashed,
+    "shingles": lambda d: d.select("doc_id", "h64"),
+}
+
+_FP_COLS = ["doc_id", "text"]
+_MARKER_SCHEMA = "n_docs long, xor_hash long, sum_hash decimal(38,0)"
+
+
+def _overwrite_base(df: DataFrame, base: str) -> None:
+    """Replace the whole store at ``base`` by ``df`` as its ``_batch=-1``
+    partition (every appended ``_batch>=0`` partition goes with it)."""
+    df.withColumn("_batch", F.lit(-1)).write.mode("overwrite").partitionBy(
+        "_batch"
+    ).parquet(base)
+
+
 def _init_stores(
     spark: SparkSession,
     corpus_docs: DataFrame,
     store_dir: str,
     gate: str,
-    stores: dict[str, DataFrame],
+    project: Callable[[DataFrame], DataFrame],
+    stores: dict[str, Callable[[DataFrame], DataFrame]],
 ) -> None:
     """Build each named standing store under ``store_dir`` from the
     corpus (the nightly maintenance job's output) as its base
     ``_batch=-1`` partition, unless this gate already built them all
-    from this corpus.  ``stores`` maps each store name to its base rows.
+    from this corpus.  ``project`` maps the corpus to the rows every
+    store derives from, and ``stores`` maps each store name to that
+    derivation.
 
     Restart-skip (round 10): the stores are durable tables, so a gate
     RESTART over the same corpus must not pay the O(corpus) rebuild --
@@ -149,58 +181,73 @@ def _init_stores(
     ``_batch>=0`` partition the running gate had appended.  A one-row
     per-gate marker (``_corpus_id_<gate>``, so gates sharing a
     ``store_dir`` never skip each other's builds) holds the corpus's
-    ``content_fingerprint`` over (doc_id, text).  Init is a READ -- one
-    corpus scan for the fingerprint, no store touch -- only when the
-    marker matches AND every named store's footer resolves: a store
-    lost while its marker survived must rebuild, not leave the gate
-    gating against an empty corpus.  Any marker read failure (a corrupt
-    or half-written file raises SparkException) counts as no marker:
-    rebuilding is always the safe answer.  The marker is written LAST,
-    so a crash mid-build leaves none.  Measured x100 (round 10): 102 s
-    build -> ~seconds on restart."""
-    fp = content_fingerprint(corpus_docs, ["doc_id", "text"])
+    ``content_fingerprint`` over (doc_id, text).  The marker is read
+    first, with its pinned schema (one job).  Init is a READ only when
+    the marker matches the corpus's fingerprint (one aggregate, two
+    jobs) AND every named store's schema resolves from its footers (one
+    schema-inference job per store): a store lost while its marker
+    survived must rebuild, not leave the gate gating against an empty
+    corpus.  Any marker read failure (missing, corrupt or half-written,
+    or an older marker without the ``sum_hash`` column) counts as no
+    marker, and no marker skips straight to the build: rebuilding is
+    always the safe answer.
+
+    The build scans the corpus once: ``project``'s rows are materialized
+    by ``_materialize_and_write``, whose job also observes the
+    fingerprint (``ops.staging.fingerprint_aggs``, an ``Observation`` on
+    the scan; no separate fingerprint job), and every store is written
+    from them concurrently; only when AQE drops that observation (see
+    ``_materialize_and_write``) is the fingerprint computed directly.
+    The marker is written LAST, from a one-row JVM-side frame (no Python
+    worker), so a crash mid-build leaves none.  Measured x100 (round
+    10): 102 s build -> ~seconds on restart."""
     marker = f"{store_dir}/_corpus_id_{gate}"
     try:
-        (row,) = spark.read.parquet(marker).collect()
-        if (row["n_docs"], row["xor_hash"], int(row["sum_hash"])) == fp:
-            for name in stores:  # footer reads only, no job
+        (row,) = spark.read.schema(_MARKER_SCHEMA).parquet(marker).collect()
+    except Exception:
+        row = None
+    if row is not None and tuple(row) == content_fingerprint(corpus_docs, _FP_COLS):
+        try:
+            for name in stores:
                 spark.read.parquet(f"{store_dir}/{name}").schema
             return
-    except Exception:
-        pass
-    for name, rows in stores.items():
-        rows.withColumn("_batch", F.lit(-1)).write.mode(
-            "overwrite"
-        ).partitionBy("_batch").parquet(f"{store_dir}/{name}")
-    spark.createDataFrame(
-        [(fp[0], fp[1], Decimal(fp[2]))],
-        "n_docs long, xor_hash long, sum_hash decimal(38,0)",
-    ).coalesce(1).write.mode("overwrite").parquet(marker)
+        except Exception:
+            pass
+    obs = Observation()
+    observed = _materialize_and_write(
+        project(corpus_docs.observe(obs, *fingerprint_aggs(_FP_COLS))),
+        obs,
+        _overwrite_base,
+        lambda _: [{f"{store_dir}/{n}": d for n, d in stores.items()}],
+    )
+    n_docs, xor_hash, sum_hash = (
+        content_fingerprint(corpus_docs, _FP_COLS)
+        if observed is None
+        else fingerprint_of(observed)
+    )
+    spark.range(0, 1, 1, 1).select(
+        F.lit(n_docs).cast("long").alias("n_docs"),
+        F.lit(xor_hash).cast("long").alias("xor_hash"),
+        F.lit(str(sum_hash)).cast("decimal(38,0)").alias("sum_hash"),
+    ).write.mode("overwrite").parquet(marker)
+
+
+def _store_rows(docs: DataFrame) -> DataFrame:
+    """(doc_id, digest, hs, h64): the rows every dedup-gate store derives
+    from (``_STORES``), one per document, computed in one scan."""
+    return _spark_hashed(docs.select("doc_id", "text", _digest()), "digest").select(
+        "doc_id", "digest", "hs", F.expr(_H64).alias("h64")
+    )
 
 
 def init_standing_stores(
     spark: SparkSession, corpus_docs: DataFrame, store_dir: str
 ) -> None:
     """Materialize the standing digest / band / shingle stores from the
-    corpus through ``_init_stores`` (restart-skip included).  The build
-    computes the shingle/hash projection ONCE and derives bands +
-    compact shingle arrays from it (``persist`` is lazy: a restart-skip
-    never computes it)."""
-    hashed = hashed_of(corpus_docs).persist()
-    try:
-        _init_stores(
-            spark,
-            corpus_docs,
-            store_dir,
-            "dedup",
-            {
-                "digests": _digests_of(corpus_docs),
-                "bands": bands_from_hashed(hashed),
-                "shingles": hashed.select("doc_id", F.expr(_H64).alias("h64")),
-            },
-        )
-    finally:
-        hashed.unpersist()
+    corpus through ``_init_stores`` (restart-skip included).  A build
+    materializes the corpus's (doc_id, digest, hs, h64) rows once and
+    writes the three stores from them concurrently."""
+    _init_stores(spark, corpus_docs, store_dir, "dedup", _store_rows, _STORES)
 
 
 def gate_batch(
@@ -321,6 +368,55 @@ def gate_against(
     return survivors.join(admitted, "doc_id")
 
 
+def _materialize_and_write(
+    rows: DataFrame,
+    obs: Observation,
+    write: Callable[[DataFrame, str], None],
+    waves: Callable[[dict | None], list[dict[str, Callable[[DataFrame], DataFrame]]]],
+) -> dict | None:
+    """Materialize ``rows`` ONCE, write from it, and return the metrics
+    observed on the way.
+
+    ``rows`` carries ``obs`` (an ``Observation`` anywhere in its plan),
+    and the eager local checkpoint that materializes it fills ``obs`` in
+    the same job: no probe job.  The checkpoint cuts the lineage, so no
+    write re-runs ``rows``' plan (for a gated batch, a plan that reads
+    the very stores the batch appends to).  ``waves(metrics)`` lists the
+    writes as ``{base_dir: derive}`` waves, run one after another; the
+    writes of one wave run concurrently, each ``write(derive(landing),
+    base_dir)`` (independent jobs, so a wave's wall is its slowest
+    write, not the sum of their fixed write/commit overheads).  The
+    writer threads inherit the caller's job group and local properties,
+    so job-group accounting and ``cancelJobGroup`` cover them.  The
+    checkpoint's blocks are released before return.
+
+    The metrics are None when the observation was lost: AQE replaces
+    the consumers of a shuffle stage that came out empty by an empty
+    relation, and an observation inside that stage goes with them (the
+    line gate's build over a corpus with no lines)."""
+    spark = rows.sparkSession
+    landing = rows.localCheckpoint(eager=True)
+    try:
+        metrics = obs.get if obs._jo.getRow().size() else None
+
+        def run(base: str, derive: Callable[[DataFrame], DataFrame]) -> None:
+            write(derive(landing), base)
+
+        for wave in waves(metrics):
+            with ThreadPoolExecutor(max_workers=len(wave)) as pool:
+                # one wrapper per task: each thread gets its own copy of
+                # the caller's local properties
+                futures = [
+                    pool.submit(inheritable_thread_target(spark)(run), base, derive)
+                    for base, derive in wave.items()
+                ]
+                for f in futures:
+                    f.result()
+        return metrics
+    finally:
+        landing._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def _land(
     gated: DataFrame,
     batch_id: int,
@@ -328,16 +424,8 @@ def _land(
     accepted_cols: list[str],
     derived: dict[str, Callable[[DataFrame], DataFrame]],
 ) -> int:
-    """Land one gated micro-batch and return the number of rows admitted.
-
-    ``gated`` is materialized ONCE, by an eager local checkpoint whose
-    job also counts its rows (an ``Observation``, no separate probe).
-    The checkpoint cuts the lineage: nothing written below can re-run
-    the gate, whose plan reads the standing stores this step appends
-    to.  The checkpoint's blocks hold the admitted rows of one batch;
-    Spark's ContextCleaner removes them once the driver JVM has
-    garbage-collected the frame, which it may as soon as this call
-    returns (at the latest on the cleaner's periodic GC).
+    """Land one gated micro-batch through ``_materialize_and_write`` and
+    return the number of rows admitted (observed on its checkpoint).
 
     Zero admitted: nothing is written, and every ``_batch=<id>``
     partition a prior attempt of this batch left (the accepted store
@@ -346,35 +434,22 @@ def _land(
     checkpoint) is dropped, since dynamic overwrite with zero rows
     touches nothing.  Otherwise the ``accepted_cols`` projection lands
     in ``accepted_dir`` FIRST; then each ``derived[base_dir](landing)``
-    is written concurrently (independent batch-sized jobs, so the wall
-    is the slowest write, not the sum of their fixed write/commit
-    overheads).  The writer threads inherit the caller's job group and
-    local properties, so job-group accounting and ``cancelJobGroup``
-    cover them."""
-    spark = gated.sparkSession
+    is written concurrently, every write into the batch's own partition
+    (``jobs.write_batch``)."""
     obs = Observation()
-    landing = gated.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
-    )
-    admitted = obs.get["n"]
+    admitted = _materialize_and_write(
+        gated.observe(obs, F.count(F.lit(1)).alias("n")),
+        obs,
+        lambda df, base: write_batch(df, batch_id, base),
+        lambda m: (
+            [{accepted_dir: lambda d: d.select(*accepted_cols)}, derived]
+            if m["n"]
+            else []
+        ),
+    )["n"]
     if admitted == 0:
         for base in (accepted_dir, *derived):
-            drop_batch(spark, base, batch_id)
-        return 0
-    write_batch(landing.select(*accepted_cols), batch_id, accepted_dir)
-
-    def write(base: str, derive: Callable[[DataFrame], DataFrame]) -> None:
-        write_batch(derive(landing), batch_id, base)
-
-    with ThreadPoolExecutor(max_workers=len(derived)) as pool:
-        # one wrapper per task: each thread gets its own copy of the
-        # caller's local properties
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(write), base, derive)
-            for base, derive in derived.items()
-        ]
-        for f in futures:
-            f.result()
+            drop_batch(gated.sparkSession, base, batch_id)
     return admitted
 
 
@@ -403,11 +478,7 @@ def apply_ingest_batch(
         batch_id,
         accepted_dir,
         batch_df.columns,
-        {
-            f"{store_dir}/digests": lambda d: d.select("doc_id", "digest"),
-            f"{store_dir}/bands": bands_from_hashed,
-            f"{store_dir}/shingles": lambda d: d.select("doc_id", "h64"),
-        },
+        {f"{store_dir}/{name}": derive for name, derive in _STORES.items()},
     )
 
 

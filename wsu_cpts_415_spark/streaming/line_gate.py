@@ -156,13 +156,16 @@ def init_line_store(
     spark: SparkSession, corpus_docs: DataFrame, store_dir: str
 ) -> None:
     """Bootstrap the standing line-frequency store from a corpus through
-    ``ingest_dedup._init_stores`` (restart-skip included)."""
+    ``ingest_dedup._init_stores`` (restart-skip included).  A build
+    materializes the corpus's line counts once and writes them as the
+    store."""
     _init_stores(
         spark,
         corpus_docs,
         store_dir,
         "line",
-        {"line_counts": doc_line_counts(corpus_docs)},
+        doc_line_counts,
+        {"line_counts": lambda counts: counts},
     )
 
 
