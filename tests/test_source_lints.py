@@ -83,10 +83,10 @@ BROADCAST_ALLOWLIST: dict[str, dict[str, tuple[int, str]]] = {
         "spread": (1, "scalar: global stddev"),
     },
     "streaming/ingest_dedup.py": {
-        "b_bands": (1, "sliver: current micro-batch's LSH band rows"),
-        "b_sh": (1, "sliver: current micro-batch's shingle sets"),
-        "sa": (1, "sliver: shingle sets of batch-internal candidate docs"),
-        "sb": (1, "sliver: shingle sets of batch-internal candidate docs"),
+        "b_bands": (2, "sliver: current micro-batch's LSH band rows with"
+                       " their shingle hashes (corpus join + self-join)"),
+        "rejected": (1, "sliver: rejected batch ids, one long per verified"
+                        " (batch doc, candidate, band)"),
     },
     "queries/aggregates.py": {
         "region": (1, "fixed-dim: region is 5 rows by TPC-H spec"),
@@ -401,4 +401,25 @@ def test_streaming_builds_no_dataframe_from_python_rows():
         "createDataFrame in streaming/ starts a Python worker -- build "
         "the frame JVM-side (spark.range(1).select(F.lit(...))):\n"
         + "\n".join(offenders)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Lint #6: the streaming layer derives no schema from an empty frame.  A
+# ``.limit(0)`` there was how the gates typed their standing-store reads:
+# it built the store's whole derivation pipeline on every micro-batch
+# only to read its schema.  Pin the schema next to the store instead
+# (``ingest_dedup.STORE_SCHEMAS``, ``line_gate.LINE_COUNTS_SCHEMA``).
+
+
+def test_streaming_derives_no_schema_from_an_empty_frame():
+    offenders = [
+        f"{path.relative_to(PKG.parent)}:{lineno}: {line.strip()}"
+        for path in sorted(_STREAMING.glob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if ".limit(0)" in line
+    ]
+    assert not offenders, (
+        ".limit(0) in streaming/ builds a pipeline only to read its "
+        "schema -- pin the store's schema instead:\n" + "\n".join(offenders)
     )

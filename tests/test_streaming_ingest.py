@@ -23,10 +23,13 @@ from wsu_cpts_415_spark.streaming.ingest_dedup import (
 
 SCHEMA = "doc_id long, text string"
 
-# Spark jobs one BATCH1 micro-batch may run: measured 15 on 4 cores.
-# The probe-and-re-read landing ran 36-37 in the caller's job group and
-# 3 more (the concurrent store writes) outside it.
-JOB_BOUND = 15
+# Spark jobs one BATCH1 micro-batch may run: measured 10 on 4 cores --
+# the landing checkpoint's 6 query-stage jobs, the accepted write and
+# the three concurrent store writes.  Broadcasting the survivors' shingle
+# arrays apart from their bands and joining the admitted ids back to
+# the survivors made it 15; the probe-and-re-read landing ran 36-37 in
+# the caller's job group and 3 more (the store writes) outside it.
+JOB_BOUND = 10
 
 
 def _write(spark, rows, path):
@@ -190,6 +193,26 @@ def test_one_word_document_does_not_crash_the_gate(spark, stores):
     _write(spark, [(40, "solo"), (41, "iota kappa iota kappa")], stores["src"])
     _run(spark, stores["src"], stores["store"], stores["accepted"], stores["ckpt"])
     assert _accepted_ids(spark, stores["accepted"]) == [40, 41]
+
+
+def test_repeated_doc_id_keeps_each_text_with_its_own_hashes(spark, stores):
+    """A micro-batch that offers one ``doc_id`` with two different
+    (novel, unrelated) texts admits both rows, and each row carries the
+    digest and shingle hashes of its OWN text -- those rows are what the
+    digest, band and shingle stores receive."""
+    import hashlib
+
+    from wsu_cpts_415_spark.streaming.ingest_dedup import _store_rows, gate_batch
+
+    rows = [(30, "kappa lambda kappa lambda"), (30, "omicron pi rho sigma")]
+    batch = spark.createDataFrame(rows, SCHEMA)
+    got = gate_batch(batch, stores["store"]).collect()
+    assert len(got) == 2
+    assert sorted(r["text"] for r in got) == sorted(t for _, t in rows)
+    for r in got:
+        assert r["digest"] == hashlib.md5(r["text"].encode()).hexdigest()
+    want = {r["digest"]: (r["hs"], r["h64"]) for r in _store_rows(batch).collect()}
+    assert {r["digest"]: (r["hs"], r["h64"]) for r in got} == want
 
 
 def test_reinit_same_corpus_is_a_read_and_preserves_batches(
@@ -409,12 +432,13 @@ def _grouped_jobs(spark, group, fn):
 # Spark jobs one init may run, on 4 cores: a cold build is the corpus
 # checkpoint (which also observes the fingerprint; one job per AQE query
 # stage), one write per store and the marker write; a restart is the
-# marker read, the fingerprint aggregate and one footer read per store.
-# The fingerprint job, createDataFrame marker and schema-inferring
-# marker read made a cold build 6 (dedup) and 6 (line) jobs and a
-# restart 7 and 5.
+# marker read and the fingerprint aggregate (the stores' presence is a
+# FileSystem check, no job).  The fingerprint job, createDataFrame
+# marker and schema-inferring marker read made a cold build 6 (dedup)
+# and 6 (line) jobs and a restart 7 and 5; one footer read per store
+# made a restart 6 and 4.
 INIT_JOB_BOUND = {"dedup": 5, "line": 6}
-RESTART_JOB_BOUND = {"dedup": 6, "line": 4}
+RESTART_JOB_BOUND = {"dedup": 3, "line": 3}
 
 INIT_CORPUS = [
     (1, "alpha beta alpha beta"),
@@ -446,28 +470,54 @@ def test_init_job_count_guard(spark, tmp_path, gate, monkeypatch):
     assert n <= INIT_JOB_BOUND[gate], f"{n} jobs for a cold {gate} init"
 
 
+def _stamps(store):
+    import os
+
+    return {d: os.stat(os.path.join(store, d)).st_mtime_ns for d in os.listdir(store)}
+
+
 @pytest.mark.parametrize("gate", ["dedup", "line"])
 def test_restart_job_count_guard(spark, tmp_path, gate):
     """A restart over the same corpus and intact stores is a read: the
-    marker read (pinned schema), the fingerprint and the footer checks,
-    within a bounded number of jobs, all in the caller's job group."""
-    import os
-
+    marker read (pinned schema), the stores' presence checks and the
+    fingerprint, within a bounded number of jobs, all in the caller's
+    job group."""
     corpus = spark.createDataFrame(INIT_CORPUS, SCHEMA)
     store = str(tmp_path / "store")
     init = _init_for(gate)
     init(spark, corpus, store)
-    stamp = {
-        d: os.stat(os.path.join(store, d)).st_mtime_ns for d in os.listdir(store)
-    }
+    stamp = _stamps(store)
     n, escaped = _grouped_jobs(
         spark, f"restart-census-{gate}", lambda: init(spark, corpus, store)
     )
     assert not escaped, f"jobs outside the caller's job group: {sorted(escaped)}"
     assert n <= RESTART_JOB_BOUND[gate], f"{n} jobs for a {gate} restart"
-    assert {
-        d: os.stat(os.path.join(store, d)).st_mtime_ns for d in os.listdir(store)
-    } == stamp, "the restart rewrote a store or the marker"
+    assert _stamps(store) == stamp, "the restart rewrote a store or the marker"
+
+
+@pytest.mark.parametrize("gate", ["dedup", "line"])
+def test_restart_over_an_empty_corpus_is_a_read(spark, tmp_path, gate):
+    """Stores built from an empty corpus hold no parquet file, yet a
+    restart over the same (empty) corpus still reads them instead of
+    rebuilding."""
+    corpus = spark.createDataFrame([], SCHEMA)
+    store = str(tmp_path / "store")
+    init = _init_for(gate)
+    init(spark, corpus, store)
+    stamp = _stamps(store)
+    init(spark, corpus, store)
+    assert _stamps(store) == stamp, "the restart rewrote a store or the marker"
+
+
+def test_restart_rebuilds_a_store_without_its_success_file(spark, stores):
+    """A store whose write never completed (no ``_SUCCESS`` file) is
+    rebuilt on restart even though its marker matches the corpus."""
+    import os
+
+    os.remove(f"{stores['store']}/bands/_SUCCESS")
+    corpus = spark.createDataFrame([(1, "alpha beta alpha beta")], SCHEMA)
+    init_standing_stores(spark, corpus, stores["store"])
+    assert os.path.exists(f"{stores['store']}/bands/_SUCCESS")
 
 
 @pytest.mark.parametrize(
@@ -494,11 +544,15 @@ def test_init_stores_equal_their_direct_derivations(spark, tmp_path, gate, rows)
     from wsu_cpts_415_spark.ops.staging import content_fingerprint
     from wsu_cpts_415_spark.queries.similarity import bands_of
     from wsu_cpts_415_spark.streaming.ingest_dedup import (
+        STORE_SCHEMAS,
         _digests_of,
         _h64_of,
         _read_store,
     )
-    from wsu_cpts_415_spark.streaming.line_gate import doc_line_counts
+    from wsu_cpts_415_spark.streaming.line_gate import (
+        LINE_COUNTS_SCHEMA,
+        doc_line_counts,
+    )
 
     corpus = spark.createDataFrame(rows, SCHEMA)
     store = str(tmp_path / "store")
@@ -510,9 +564,11 @@ def test_init_stores_equal_their_direct_derivations(spark, tmp_path, gate, rows)
     persisted = jsc.getPersistentRDDs().size()
     _init_for(gate)(spark, corpus, store)
     assert jsc.getPersistentRDDs().size() == persisted, "init left blocks cached"
+    schemas = {**STORE_SCHEMAS, "line_counts": LINE_COUNTS_SCHEMA}
     for name, derive in derivations.items():
         want = derive(corpus)
-        got = _read_store(spark, f"{store}/{name}", want.limit(0))
+        got = _read_store(spark, f"{store}/{name}", schemas[name])
+        assert got.dtypes == want.dtypes, name
         assert sorted(map(tuple, got.collect())) == sorted(
             map(tuple, want.collect())
         ), name

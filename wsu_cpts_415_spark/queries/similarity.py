@@ -686,20 +686,24 @@ def bands_of(docs: DataFrame) -> DataFrame:
     return bands_from_hashed(_spark_hashed(docs))
 
 
-def bands_from_hashed(hashed: DataFrame) -> DataFrame:
-    """Band table from an existing (doc_id, shingles, hs) projection --
-    lets callers that already materialized the hash table (the ingest
-    gate stages it once per batch) skip re-deriving the shingle math."""
+def bands_from_hashed(hashed: DataFrame, *keep: str) -> DataFrame:
+    """Band table (doc_id, *keep, b, h1, h2) from an existing projection
+    carrying ``hs`` -- lets callers that already hold the hash table
+    (the ingest gate derives it once per batch) skip re-deriving the
+    shingle math.  ``keep`` names columns of ``hashed`` carried onto
+    every band row (the gate carries ``h64`` to verify candidates)."""
     return (
         hashed
-        .select("doc_id", F.expr(_spark_minhash_sig()).alias("sig"))
+        .select("doc_id", *keep, F.expr(_spark_minhash_sig()).alias("sig"))
         .select(
             "doc_id",
+            *keep,
             F.explode(F.expr(f"sequence(0, {N_BANDS - 1})")).alias("b"),
             "sig",
         )
         .select(
             "doc_id",
+            *keep,
             "b",
             F.expr("element_at(sig, 2 * b + 1)").alias("h1"),
             F.expr("element_at(sig, 2 * b + 2)").alias("h2"),

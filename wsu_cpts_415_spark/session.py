@@ -85,6 +85,14 @@ def get_spark(
         # store, scan, and shuffle-spill
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.ui.enabled": "false",
+        # PySpark 4 captures the Python call site on every Column and
+        # functions call: an active-session lookup, a conf read and an
+        # origin set + clear over Py4J, plus a Python stack walk.  Off,
+        # error messages lose that call-site context, and building one
+        # dedup-gate micro-batch's plan (streaming/ingest_dedup.py
+        # gate_batch) takes 510-650 Py4J round trips instead of
+        # 1,130-1,250 (measured over 4 warm batches on 4 cores).
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         "spark.sql.shuffle.partitions": str(
             shuffle_partitions if shuffle_partitions is not None else _DEFAULT_CPUS
         ),

@@ -7,11 +7,14 @@ Each micro-batch of arriving documents is gated BEFORE landing:
   1. exact gate -- batch docs whose text digest already exists in the
      standing digest store are dropped (within-batch exact dups keep the
      min doc_id: one ``min(struct(doc_id, ...))`` aggregate per digest);
-  2. near-dup gate -- the batch's LSH band table joins the standing band
-     store (batch side broadcast: a per-batch sliver), collisions are
-     verified by exact shingle Jaccard, and docs at/above the threshold
-     are dropped; within-batch verified pairs drop the larger doc_id
-     (deterministic greedy);
+  2. near-dup gate -- each surviving doc becomes one hashed row (its
+     batch columns, digest, base hashes and 64-bit shingle hashes); its
+     LSH band rows carry those shingle hashes and are broadcast (a
+     per-batch sliver) into both the join with the standing band store
+     and the within-batch band self-join, collisions are verified by
+     exact shingle Jaccard on the arrays each side already holds, and
+     docs at/above the threshold are dropped; within-batch verified
+     pairs drop the larger doc_id (deterministic greedy);
   3. survivors land in the accepted store AND their digests / bands /
      shingles are appended to the standing stores, so batch N+1 dedups
      against everything batch N admitted.
@@ -24,9 +27,11 @@ goes first, then the three store appends run concurrently, all from
 that materialization.  Its lineage cannot reach the standing stores,
 so no write re-runs the gate against stores that earlier writes of the
 same batch have changed.  Its batch-sized blocks are released once the
-writes finish.  The gate and the landing scan the micro-batch once,
-and the standing stores are read with their written schemas (no
-footer-inference job).
+writes finish.  The gate and the landing scan the micro-batch once in
+10 Spark jobs (6 query stages of the checkpoint, 4 writes), and the
+standing stores are read with their pinned schemas (``STORE_SCHEMAS``:
+no footer-inference job, and no store derivation is built only to type
+the read).
 
 Init (``_init_stores``, shared too) builds the stores through the same
 helper: one corpus scan is materialized as the rows every store derives
@@ -70,7 +75,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
 from wsu_cpts_415_spark.ops.staging import (
@@ -81,11 +85,11 @@ from wsu_cpts_415_spark.ops.staging import (
 from wsu_cpts_415_spark.queries.similarity import (
     _spark_hashed,
     bands_from_hashed,
-    bands_of,
     hashed_of,
 )
 from wsu_cpts_415_spark.streaming.jobs import (
     drop_batch,
+    path_exists,
     run_foreach_batch,
     write_batch,
 )
@@ -114,27 +118,30 @@ def _h64_of(docs: DataFrame) -> DataFrame:
 def _read_store(
     spark: SparkSession,
     path: str,
-    empty: DataFrame,
+    schema: str,
     exclude_batch: int | None = None,
 ) -> DataFrame:
-    """The standing store at ``path``, read with the schema it was
-    written with (``empty``'s schema plus ``_batch int``), so the read
-    infers nothing from parquet footers and costs no job.
+    """The standing store at ``path``, read with ``schema`` -- the DDL
+    of the rows it was written with, pinned next to the store's
+    derivation (``STORE_SCHEMAS``, ``line_gate.LINE_COUNTS_SCHEMA``) --
+    plus ``_batch int``.  The read infers nothing from parquet footers
+    and costs no job, and planning it builds no derivation pipeline only
+    to read that pipeline's schema.
 
     A missing store (first run with no ``--init-corpus``: the standing
-    corpus starts empty and batch 0 creates the store) reads as
-    ``empty`` instead of crashing the stream with PATH_NOT_FOUND from
-    inside the first micro-batch.  ``exclude_batch`` makes the gate
+    corpus starts empty and batch 0 creates the store) reads as an empty
+    frame of ``schema``, built on the JVM side by a path-less read,
+    instead of crashing the stream with PATH_NOT_FOUND from inside the
+    first micro-batch.  ``exclude_batch`` makes the gate
     REPLAY-DETERMINISTIC: a batch replayed after a crash that landed some
     of its own store partitions must not gate against them (it would
     see its own rows as standing and admit nothing, leaving the stores
     missing this batch's rows forever), so the read drops the
     ``_batch=<exclude_batch>`` partition."""
-    schema = StructType([*empty.schema, StructField("_batch", IntegerType())])
     try:
-        df = spark.read.schema(schema).parquet(path)
+        df = spark.read.schema(f"{schema}, _batch int").parquet(path)
     except AnalysisException:  # store not created yet -> empty corpus
-        return empty
+        return spark.read.schema(schema).parquet()
     if exclude_batch is not None:
         df = df.filter(F.col("_batch") != exclude_batch)
     return df.drop("_batch")
@@ -146,6 +153,12 @@ _STORES: dict[str, Callable[[DataFrame], DataFrame]] = {
     "digests": lambda d: d.select("doc_id", "digest"),
     "bands": bands_from_hashed,
     "shingles": lambda d: d.select("doc_id", "h64"),
+}
+# ... and the schema each one is written and read with
+STORE_SCHEMAS = {
+    "digests": "doc_id long, digest string",
+    "bands": "doc_id long, b int, h1 long, h2 long",
+    "shingles": "doc_id long, h64 array<long>",
 }
 
 _FP_COLS = ["doc_id", "text"]
@@ -183,11 +196,12 @@ def _init_stores(
     ``store_dir`` never skip each other's builds) holds the corpus's
     ``content_fingerprint`` over (doc_id, text).  The marker is read
     first, with its pinned schema (one job).  Init is a READ only when
-    the marker matches the corpus's fingerprint (one aggregate, two
-    jobs) AND every named store's schema resolves from its footers (one
-    schema-inference job per store): a store lost while its marker
-    survived must rebuild, not leave the gate gating against an empty
-    corpus.  Any marker read failure (missing, corrupt or half-written,
+    every named store holds the ``_SUCCESS`` file of a completed write
+    (checked through the Hadoop FileSystem API: no job) AND the marker
+    matches the corpus's fingerprint (one aggregate, two jobs): a store
+    lost (or left half-written) while its marker survived must rebuild,
+    not leave the gate gating against an empty corpus.  Any marker read
+    failure (missing, corrupt or half-written,
     or an older marker without the ``sum_hash`` column) counts as no
     marker, and no marker skips straight to the build: rebuilding is
     always the safe answer.
@@ -206,13 +220,12 @@ def _init_stores(
         (row,) = spark.read.schema(_MARKER_SCHEMA).parquet(marker).collect()
     except Exception:
         row = None
-    if row is not None and tuple(row) == content_fingerprint(corpus_docs, _FP_COLS):
-        try:
-            for name in stores:
-                spark.read.parquet(f"{store_dir}/{name}").schema
-            return
-        except Exception:
-            pass
+    if (
+        row is not None
+        and all(path_exists(spark, f"{store_dir}/{n}/_SUCCESS") for n in stores)
+        and tuple(row) == content_fingerprint(corpus_docs, _FP_COLS)
+    ):
+        return
     obs = Observation()
     observed = _materialize_and_write(
         project(corpus_docs.observe(obs, *fingerprint_aggs(_FP_COLS))),
@@ -257,23 +270,31 @@ def gate_batch(
     exclude_batch: int | None = None,
 ) -> DataFrame:
     """Pure gating logic (no writes): ``gate_against`` over the standing
-    stores under ``store_dir``, each read by ``_read_store`` (a missing
-    store is an empty corpus; ``exclude_batch`` keeps replays
-    deterministic)."""
+    stores under ``store_dir``, each read by ``_read_store`` with its
+    pinned schema (a missing store is an empty corpus; ``exclude_batch``
+    keeps replays deterministic)."""
     spark = batch_df.sparkSession
-    nil = batch_df.limit(0)
 
-    def read(name: str, empty: DataFrame) -> DataFrame:
-        return _read_store(spark, f"{store_dir}/{name}", empty, exclude_batch)
+    def read(name: str) -> DataFrame:
+        return _read_store(
+            spark, f"{store_dir}/{name}", STORE_SCHEMAS[name], exclude_batch
+        )
 
-    std_digests = read("digests", _digests_of(nil)).select("digest")
-    std_bands = read("bands", bands_of(nil)).select(
+    std_digests = read("digests").select("digest")
+    std_bands = read("bands").select(
         F.col("doc_id").alias("old_doc"), "b", "h1", "h2"
     )
-    std_sh = read("shingles", _h64_of(nil)).select(
+    std_sh = read("shingles").select(
         F.col("doc_id").alias("old_doc"), F.col("h64").alias("old_h64")
     )
     return gate_against(batch_df, std_digests, std_bands, std_sh, threshold)
+
+
+def _verified(a: str, b: str, threshold: float) -> Column:
+    """Exact Jaccard of the 64-bit shingle-hash arrays ``a`` and ``b``
+    reaches ``threshold``."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter.cast("double") / (F.size(a) + F.size(b) - inter) >= threshold
 
 
 def gate_against(
@@ -297,10 +318,18 @@ def gate_against(
 
     Returns the admitted rows: every column of ``batch_df`` plus the
     standing-store projections the landing step writes -- ``digest``,
-    the base hashes ``hs`` (bands) and the compact ``h64`` array.  The
-    plan reads ``batch_df`` once: within-batch exact dedup is one
-    aggregate, ``min(struct(doc_id, ...))`` per digest, and every later
-    step derives from its output."""
+    the base hashes ``hs`` (bands) and the compact ``h64`` array.
+
+    The plan reads ``batch_df`` once: within-batch exact dedup is one
+    aggregate, ``min(struct(doc_id, ...))`` per digest, anti-joined with
+    the standing digests.  Every survivor then becomes ONE ``hashed``
+    row (every batch column, ``digest``, ``hs``, ``h64``), and its band
+    rows carry ``h64`` along, so both candidate sets -- band collisions
+    with the standing corpus and the within-batch band self-join --
+    verify on arrays they already hold (one broadcast band table serves
+    both).  The admitted rows are ``hashed`` minus a broadcast of the
+    rejected ids: no join back to the survivors, so a ``doc_id`` offered
+    twice with two texts stays two rows, each with its own hashes."""
     rest = [c for c in batch_df.columns if c != "doc_id"]
     survivors = (
         batch_df.select(_digest(), F.struct("doc_id", *rest).alias("row"))
@@ -309,6 +338,9 @@ def gate_against(
         .join(std_digests, "digest", "left_anti")
         .select("row.*", "digest")
     )
+    hashed = _spark_hashed(survivors, *rest, "digest").select(
+        "doc_id", *rest, "digest", "hs", F.expr(_H64).alias("h64")
+    )
 
     # near-dup gate: batch bands vs standing bands + within-batch pairs.
     # Candidate pairs are NOT deduplicated before verification: a pair
@@ -316,56 +348,29 @@ def gate_against(
     # band, which costs less on batch-sized inputs than the shuffle a
     # dropDuplicates adds.  Every rejection feeds one left-anti join, so
     # the rejected sets need no distinct either.
-    hashed = hashed_of(survivors).select("doc_id", "hs", F.expr(_H64).alias("h64"))
-    b_bands = bands_from_hashed(hashed)
-    b_sh = hashed.select("doc_id", "h64")
-    cand_corpus = std_bands.join(
-        F.broadcast(b_bands.withColumnRenamed("doc_id", "new_doc")),
-        ["b", "h1", "h2"],
-    ).select("new_doc", "old_doc")
-    inter_c = F.size(F.array_intersect("h64", "old_h64"))
+    b_bands = bands_from_hashed(hashed, "h64")
     rejected_vs_corpus = (
-        cand_corpus.join(
-            F.broadcast(b_sh.withColumnRenamed("doc_id", "new_doc")), "new_doc"
-        )
+        std_bands.join(F.broadcast(b_bands), ["b", "h1", "h2"])
         .join(std_sh, "old_doc")
-        .filter(
-            inter_c.cast("double")
-            / (F.size("h64") + F.size("old_h64") - inter_c)
-            >= threshold
-        )
-        .select("new_doc")
+        .filter(_verified("h64", "old_h64", threshold))
+        .select("doc_id")
     )
     # within-batch near-dups: LSH self-join on the (small) batch band
     # table; the LARGER doc_id of each verified pair is dropped
-    a, c = b_bands.alias("a"), b_bands.alias("c")
-    cand_self = a.join(
-        c,
-        (F.col("a.b") == F.col("c.b"))
-        & (F.col("a.h1") == F.col("c.h1"))
-        & (F.col("a.h2") == F.col("c.h2"))
-        & (F.col("a.doc_id") < F.col("c.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("keep_doc"),
-        F.col("c.doc_id").alias("drop_doc"),
-    )
-    sa = b_sh.select(F.col("doc_id").alias("keep_doc"), F.col("h64").alias("ka"))
-    sb = b_sh.select(F.col("doc_id").alias("drop_doc"), F.col("h64").alias("kb"))
-    inter_s = F.size(F.array_intersect("ka", "kb"))
+    a, c = b_bands.alias("a"), F.broadcast(b_bands).alias("c")
     rejected_in_batch = (
-        cand_self.join(F.broadcast(sa), "keep_doc")
-        .join(F.broadcast(sb), "drop_doc")
-        .filter(
-            inter_s.cast("double") / (F.size("ka") + F.size("kb") - inter_s)
-            >= threshold
+        a.join(
+            c,
+            (F.col("a.b") == F.col("c.b"))
+            & (F.col("a.h1") == F.col("c.h1"))
+            & (F.col("a.h2") == F.col("c.h2"))
+            & (F.col("a.doc_id") < F.col("c.doc_id")),
         )
-        .select(F.col("drop_doc").alias("new_doc"))
+        .filter(_verified("a.h64", "c.h64", threshold))
+        .select(F.col("c.doc_id").alias("doc_id"))
     )
     rejected = rejected_vs_corpus.unionByName(rejected_in_batch)
-    admitted = hashed.join(
-        rejected.withColumnRenamed("new_doc", "doc_id"), "doc_id", "left_anti"
-    )
-    return survivors.join(admitted, "doc_id")
+    return hashed.join(F.broadcast(rejected), "doc_id", "left_anti")
 
 
 def _materialize_and_write(

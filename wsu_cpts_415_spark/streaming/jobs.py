@@ -267,12 +267,21 @@ def write_batch(df: DataFrame, batch_id: int, base_dir: str) -> None:
     )
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop FileSystem API
+    (works on any scheme the session can write; runs no Spark job)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, jpath = _hadoop_path(spark, path)
+    return fs.exists(jpath)
+
+
 def drop_batch(spark: SparkSession, base_dir: str, batch_id: int) -> None:
-    """Remove a ``_batch=<id>`` partition directory if it exists, via the
-    Hadoop FileSystem API (works on any scheme the session can write)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/_batch={batch_id}")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Remove a ``_batch=<id>`` partition directory if it exists."""
+    fs, path = _hadoop_path(spark, f"{base_dir}/_batch={batch_id}")
     if fs.exists(path):
         fs.delete(path, True)
 

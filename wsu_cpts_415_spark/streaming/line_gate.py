@@ -40,6 +40,9 @@ from wsu_cpts_415_spark.streaming.jobs import run_foreach_batch
 # reject a document when at least this fraction of its lines is boilerplate
 LINE_BP_THRESHOLD = 0.5
 
+# the line store's row schema: ``doc_line_counts``'s (digest, n_docs)
+LINE_COUNTS_SCHEMA = "digest long, n_docs long"
+
 
 def line_digests_of(docs: DataFrame) -> DataFrame:
     """(doc_id, digest) at SEGMENT grain -- one row per LINE_TOKENS-token
@@ -137,13 +140,13 @@ def gate_line_batch(
     exclude_batch: int | None = None,
 ) -> DataFrame:
     """Gate ``batch_df`` against the standing line store (read by
-    ``ingest_dedup._read_store``: a missing store is an empty corpus,
-    ``exclude_batch`` keeps replays deterministic), returning the
-    admitted document rows."""
+    ``ingest_dedup._read_store`` with its pinned schema: a missing store
+    is an empty corpus, ``exclude_batch`` keeps replays deterministic),
+    returning the admitted document rows."""
     std = _read_store(
         batch_df.sparkSession,
         f"{store_dir}/line_counts",
-        doc_line_counts(batch_df.limit(0)),
+        LINE_COUNTS_SCHEMA,
         exclude_batch,
     )
     verdicts = gate_lines_against(batch_df, std, threshold)
