@@ -1,6 +1,6 @@
 """PNG presentation sinks: each chart consumes its oracle-checked result
-table and must emit a structurally valid PNG (signature, IHDR dims) with
-both backends -- matplotlib when present, else the stdlib raster path."""
+table and must emit a structurally valid PNG (signature, IHDR dims)
+from the stdlib raster backend."""
 
 from __future__ import annotations
 

@@ -13,8 +13,11 @@ its size is a compile-time constant (geo's 3x3 neighbor cells)."""
 
 from __future__ import annotations
 
+import ast
+import io
 import pathlib
 import re
+import tokenize
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "wsu_cpts_415_spark"
 
@@ -423,3 +426,82 @@ def test_streaming_derives_no_schema_from_an_empty_frame():
         ".limit(0) in streaming/ builds a pipeline only to read its "
         "schema -- pin the store's schema instead:\n" + "\n".join(offenders)
     )
+
+
+# ---------------------------------------------------------------------------
+# Lint #7: the streaming gates derive no row format of their own.  The
+# text digest, the compact shingle hash and the line segmentation are
+# the registry's (queries/similarity.py ``text_digest``/``shingle_h64``,
+# queries/llm_filters.py ``line_digests``), shared with the staged layers
+# the gates' batch faces are oracle-checked on; a private ``md5(``,
+# ``xxhash64`` or ``split(`` in streaming/ is how a gate drifts from its
+# face.  Only code counts: docstrings and comments may name the hashes.
+
+_DERIVATION_TOKENS = ("xxhash64", "md5(", "split(")
+
+
+def _docstring_starts(tree: ast.AST) -> set[tuple[int, int]]:
+    starts = set()
+    for node in ast.walk(tree):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            body = node.body
+            if (
+                body
+                and isinstance(body[0], ast.Expr)
+                and isinstance(body[0].value, ast.Constant)
+                and isinstance(body[0].value.value, str)
+            ):
+                starts.add((body[0].lineno, body[0].col_offset))
+    return starts
+
+
+def _derivation_sites(source: str) -> list[tuple[int, str]]:
+    """(line, token) of every code token that spells a derivation: a
+    ``xxhash64`` name, an ``md5``/``split`` name called, or a string
+    literal (a SQL expression) holding one of ``_DERIVATION_TOKENS``."""
+    docstrings = _docstring_starts(ast.parse(source))
+    toks = [
+        t
+        for t in tokenize.generate_tokens(io.StringIO(source).readline)
+        if t.type not in (tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE)
+    ]
+    sites = []
+    for t, nxt in zip(toks, toks[1:] + toks[-1:]):
+        if t.type == tokenize.NAME:
+            called = nxt.string == "(" and t.string in ("md5", "split")
+            if t.string == "xxhash64" or called:
+                sites.append((t.start[0], t.string))
+        elif t.type == tokenize.STRING and t.start not in docstrings:
+            if any(tok in t.string for tok in _DERIVATION_TOKENS):
+                sites.append((t.start[0], t.string))
+    return sites
+
+
+def test_streaming_gates_derive_no_row_format_of_their_own():
+    offenders = [
+        f"{path.relative_to(PKG.parent)}:{lineno}: {tok}"
+        for path in sorted(_STREAMING.glob("*.py"))
+        for lineno, tok in _derivation_sites(path.read_text())
+    ]
+    assert not offenders, (
+        "a digest, shingle-hash or line-split derivation in streaming/ -- "
+        "import the registry's (similarity.text_digest / shingle_h64, "
+        "llm_filters.line_digests):\n" + "\n".join(offenders)
+    )
+
+
+def test_derivation_lint_reads_code_not_docstrings():
+    src = (
+        '"""Digests are md5( of the text, hashed by xxhash64."""\n'
+        "# split( the text\n"
+        "def f(F):\n"
+        '    """xxhash64 and md5( in a docstring."""\n'
+        '    return F.md5(F.col("text")), F.expr("xxhash64(s)"), F.xxhash64\n'
+    )
+    assert [tok for _, tok in _derivation_sites(src)] == [
+        "md5",
+        '"xxhash64(s)"',
+        "xxhash64",
+    ]

@@ -14,14 +14,39 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import jobs_during
+from tests.conftest import SF_SMOKE, jobs_during
+from wsu_cpts_415_spark.queries.similarity import _spark_hashed, bands_from_hashed
 from wsu_cpts_415_spark.streaming.ingest_dedup import (
+    STORE_SCHEMAS,
     apply_ingest_batch,
     init_standing_stores,
     stream_ingest_with_dedup,
 )
+from wsu_cpts_415_spark.streaming.line_gate import doc_line_counts, line_digests_of
 
 SCHEMA = "doc_id long, text string"
+
+
+# Reference derivations of each standing store from a document frame.
+# The digest and the compact shingle hash are spelled out here rather
+# than imported, so a store test fails if the gate's row format drifts.
+def bands_of(docs):
+    return bands_from_hashed(_spark_hashed(docs))
+
+
+def _digests_of(docs):
+    return docs.select("doc_id", F.md5(F.encode("text", "UTF-8")).alias("digest"))
+
+
+def _h64_of(docs):
+    return _spark_hashed(docs).select(
+        "doc_id", F.expr("transform(shingles, s -> xxhash64(s))").alias("h64")
+    )
+
+
+def _line_counts_of(docs):
+    return doc_line_counts(line_digests_of(docs))
+
 
 # Spark jobs one BATCH1 micro-batch may run: measured 10 on 4 cores --
 # the landing checkpoint's 6 query-stage jobs, the accepted write and
@@ -293,15 +318,11 @@ def test_reinit_rebuilds_when_corpora_differ_only_in_duplicate_rows(
     marker built from the first would make init over the second trust
     stores of the wrong corpus.  The marker's seeded sum tells them
     apart: the second init must rebuild."""
-    from wsu_cpts_415_spark.streaming.ingest_dedup import _digests_of
-    from wsu_cpts_415_spark.streaming.line_gate import (
-        doc_line_counts,
-        init_line_store,
-    )
+    from wsu_cpts_415_spark.streaming.line_gate import init_line_store
 
     init, name, rows_of = {
         "dedup": (init_standing_stores, "digests", _digests_of),
-        "line": (init_line_store, "line_counts", doc_line_counts),
+        "line": (init_line_store, "line_counts", _line_counts_of),
     }[gate]
     x = (1, "alpha beta alpha beta")
     y = (2, "gamma delta gamma delta")
@@ -542,23 +563,14 @@ def test_init_stores_equal_their_direct_derivations(spark, tmp_path, gate, rows)
     import os
 
     from wsu_cpts_415_spark.ops.staging import content_fingerprint
-    from wsu_cpts_415_spark.queries.similarity import bands_of
-    from wsu_cpts_415_spark.streaming.ingest_dedup import (
-        STORE_SCHEMAS,
-        _digests_of,
-        _h64_of,
-        _read_store,
-    )
-    from wsu_cpts_415_spark.streaming.line_gate import (
-        LINE_COUNTS_SCHEMA,
-        doc_line_counts,
-    )
+    from wsu_cpts_415_spark.streaming.ingest_dedup import _read_store
+    from wsu_cpts_415_spark.streaming.line_gate import LINE_COUNTS_SCHEMA
 
     corpus = spark.createDataFrame(rows, SCHEMA)
     store = str(tmp_path / "store")
     derivations = {
         "dedup": {"digests": _digests_of, "bands": bands_of, "shingles": _h64_of},
-        "line": {"line_counts": doc_line_counts},
+        "line": {"line_counts": _line_counts_of},
     }[gate]
     jsc = spark.sparkContext._jsc
     persisted = jsc.getPersistentRDDs().size()
@@ -579,3 +591,86 @@ def test_init_stores_equal_their_direct_derivations(spark, tmp_path, gate, rows)
     assert tuple(marker) == fp
     if not rows:
         assert fp == (0, 0, 0)
+
+
+def test_gate_stores_match_the_registry_layers(spark, tmp_path):
+    """Over the smoke corpus, the stores a gate builds hold the rows of
+    the registry layers its batch face gates against: the bands of
+    ``_bands_staged``, the compact shingle hashes of ``_h64_staged``,
+    the shared digest of ``documents``, and the line counts over
+    ``_line_segments_staged``."""
+    from wsu_cpts_415_spark.io.tables import load_table
+    from wsu_cpts_415_spark.queries.llm_filters import _line_segments_staged
+    from wsu_cpts_415_spark.queries.similarity import (
+        _bands_staged,
+        _h64_staged,
+        text_digest,
+    )
+    from wsu_cpts_415_spark.streaming.line_gate import init_line_store
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    store = str(tmp_path / "store")
+    init_standing_stores(spark, docs, store)
+    init_line_store(spark, docs, store)
+    layers = {
+        "digests": docs.select("doc_id", text_digest()),
+        "bands": _bands_staged(spark, SF_SMOKE),
+        "shingles": _h64_staged(spark, SF_SMOKE),
+        "line_counts": doc_line_counts(_line_segments_staged(spark, SF_SMOKE)),
+    }
+    for name, want in layers.items():
+        got = spark.read.parquet(f"{store}/{name}").select(*want.columns)
+        want_rows = sorted(map(tuple, want.collect()))
+        assert want_rows, name
+        assert sorted(map(tuple, got.collect())) == want_rows, name
+
+
+def test_first_run_reads_no_missing_path(spark, tmp_path, monkeypatch):
+    """A cold init and a first micro-batch of either gate with no store
+    check a path before reading it: a parquet read of a missing path
+    fails only after Spark has logged a FileNotFoundException stack
+    trace.  The marker of a cold init, and every store of a first
+    micro-batch, is missing."""
+    import os
+
+    from pyspark.sql import DataFrameReader
+
+    from wsu_cpts_415_spark.streaming.ingest_dedup import gate_batch
+    from wsu_cpts_415_spark.streaming.line_gate import gate_line_batch
+
+    missing = []
+    parquet = DataFrameReader.parquet
+
+    def checked(self, *paths, **options):
+        missing.extend(p for p in paths if not os.path.exists(p))
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", checked)
+    store = str(tmp_path / "store")
+    init_standing_stores(spark, spark.createDataFrame(INIT_CORPUS, SCHEMA), store)
+    batch = spark.createDataFrame(BATCH1, SCHEMA)
+    assert gate_batch(batch, str(tmp_path / "fresh")).count() == 2
+    assert gate_line_batch(batch, store).count() == 1  # 11 and 12 share a line
+    assert missing == []
+
+
+def test_all_duplicate_batch_admits_nothing_and_writes_no_partition(
+    spark, tmp_path
+):
+    """Degenerate input: every text of the micro-batch is already in the
+    corpus (one of them twice).  The batch admits nothing, and no store
+    -- the accepted store or any standing store -- gains a
+    ``_batch=<id>`` partition."""
+    import os
+
+    store, accepted = str(tmp_path / "store"), str(tmp_path / "accepted")
+    init_standing_stores(spark, spark.createDataFrame(INIT_CORPUS, SCHEMA), store)
+    batch = spark.createDataFrame(
+        [(10 + i, text) for i, (_, text) in enumerate(INIT_CORPUS + INIT_CORPUS[:1])],
+        SCHEMA,
+    )
+    assert apply_ingest_batch(batch, 0, store, accepted) == 0
+    assert not os.path.exists(accepted)
+    for name in STORE_SCHEMAS:
+        parts = [f for f in os.listdir(f"{store}/{name}") if f.startswith("_batch=")]
+        assert parts == ["_batch=-1"], name

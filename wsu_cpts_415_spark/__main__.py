@@ -261,8 +261,8 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "ingest-stream":
         if args.gate == "lines":
-            from wsu_cpts_415_spark.streaming.line_gate import (
-                LINE_BP_THRESHOLD as JACCARD_THRESHOLD,
+            from wsu_cpts_415_spark.queries.llm_filters import (
+                LINE_GATE_THRESHOLD as JACCARD_THRESHOLD,
             )
             from wsu_cpts_415_spark.streaming.line_gate import (
                 init_line_store as init_standing_stores,
@@ -271,8 +271,8 @@ def main(argv: list[str] | None = None) -> int:
                 stream_ingest_line_gate as stream_ingest_with_dedup,
             )
         else:
+            from wsu_cpts_415_spark.queries.similarity import JACCARD_THRESHOLD
             from wsu_cpts_415_spark.streaming.ingest_dedup import (
-                JACCARD_THRESHOLD,
                 init_standing_stores,
                 stream_ingest_with_dedup,
             )

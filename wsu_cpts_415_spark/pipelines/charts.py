@@ -7,12 +7,10 @@ Each chart consumes an already-oracle-checked result table, fetches the
 BOUNDED plot rows to the driver (top-N links, an 8x8 matrix, component
 rollups -- presentation data, never the fact table) and renders a PNG.
 
-Rendering backend: matplotlib when importable (production parity with the
-reference); otherwise a dependency-free fallback that rasterizes into a
-numpy RGB canvas and writes the PNG with stdlib zlib -- this container
-ships no plotting library, and a presentation sink that can only raise
-ImportError would be untestable plumbing.  Both backends write a valid
-PNG; tests smoke-check signature + dimensions (tests/test_charts.py).
+Rendering backend: a dependency-free raster that draws the reference's
+panels into a numpy RGB canvas and writes the PNG with stdlib zlib, so
+the sinks need no plotting library.  Tests smoke-check the PNG's
+signature and dimensions (tests/test_charts.py).
 """
 
 from __future__ import annotations
@@ -22,16 +20,6 @@ import zlib
 
 import numpy as np
 from pyspark.sql import DataFrame
-
-try:  # pragma: no cover - not installed in this container
-    import matplotlib
-
-    matplotlib.use("Agg")
-    import matplotlib.pyplot as plt
-
-    HAVE_MPL = True
-except Exception:  # pragma: no cover
-    HAVE_MPL = False
 
 PLOT_ROW_CAP = 10_000  # bounded driver fetch for every chart
 
@@ -129,15 +117,8 @@ def link_analysis_chart(links: DataFrame, path: str) -> str:
         ("times_linked", "num_comments"),
         ("times_linked", "age_days"),
     ]
-    if HAVE_MPL:  # pragma: no cover
-        _, axes = plt.subplots(nrows=2, ncols=2, figsize=(15, 15))
-        for ax, (x, y) in zip(axes.flatten(), pairs):
-            rows.plot.scatter(x=x, y=y, ax=ax, title=f"{x} vs {y}")
-        plt.savefig(path)
-        plt.close()
-    else:
-        series = [(rows[x].to_numpy(), rows[y].to_numpy()) for x, y in pairs]
-        write_png(_panel_grid(series, ncols=2), path)
+    series = [(rows[x].to_numpy(), rows[y].to_numpy()) for x, y in pairs]
+    write_png(_panel_grid(series, ncols=2), path)
     return path
 
 
@@ -153,21 +134,12 @@ def correlation_heatmap(matrix: DataFrame, path: str, cell: int = 48) -> str:
     for _, r in pdf.iterrows():
         i, j = idx[r["col_a"]], idx[r["col_b"]]
         grid[i, j] = grid[j, i] = r["corr"]
-    if HAVE_MPL:  # pragma: no cover
-        fig, ax = plt.subplots(figsize=(10, 8))
-        im = ax.imshow(grid, cmap="coolwarm", vmin=-1, vmax=1)
-        ax.set_xticks(range(len(names)), names, rotation=90)
-        ax.set_yticks(range(len(names)), names)
-        fig.colorbar(im)
-        plt.savefig(path, bbox_inches="tight")
-        plt.close()
-    else:
-        rgb = _diverging_rgb(grid)
-        raster = np.kron(rgb, np.ones((cell, cell, 1), dtype=np.uint8))
-        canvas = _canvas(raster.shape[0] + 8, raster.shape[1] + 8)
-        canvas[4:-4, 4:-4] = raster
-        _frame(canvas)
-        write_png(canvas, path)
+    rgb = _diverging_rgb(grid)
+    raster = np.kron(rgb, np.ones((cell, cell, 1), dtype=np.uint8))
+    canvas = _canvas(raster.shape[0] + 8, raster.shape[1] + 8)
+    canvas[4:-4, 4:-4] = raster
+    _frame(canvas)
+    write_png(canvas, path)
     return path
 
 
@@ -190,14 +162,5 @@ def scc_rollup_chart(rollup: DataFrame, path: str) -> str:
             multi["distinct_categories"].to_numpy(),
         ),
     ]
-    if HAVE_MPL:  # pragma: no cover
-        _, axes = plt.subplots(nrows=1, ncols=3, figsize=(15, 5))
-        titles = ["size vs avg views", "size vs uploaders", "size vs categories"]
-        for ax, (xs, ys), t in zip(axes.flatten(), series, titles):
-            ax.scatter(xs, ys)
-            ax.set_title(t)
-        plt.savefig(path)
-        plt.close()
-    else:
-        write_png(_panel_grid(series, ncols=3), path)
+    write_png(_panel_grid(series, ncols=3), path)
     return path

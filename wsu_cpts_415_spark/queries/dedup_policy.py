@@ -30,10 +30,12 @@ from wsu_cpts_415_spark.queries.graph_ops import (
     _neardup_labels,
 )
 from wsu_cpts_415_spark.queries.similarity import (
+    JACCARD_THRESHOLD,
     LSH_PAIRS_DUCK_CTES,
     _bands_staged,
     _h64_staged,
     _hashed_staged,
+    text_digest,
 )
 from wsu_cpts_415_spark.queries.text import QUALITY_DUCK_CTES
 from wsu_cpts_415_spark.registry import register
@@ -352,7 +354,7 @@ def incremental_neardup_check_bucketed(
         JOIN sh so ON so.doc_id = c.old_doc
         WHERE CAST(len(list_intersect(sa.shingles, so.shingles)) AS DOUBLE)
               / (len(sa.shingles) + len(so.shingles)
-                 - len(list_intersect(sa.shingles, so.shingles))) >= 0.5
+                 - len(list_intersect(sa.shingles, so.shingles))) >= {{THRESH}}
     ),
     cands AS (
         SELECT DISTINCT a.doc_id AS keep_doc, c2.doc_id AS drop_doc
@@ -367,7 +369,7 @@ def incremental_neardup_check_bucketed(
         JOIN sh kb ON kb.doc_id = cs.drop_doc
         WHERE CAST(len(list_intersect(ka.shingles, kb.shingles)) AS DOUBLE)
               / (len(ka.shingles) + len(kb.shingles)
-                 - len(list_intersect(ka.shingles, kb.shingles))) >= 0.5
+                 - len(list_intersect(ka.shingles, kb.shingles))) >= {{THRESH}}
     )
     SELECT f.doc_id FROM fresh f
     WHERE f.doc_id NOT IN (
@@ -377,6 +379,7 @@ def incremental_neardup_check_bucketed(
         LSH=LSH_PAIRS_DUCK_CTES,
         BUCKET=_DUCK_BUCKET.format(m=100),
         NEWB=NEW_BATCH_BUCKET,
+        THRESH=JACCARD_THRESHOLD,
     ),
 )
 def ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -386,9 +389,10 @@ def ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-digest gate (within-batch keeps the min doc_id), the LSH +
     exact-Jaccard near-dup gate against the standing corpus, and the
     deterministic within-batch near-dup rule (drop any doc verifying
-    >= 0.5 Jaccard against a smaller-id batch doc).  The DuckDB oracle
-    recomputes the full admission decision end-to-end, so the streaming
-    sink's gating semantics sit inside the correctness gate.
+    >= JACCARD_THRESHOLD Jaccard against a smaller-id batch doc).  The
+    DuckDB oracle recomputes the full admission decision end-to-end, so
+    the streaming sink's gating semantics sit inside the correctness
+    gate.
 
     Scale: identical posture to incremental_neardup_check -- batch-side
     tables broadcast, the standing corpus is scanned, never shuffled."""
@@ -401,31 +405,26 @@ def ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket") >= NEW_BATCH_BUCKET
     ).select("doc_id", "text")
     standing = with_bucket.filter(F.col("bucket") < NEW_BATCH_BUCKET)
-    std_digests = standing.select(
-        F.md5(F.encode("text", "UTF-8")).alias("digest")
-    )
+    std_digests = standing.select("doc_id", text_digest())
     std_bands = (
         _bands_staged(spark, sf_dir)
         .withColumn("bucket", bucket)
         .filter(F.col("bucket") < NEW_BATCH_BUCKET)
-        .select(F.col("doc_id").alias("old_doc"), "b", "h1", "h2")
+        .select("doc_id", "b", "h1", "h2")
     )
     std_sh = (
         # the gate's standing-store row format is the compact 64-bit
         # hash array (streaming/ingest_dedup.py round 9); the oracle
         # intersects the STRING shingles, pinning the compact form
         # against exact string Jaccard.  r12: read the staged narrow
-        # (doc_id, h64) layer -- the identical transform(shingles,
-        # xxhash64) projection -- instead of re-hashing the wide
-        # string-shingle table per run (guide §4.1: the rehash is an
-        # interpreted HOF over every standing shingle)
+        # (doc_id, h64) layer -- the gate's own ``shingle_h64``
+        # projection -- instead of re-hashing the wide string-shingle
+        # table per run (guide §4.1: the rehash is an interpreted HOF
+        # over every standing shingle)
         _h64_staged(spark, sf_dir)
         .withColumn("bucket", bucket)
         .filter(F.col("bucket") < NEW_BATCH_BUCKET)
-        .select(
-            F.col("doc_id").alias("old_doc"),
-            F.col("h64").alias("old_h64"),
-        )
+        .select("doc_id", "h64")
     )
     return (
         gate_against(batch, std_digests, std_bands, std_sh)

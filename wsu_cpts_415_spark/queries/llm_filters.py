@@ -16,9 +16,11 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wsu_cpts_415_spark.queries.corpus_ops import _DUCK_BUCKET, _SPARK_BUCKET
+from wsu_cpts_415_spark.queries.dedup_policy import NEW_BATCH_BUCKET
 from wsu_cpts_415_spark.registry import register
 
 # stand-in held-out eval set: ~1% of docs by a fixed residue class
@@ -264,13 +266,39 @@ def contamination_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at least BOILERPLATE_DF distinct documents is boilerplate.
 LINE_TOKENS = 8
 BOILERPLATE_DF = 2
+# the line gate rejects a document when at least this fraction of its
+# lines is boilerplate (streaming/line_gate.py and its batch face)
+LINE_GATE_THRESHOLD = 0.5
+
+
+def line_numbers() -> Column:
+    """``[0, n)``: the line numbers of ``text``, whose n lines are its
+    consecutive LINE_TOKENS-token windows (split on single spaces; the
+    last window may be short)."""
+    n_lines = F.ceil(F.size(F.split(F.col("text"), " ")) / F.lit(LINE_TOKENS))
+    return F.sequence(F.lit(0), n_lines.cast("int") - 1)
+
+
+def line_at(i: Column) -> Column:
+    """The text of line ``i`` of ``text``: its tokens rejoined by spaces."""
+    toks = F.split(F.col("text"), " ")
+    return F.array_join(F.slice(toks, i * LINE_TOKENS + 1, LINE_TOKENS), " ")
+
+
+def line_digests() -> Column:
+    """The xxhash64 of every line of ``text``, in line order: the one
+    segmentation behind the staged ``line_segments`` layer, the
+    boilerplate queries and the streaming line gate
+    (streaming/line_gate.py)."""
+    return F.transform(line_numbers(), lambda i: F.xxhash64(line_at(i)))
 
 
 def _line_segments_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged (doc_id, line_no, digest) segment table: the corpus text
-    split into LINE_TOKENS-token lines, each reduced to its xxhash64
-    digest inside the build's scan stage -- the identical segmentation
-    as streaming/line_gate.line_digests_of, with the line index kept.
+    """Staged (doc_id, line_no, digest) segment table: ``line_digests``
+    of the corpus text, each line reduced to its xxhash64 digest inside
+    the build's scan stage -- the segmentation the streaming line gate
+    (streaming/line_gate.line_digests_of) imports, with the line index
+    kept.
 
     r12 (guide §1.2, don't compute things twice): four registry queries
     (boilerplate_line_filter / boilerplate_strip / boilerplate_top_lines
@@ -285,30 +313,13 @@ def _line_segments_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wsu_cpts_415_spark.io.tables import load_table
     from wsu_cpts_415_spark.ops.staging import staged_table
 
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        toks = F.split(F.col("text"), " ")
-        n_lines = F.ceil(F.size(toks) / F.lit(LINE_TOKENS)).cast("int")
-        return docs.select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), n_lines - 1),
-                    lambda i: F.xxhash64(
-                        F.array_join(
-                            F.slice(toks, i * LINE_TOKENS + 1, LINE_TOKENS),
-                            " ",
-                        )
-                    ),
-                )
-            ).alias("line_no", "digest"),
-        )
-
     return staged_table(
         spark,
         "line_segments",
         sf_dir,
-        build,
+        lambda: load_table(spark, sf_dir, "documents").select(
+            "doc_id", F.posexplode(line_digests()).alias("line_no", "digest")
+        ),
         salt=f"xx64:lt{LINE_TOKENS}",
         expect_cols=["doc_id", "line_no", "digest"],
     )
@@ -433,11 +444,6 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wsu_cpts_415_spark.io.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_lines = F.ceil(F.size(toks) / F.lit(LINE_TOKENS)).cast("int")
-    line_at = lambda i: F.array_join(  # noqa: E731
-        F.slice(toks, i * LINE_TOKENS + 1, LINE_TOKENS), " "
-    )
     lines = _line_segments_staged(spark, sf_dir)
     freq = lines.groupBy("digest").agg(
         F.count_distinct("doc_id").alias("df")
@@ -448,8 +454,7 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("line_no")).alias("bp_lines"))
     )
     kept = F.filter(
-        F.sequence(F.lit(0), n_lines - 1),
-        lambda i: ~F.array_contains(F.col("bp_lines"), i),
+        line_numbers(), lambda i: ~F.array_contains(F.col("bp_lines"), i)
     )
     return (
         docs.join(bp, "doc_id", "left")
@@ -463,25 +468,11 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# batch-face split for the streaming line gate: same md5 bucket split as
-# the dedup gate (queries/dedup_policy.py) -- bucket >= 90 is "the batch
-# arriving now", the rest is the standing corpus
-_GATE_BUCKET_SPARK = (
-    "pmod(cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10)"
-    " as bigint), 100)"
-)
-_GATE_BUCKET_DUCK = (
-    "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100)"
-)
-_GATE_NEWB = 90
-LINE_GATE_THRESHOLD = 0.5
-
-
 @register(
     "ingest_boilerplate_gate",
     oracle=f"""
     WITH bucketed AS (
-        SELECT doc_id, {_GATE_BUCKET_DUCK} AS bucket FROM documents
+        SELECT doc_id, {_DUCK_BUCKET.format(m=100)} AS bucket FROM documents
     ),
     toks AS (
         SELECT doc_id,
@@ -497,12 +488,12 @@ LINE_GATE_THRESHOLD = 0.5
     std_df AS (
         SELECT line, COUNT(DISTINCT l.doc_id) AS sdf
         FROM lines l JOIN bucketed k ON k.doc_id = l.doc_id
-        WHERE k.bucket < {_GATE_NEWB}
+        WHERE k.bucket < {NEW_BATCH_BUCKET}
         GROUP BY line
     ),
     batch_lines AS (
         SELECT l.* FROM lines l JOIN bucketed k ON k.doc_id = l.doc_id
-        WHERE k.bucket >= {_GATE_NEWB}
+        WHERE k.bucket >= {NEW_BATCH_BUCKET}
     ),
     bdf AS (
         SELECT line, COUNT(DISTINCT doc_id) AS b
@@ -529,10 +520,10 @@ LINE_GATE_THRESHOLD = 0.5
 def ingest_boilerplate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch face of the streaming boilerplate gate
     (streaming/line_gate.py:gate_lines_against): the arriving batch (md5
-    bucket >= 90, the dedup gate's split) is scored against the standing
-    corpus's line-frequency table -- a line is boilerplate when its
-    distinct-document count across standing + batch reaches
-    BOILERPLATE_DF, and a document is admitted only while its
+    bucket >= NEW_BATCH_BUCKET, the dedup gate's split) is scored
+    against the standing corpus's line-frequency table -- a line is
+    boilerplate when its distinct-document count across standing + batch
+    reaches BOILERPLATE_DF, and a document is admitted only while its
     boilerplate fraction stays below the threshold.  The DuckDB oracle
     recomputes the full admission decision end-to-end, putting the
     streaming sink's gating semantics inside the correctness gate.
@@ -550,19 +541,16 @@ def ingest_boilerplate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     segs = _line_segments_staged(spark, sf_dir).withColumn(
-        "bucket", F.expr(_GATE_BUCKET_SPARK)
+        "bucket", F.expr(_SPARK_BUCKET.format(m=100))
     )
-    batch_lines = segs.filter(F.col("bucket") >= _GATE_NEWB).select(
+    batch_lines = segs.filter(F.col("bucket") >= NEW_BATCH_BUCKET).select(
         "doc_id", "digest"
     )
-    standing_lines = segs.filter(F.col("bucket") < _GATE_NEWB).select(
+    standing_lines = segs.filter(F.col("bucket") < NEW_BATCH_BUCKET).select(
         "doc_id", "digest"
     )
     return gate_lines_against(
-        None,
-        doc_line_counts(None, lines=standing_lines),
-        LINE_GATE_THRESHOLD,
-        lines=batch_lines,
+        batch_lines, doc_line_counts(standing_lines), LINE_GATE_THRESHOLD
     ).orderBy("doc_id")
 
 
@@ -606,20 +594,11 @@ def boilerplate_top_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wsu_cpts_415_spark.streaming.line_gate import doc_line_counts
 
     docs = load_table(spark, sf_dir, "documents")
-    flagged = doc_line_counts(
-        docs, lines=_line_segments_staged(spark, sf_dir)
-    ).filter(F.col("n_docs") >= BOILERPLATE_DF)
-    toks = F.split(F.col("text"), " ")
-    n_lines = F.ceil(F.size(toks) / F.lit(LINE_TOKENS)).cast("int")
+    flagged = doc_line_counts(_line_segments_staged(spark, sf_dir)).filter(
+        F.col("n_docs") >= BOILERPLATE_DF
+    )
     segs = docs.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), n_lines - 1),
-                lambda i: F.array_join(
-                    F.slice(toks, i * LINE_TOKENS + 1, LINE_TOKENS), " "
-                ),
-            )
-        ).alias("line")
+        F.explode(F.transform(line_numbers(), line_at)).alias("line")
     ).withColumn("digest", F.xxhash64("line"))
     return (
         segs.join(flagged, "digest")

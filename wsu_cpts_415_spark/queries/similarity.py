@@ -16,7 +16,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table
@@ -24,6 +24,7 @@ from wsu_cpts_415_spark.registry import register
 
 N_HASHES = 8  # minhash signature length
 N_BANDS = 4  # LSH bands (rows-per-band = 2)
+JACCARD_THRESHOLD = 0.5  # the 4-band/2-row s-curve midpoint
 TOP_K = 10
 
 _SPARK_H32 = "cast(conv(substr(md5({x}), 1, 8), 16, 10) as bigint)"
@@ -98,6 +99,47 @@ def _spark_hashed(docs: DataFrame, *keep: str) -> DataFrame:
     )
 
 
+def bands_from_hashed(hashed: DataFrame, *keep: str) -> DataFrame:
+    """Band table (doc_id, *keep, b, h1, h2) from a projection carrying
+    ``hs``: the one band derivation behind the staged ``minhash_bands``
+    layer, the ingest gate's batch bands and its standing band store, so
+    batch bands join standing bands key-for-key.  ``keep`` names columns
+    of ``hashed`` carried onto every band row (the gate carries ``h64``
+    to verify candidates)."""
+    return (
+        hashed
+        .select("doc_id", *keep, F.expr(_spark_minhash_sig()).alias("sig"))
+        .select(
+            "doc_id",
+            *keep,
+            F.explode(F.expr(f"sequence(0, {N_BANDS - 1})")).alias("b"),
+            "sig",
+        )
+        .select(
+            "doc_id",
+            *keep,
+            "b",
+            F.expr("element_at(sig, 2 * b + 1)").alias("h1"),
+            F.expr("element_at(sig, 2 * b + 2)").alias("h2"),
+        )
+    )
+
+
+def shingle_h64() -> Column:
+    """``h64``: the compact form of a ``shingles`` array, one 64-bit
+    xxhash64 per shingle string -- the row format of the staged
+    ``shingle_h64`` layer and of the ingest gate's standing shingle
+    store (8 bytes per shingle, never the n-gram text)."""
+    return F.expr("transform(shingles, s -> xxhash64(s))").alias("h64")
+
+
+def text_digest() -> Column:
+    """``digest``: the md5 of a document's UTF-8 ``text`` -- the exact-dup
+    key of the ingest gate's standing digest store and of its batch
+    face (queries/dedup_policy.py:ingest_dedup_gate)."""
+    return F.md5(F.encode("text", "UTF-8")).alias("digest")
+
+
 def _hashed_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Durably staged (doc_id, shingles, hs) projection: the md5+shingle
     math dominates every minhash query, and the LSH self-join would
@@ -127,17 +169,11 @@ def _h64_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-2 cold <= 2x warm)."""
     from wsu_cpts_415_spark.ops.staging import staged_table
 
-    def build() -> DataFrame:
-        return _hashed_staged(spark, sf_dir).select(
-            "doc_id",
-            F.expr("transform(shingles, s -> xxhash64(s))").alias("h64"),
-        )
-
     return staged_table(
         spark,
         "shingle_h64",
         sf_dir,
-        build,
+        lambda: _hashed_staged(spark, sf_dir).select("doc_id", shingle_h64()),
         salt=f"md5h32:p{_MERSENNE_P}:sh2w:xx64",
         expect_cols=["doc_id", "h64"],
     )
@@ -240,31 +276,15 @@ def _bands_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     (minhash_lsh_pairs) and the asymmetric incremental check
     (queries/dedup_policy.py) -- the signature math runs once and
     persists across sessions (fingerprint-keyed parquet, round 11),
-    like the shingle/hash projection underneath it."""
+    like the shingle/hash projection underneath it.  Built by
+    ``bands_from_hashed``, the ingest gate's band derivation."""
     from wsu_cpts_415_spark.ops.staging import staged_table
-
-    def build() -> DataFrame:
-        return (
-            _hashed_staged(spark, sf_dir)
-            .select("doc_id", F.expr(_spark_minhash_sig()).alias("sig"))
-            .select(
-                "doc_id",
-                F.explode(F.expr(f"sequence(0, {N_BANDS - 1})")).alias("b"),
-                "sig",
-            )
-            .select(
-                "doc_id",
-                "b",
-                F.expr("element_at(sig, 2 * b + 1)").alias("h1"),
-                F.expr("element_at(sig, 2 * b + 2)").alias("h2"),
-            )
-        )
 
     return staged_table(
         spark,
         "minhash_bands",
         sf_dir,
-        build,
+        lambda: bands_from_hashed(_hashed_staged(spark, sf_dir)),
         salt=f"nh{N_HASHES}:nb{N_BANDS}:p{_MERSENNE_P}",
         expect_cols=["doc_id", "b", "h1", "h2"],
     )
@@ -669,43 +689,3 @@ def binary_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.encode("text", "UTF-8")).cast("bigint").alias("n_bytes"),
         F.sha2(F.encode("text", "UTF-8"), 256).alias("payload_sha256"),
     ).orderBy("doc_id")
-
-
-def hashed_of(docs: DataFrame) -> DataFrame:
-    """Public DataFrame->DataFrame face of the shingle/base-hash
-    projection (no staging, no sf_dir) for callers that bring their own
-    document batches -- the streaming ingest gate."""
-    return _spark_hashed(docs)
-
-
-def bands_of(docs: DataFrame) -> DataFrame:
-    """Public DataFrame->DataFrame face of the slim LSH band table
-    (doc_id, b, h1, h2) for arbitrary document batches: same signature
-    math as the staged corpus table, so batch bands join standing bands
-    key-for-key."""
-    return bands_from_hashed(_spark_hashed(docs))
-
-
-def bands_from_hashed(hashed: DataFrame, *keep: str) -> DataFrame:
-    """Band table (doc_id, *keep, b, h1, h2) from an existing projection
-    carrying ``hs`` -- lets callers that already hold the hash table
-    (the ingest gate derives it once per batch) skip re-deriving the
-    shingle math.  ``keep`` names columns of ``hashed`` carried onto
-    every band row (the gate carries ``h64`` to verify candidates)."""
-    return (
-        hashed
-        .select("doc_id", *keep, F.expr(_spark_minhash_sig()).alias("sig"))
-        .select(
-            "doc_id",
-            *keep,
-            F.explode(F.expr(f"sequence(0, {N_BANDS - 1})")).alias("b"),
-            "sig",
-        )
-        .select(
-            "doc_id",
-            *keep,
-            "b",
-            F.expr("element_at(sig, 2 * b + 1)").alias("h1"),
-            F.expr("element_at(sig, 2 * b + 2)").alias("h2"),
-        )
-    )

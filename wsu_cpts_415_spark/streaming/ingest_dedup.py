@@ -33,6 +33,15 @@ standing stores are read with their pinned schemas (``STORE_SCHEMAS``:
 no footer-inference job, and no store derivation is built only to type
 the read).
 
+Row formats: the gate keeps no derivation of its own.  The digest,
+band and compact shingle-hash rows, and the Jaccard threshold, are the
+registry's (queries/similarity.py: ``text_digest``,
+``bands_from_hashed``, ``shingle_h64``, ``JACCARD_THRESHOLD``), the
+same definitions that build the staged ``minhash_bands`` and
+``shingle_h64`` layers the batch face
+(queries/dedup_policy.py:ingest_dedup_gate) gates against, so the face
+and the gate cannot drift apart.
+
 Init (``_init_stores``, shared too) builds the stores through the same
 helper: one corpus scan is materialized as the rows every store derives
 from, observes the corpus fingerprint on the way (no fingerprint job),
@@ -71,7 +80,6 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -83,9 +91,11 @@ from wsu_cpts_415_spark.ops.staging import (
     fingerprint_of,
 )
 from wsu_cpts_415_spark.queries.similarity import (
+    JACCARD_THRESHOLD,
     _spark_hashed,
     bands_from_hashed,
-    hashed_of,
+    shingle_h64,
+    text_digest,
 )
 from wsu_cpts_415_spark.streaming.jobs import (
     drop_batch,
@@ -93,27 +103,6 @@ from wsu_cpts_415_spark.streaming.jobs import (
     run_foreach_batch,
     write_batch,
 )
-
-JACCARD_THRESHOLD = 0.5  # the 4-band/2-row s-curve midpoint
-
-# the compact standing-shingle form: one 64-bit hash per shingle string
-_H64 = "transform(shingles, s -> xxhash64(s))"
-
-
-def _digest() -> Column:
-    return F.md5(F.encode("text", "UTF-8")).alias("digest")
-
-
-def _digests_of(docs: DataFrame) -> DataFrame:
-    return docs.select("doc_id", _digest())
-
-
-def _h64_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, h64): the compact 64-bit shingle-hash array per doc --
-    the standing shingle store's row format (8 bytes per shingle; the
-    raw n-gram strings never leave the batch that produced them)."""
-    return hashed_of(docs).select("doc_id", F.expr(_H64).alias("h64"))
-
 
 def _read_store(
     spark: SparkSession,
@@ -130,18 +119,18 @@ def _read_store(
 
     A missing store (first run with no ``--init-corpus``: the standing
     corpus starts empty and batch 0 creates the store) reads as an empty
-    frame of ``schema``, built on the JVM side by a path-less read,
-    instead of crashing the stream with PATH_NOT_FOUND from inside the
-    first micro-batch.  ``exclude_batch`` makes the gate
+    frame of ``schema``, built on the JVM side by a path-less read.  The
+    path is checked first (``jobs.path_exists``, no job), so no read of
+    a missing path is attempted: that read would fail with PATH_NOT_FOUND
+    after logging a stack trace.  ``exclude_batch`` makes the gate
     REPLAY-DETERMINISTIC: a batch replayed after a crash that landed some
     of its own store partitions must not gate against them (it would
     see its own rows as standing and admit nothing, leaving the stores
     missing this batch's rows forever), so the read drops the
     ``_batch=<exclude_batch>`` partition."""
-    try:
-        df = spark.read.schema(f"{schema}, _batch int").parquet(path)
-    except AnalysisException:  # store not created yet -> empty corpus
+    if not path_exists(spark, path):  # store not created yet -> empty corpus
         return spark.read.schema(schema).parquet()
+    df = spark.read.schema(f"{schema}, _batch int").parquet(path)
     if exclude_batch is not None:
         df = df.filter(F.col("_batch") != exclude_batch)
     return df.drop("_batch")
@@ -195,16 +184,17 @@ def _init_stores(
     per-gate marker (``_corpus_id_<gate>``, so gates sharing a
     ``store_dir`` never skip each other's builds) holds the corpus's
     ``content_fingerprint`` over (doc_id, text).  The marker is read
-    first, with its pinned schema (one job).  Init is a READ only when
-    every named store holds the ``_SUCCESS`` file of a completed write
-    (checked through the Hadoop FileSystem API: no job) AND the marker
-    matches the corpus's fingerprint (one aggregate, two jobs): a store
-    lost (or left half-written) while its marker survived must rebuild,
-    not leave the gate gating against an empty corpus.  Any marker read
-    failure (missing, corrupt or half-written,
-    or an older marker without the ``sum_hash`` column) counts as no
-    marker, and no marker skips straight to the build: rebuilding is
-    always the safe answer.
+    first, with its pinned schema (one job), and only when its
+    ``_SUCCESS`` file exists (a cold init attempts no read of a missing
+    path).  Init is a READ only when every named store holds the
+    ``_SUCCESS`` file of a completed write (checked through the Hadoop
+    FileSystem API: no job) AND the marker matches the corpus's
+    fingerprint (one aggregate, two jobs): a store lost (or left
+    half-written) while its marker survived must rebuild, not leave the
+    gate gating against an empty corpus.  Any marker read failure
+    (missing, corrupt or half-written, or an older marker without the
+    ``sum_hash`` column) counts as no marker, and no marker skips
+    straight to the build: rebuilding is always the safe answer.
 
     The build scans the corpus once: ``project``'s rows are materialized
     by ``_materialize_and_write``, whose job also observes the
@@ -216,10 +206,12 @@ def _init_stores(
     worker), so a crash mid-build leaves none.  Measured x100 (round
     10): 102 s build -> ~seconds on restart."""
     marker = f"{store_dir}/_corpus_id_{gate}"
-    try:
-        (row,) = spark.read.schema(_MARKER_SCHEMA).parquet(marker).collect()
-    except Exception:
-        row = None
+    row = None
+    if path_exists(spark, f"{marker}/_SUCCESS"):
+        try:
+            (row,) = spark.read.schema(_MARKER_SCHEMA).parquet(marker).collect()
+        except Exception:  # corrupt, or not one row: no marker
+            pass
     if (
         row is not None
         and all(path_exists(spark, f"{store_dir}/{n}/_SUCCESS") for n in stores)
@@ -248,9 +240,8 @@ def _init_stores(
 def _store_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, digest, hs, h64): the rows every dedup-gate store derives
     from (``_STORES``), one per document, computed in one scan."""
-    return _spark_hashed(docs.select("doc_id", "text", _digest()), "digest").select(
-        "doc_id", "digest", "hs", F.expr(_H64).alias("h64")
-    )
+    rows = _spark_hashed(docs.select("doc_id", "text", text_digest()), "digest")
+    return rows.select("doc_id", "digest", "hs", shingle_h64())
 
 
 def init_standing_stores(
@@ -280,14 +271,9 @@ def gate_batch(
             spark, f"{store_dir}/{name}", STORE_SCHEMAS[name], exclude_batch
         )
 
-    std_digests = read("digests").select("digest")
-    std_bands = read("bands").select(
-        F.col("doc_id").alias("old_doc"), "b", "h1", "h2"
+    return gate_against(
+        batch_df, read("digests"), read("bands"), read("shingles"), threshold
     )
-    std_sh = read("shingles").select(
-        F.col("doc_id").alias("old_doc"), F.col("h64").alias("old_h64")
-    )
-    return gate_against(batch_df, std_digests, std_bands, std_sh, threshold)
 
 
 def _verified(a: str, b: str, threshold: float) -> Column:
@@ -308,9 +294,12 @@ def gate_against(
     exact digest gate (within-batch keeps the min doc_id), LSH + exact
     Jaccard near-dup gate vs the standing corpus, and the deterministic
     within-batch rule (a doc is dropped if it verifies >= threshold
-    against ANY smaller-id batch doc).  ``std_sh`` carries the compact
-    form, (old_doc, old_h64); verification intersects 64-bit hash
-    arrays on both sides (collision bound in the module docstring).
+    against ANY smaller-id batch doc).  Each standing frame comes in its
+    own store's ``STORE_SCHEMAS`` shape -- (doc_id, digest), (doc_id, b,
+    h1, h2) and (doc_id, h64) -- and the gate renames the standing
+    ``doc_id``/``h64`` to ``old_doc``/``old_h64`` itself.  Verification
+    intersects 64-bit hash arrays on both sides (collision bound in the
+    module docstring).
     Registered as the oracle-checked query ``ingest_dedup_gate``
     (queries/dedup_policy.py), whose DuckDB oracle intersects the raw
     STRING shingles -- so the compact representation is pinned against
@@ -331,15 +320,21 @@ def gate_against(
     rejected ids: no join back to the survivors, so a ``doc_id`` offered
     twice with two texts stays two rows, each with its own hashes."""
     rest = [c for c in batch_df.columns if c != "doc_id"]
+    std_bands = std_bands.select(
+        F.col("doc_id").alias("old_doc"), "b", "h1", "h2"
+    )
+    std_sh = std_sh.select(
+        F.col("doc_id").alias("old_doc"), F.col("h64").alias("old_h64")
+    )
     survivors = (
-        batch_df.select(_digest(), F.struct("doc_id", *rest).alias("row"))
+        batch_df.select(text_digest(), F.struct("doc_id", *rest).alias("row"))
         .groupBy("digest")
         .agg(F.min("row").alias("row"))
-        .join(std_digests, "digest", "left_anti")
+        .join(std_digests.select("digest"), "digest", "left_anti")
         .select("row.*", "digest")
     )
     hashed = _spark_hashed(survivors, *rest, "digest").select(
-        "doc_id", *rest, "digest", "hs", F.expr(_H64).alias("h64")
+        "doc_id", *rest, "digest", "hs", shingle_h64()
     )
 
     # near-dup gate: batch bands vs standing bands + within-batch pairs.

@@ -2,14 +2,19 @@
 time (Wenzek et al. 2020 §4.1), the line-frequency twin of the exact+LSH
 dedup gate in streaming/ingest_dedup.py.
 
-Arriving documents are segmented into fixed LINE_TOKENS-token "lines"
-(queries/llm_filters.py); a line is boilerplate when the number of
-DISTINCT documents containing it -- across the standing corpus AND the
-current batch -- reaches BOILERPLATE_DF.  A document whose boilerplate
-fraction reaches the threshold is rejected; survivors land in the
-accepted store and their per-line postings extend the standing
-line-frequency store, so batch N+1 gates against everything batch N
-admitted.
+Arriving documents are segmented into fixed LINE_TOKENS-token "lines";
+a line is boilerplate when the number of DISTINCT documents containing
+it -- across the standing corpus AND the current batch -- reaches
+BOILERPLATE_DF.  A document whose boilerplate fraction reaches
+LINE_GATE_THRESHOLD is rejected; survivors land in the accepted store
+and their per-line postings extend the standing line-frequency store,
+so batch N+1 gates against everything batch N admitted.
+
+Row formats: the segmentation (``line_digests``), BOILERPLATE_DF and
+LINE_GATE_THRESHOLD are the registry's (queries/llm_filters.py), the
+same definitions behind the staged ``line_segments`` layer that the
+batch face (``ingest_boilerplate_gate``) gates; this module keeps no
+copy.
 
 Exactly-once, landing, store reads and restart-skip init: the dedup
 gate's shared protocol (streaming/ingest_dedup.py, over the foreachBatch
@@ -29,7 +34,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from wsu_cpts_415_spark.queries.llm_filters import BOILERPLATE_DF, LINE_TOKENS
+from wsu_cpts_415_spark.queries.llm_filters import (
+    BOILERPLATE_DF,
+    LINE_GATE_THRESHOLD,
+    line_digests,
+)
 from wsu_cpts_415_spark.streaming.ingest_dedup import (
     _init_stores,
     _land,
@@ -37,44 +46,24 @@ from wsu_cpts_415_spark.streaming.ingest_dedup import (
 )
 from wsu_cpts_415_spark.streaming.jobs import run_foreach_batch
 
-# reject a document when at least this fraction of its lines is boilerplate
-LINE_BP_THRESHOLD = 0.5
-
 # the line store's row schema: ``doc_line_counts``'s (digest, n_docs)
 LINE_COUNTS_SCHEMA = "digest long, n_docs long"
 
 
 def line_digests_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, digest) at SEGMENT grain -- one row per LINE_TOKENS-token
-    line occurrence, hashed to xxhash64 inside the scan stage (the same
-    segmentation as queries/llm_filters.py:boilerplate_line_filter)."""
-    toks = F.split(F.col("text"), " ")
-    n_lines = F.ceil(F.size(toks) / F.lit(LINE_TOKENS)).cast("int")
-    return docs.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), n_lines - 1),
-                lambda i: F.xxhash64(
-                    F.array_join(
-                        F.slice(toks, i * LINE_TOKENS + 1, LINE_TOKENS), " "
-                    )
-                ),
-            )
-        ).alias("digest"),
-    )
+    """(doc_id, digest) at SEGMENT grain -- one row per line occurrence,
+    hashed inside the scan stage by the registry's ``line_digests`` (the
+    staged ``line_segments`` layer, without its line index)."""
+    return docs.select("doc_id", F.explode(line_digests()).alias("digest"))
 
 
-def doc_line_counts(
-    docs: DataFrame, lines: DataFrame | None = None
-) -> DataFrame:
-    """(digest, n_docs): distinct-document posting counts per line --
-    the standing store's row format.  ``lines`` overrides the
-    segmentation source with a precomputed (doc_id, digest) frame (the
-    batch queries pass the staged ``line_segments`` layer so the corpus
-    text is split once per corpus, not once per caller)."""
-    if lines is None:
-        lines = line_digests_of(docs)
+def doc_line_counts(lines: DataFrame) -> DataFrame:
+    """(digest, n_docs): distinct-document posting counts per line over
+    a (doc_id, digest) ``lines`` frame -- the standing store's row
+    format.  The gate counts the ``line_digests_of`` a corpus or an
+    admitted micro-batch (``_line_counts_of``); the batch queries pass
+    the staged ``line_segments`` layer, so the corpus text is split once
+    per corpus, not once per caller."""
     return (
         lines.select("doc_id", "digest")
         .dropDuplicates(["doc_id", "digest"])
@@ -84,21 +73,18 @@ def doc_line_counts(
 
 
 def gate_lines_against(
-    batch_df: DataFrame,
+    lines: DataFrame,
     std_line_df: DataFrame,
-    threshold: float = LINE_BP_THRESHOLD,
-    lines: DataFrame | None = None,
+    threshold: float = LINE_GATE_THRESHOLD,
 ) -> DataFrame:
-    """Store-free core of the gate: per batch document, the line count,
-    boilerplate-line count (document frequency across standing + batch
-    reaches BOILERPLATE_DF), rounded boilerplate ratio, and the
-    admission verdict (unrounded ratio strictly below ``threshold``).
-    Registered as the oracle-checked query ``ingest_boilerplate_gate``
-    (queries/llm_filters.py).  ``lines`` overrides the segmentation
-    source with a precomputed (doc_id, digest) frame, same contract as
-    ``doc_line_counts``."""
-    if lines is None:
-        lines = line_digests_of(batch_df)
+    """Store-free core of the gate over the batch's (doc_id, digest)
+    ``lines`` and the standing (digest, n_docs) counts: per batch
+    document, the line count, boilerplate-line count (document frequency
+    across standing + batch reaches BOILERPLATE_DF), rounded boilerplate
+    ratio, and the admission verdict (unrounded ratio strictly below
+    ``threshold``).  Registered as the oracle-checked query
+    ``ingest_boilerplate_gate`` (queries/llm_filters.py), which passes
+    the staged ``line_segments`` rows of both sides."""
     batch_df_counts = (
         lines.dropDuplicates(["doc_id", "digest"])
         .groupBy("digest")
@@ -133,10 +119,16 @@ def gate_lines_against(
     )
 
 
+def _line_counts_of(docs: DataFrame) -> DataFrame:
+    """(digest, n_docs) of a document frame: the rows the line store
+    gains from a corpus build or an admitted micro-batch."""
+    return doc_line_counts(line_digests_of(docs))
+
+
 def gate_line_batch(
     batch_df: DataFrame,
     store_dir: str,
-    threshold: float = LINE_BP_THRESHOLD,
+    threshold: float = LINE_GATE_THRESHOLD,
     exclude_batch: int | None = None,
 ) -> DataFrame:
     """Gate ``batch_df`` against the standing line store (read by
@@ -149,7 +141,7 @@ def gate_line_batch(
         LINE_COUNTS_SCHEMA,
         exclude_batch,
     )
-    verdicts = gate_lines_against(batch_df, std, threshold)
+    verdicts = gate_lines_against(line_digests_of(batch_df), std, threshold)
     return batch_df.join(
         verdicts.filter(F.col("admitted")).select("doc_id"), "doc_id"
     )
@@ -167,7 +159,7 @@ def init_line_store(
         corpus_docs,
         store_dir,
         "line",
-        doc_line_counts,
+        _line_counts_of,
         {"line_counts": lambda counts: counts},
     )
 
@@ -177,7 +169,7 @@ def apply_line_gate_batch(
     batch_id: int,
     store_dir: str,
     accepted_dir: str,
-    threshold: float = LINE_BP_THRESHOLD,
+    threshold: float = LINE_GATE_THRESHOLD,
 ) -> int:
     """Idempotent per-batch body: gate, land survivors, extend the line
     store -- every write into a _batch=<id> partition via dynamic
@@ -196,7 +188,7 @@ def apply_line_gate_batch(
             batch_id,
             accepted_dir,
             batch_df.columns,
-            {f"{store_dir}/line_counts": doc_line_counts},
+            {f"{store_dir}/line_counts": _line_counts_of},
         )
     finally:
         batch_df.unpersist()
@@ -207,7 +199,7 @@ def stream_ingest_line_gate(
     store_dir: str,
     accepted_dir: str,
     checkpoint_dir: str,
-    threshold: float = LINE_BP_THRESHOLD,
+    threshold: float = LINE_GATE_THRESHOLD,
     on_batch_end=None,
 ) -> StreamingQuery:
     """Run the boilerplate gate over a documents stream through
