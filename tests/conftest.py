@@ -26,3 +26,10 @@ def jobs_during(spark, group: str, fn) -> int:
     finally:
         sc._jsc.clearJobGroup()
     return len(list(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def sql_bodied(fn) -> bool:
+    """Whether ``fn`` is a ``registry.register_sql`` body (the query's
+    oracle run through ``spark.sql``); all such bodies share one code
+    object."""
+    return fn.__code__.co_qualname == "register_sql.<locals>.fn"

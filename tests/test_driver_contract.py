@@ -29,7 +29,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, sql_bodied
 from tests.oracle_util import compare, driver_canonicalize, duck_connect
 from wsu_cpts_415_spark.io import tables
 from wsu_cpts_415_spark.registry import all_queries
@@ -113,9 +113,11 @@ def test_replaced_table_file_is_seen(spark, tmp_path, layout):
     compare(q6(spark, sf_dir), duck_connect(SF_ORACLE), sql)
 
 
-def test_tpch_round_loads_each_table_once(spark, monkeypatch):
-    """q1-q22 in one fresh session over one dataset read the fixture
-    tables once, for the session's views -- not once per query."""
+def test_sql_round_loads_each_table_once(spark, monkeypatch):
+    """Every query whose Spark body is its oracle SQL (TPC-H q1-q22 and
+    the relational operator families), run in one fresh session over
+    one dataset, reads the fixture tables once, for the session's views
+    -- not once per query."""
     calls = []
     load = tables.load_table
 
@@ -128,8 +130,8 @@ def test_tpch_round_loads_each_table_once(spark, monkeypatch):
         if getattr(module, "load_table", None) is load:
             monkeypatch.setattr(module, "load_table", counting)
     session = spark.newSession()
-    tpch = [q.fn for n, q in all_queries().items() if n[0] == "q" and n[1].isdigit()]
-    assert len(tpch) == 22
-    for fn in tpch:
+    sql = [q.fn for q in all_queries().values() if sql_bodied(q.fn)]
+    assert len(sql) == 22 + 37
+    for fn in sql:
         fn(session, SF_SMOKE)
     assert sorted(calls) == sorted(tables.TABLE_NAMES)

@@ -19,6 +19,8 @@ import pathlib
 import re
 import tokenize
 
+from tests.conftest import sql_bodied
+
 PKG = pathlib.Path(__file__).resolve().parent.parent / "wsu_cpts_415_spark"
 
 # literal-bounded outer collection: sequence(<int>, <int>) with constant
@@ -136,10 +138,7 @@ BROADCAST_ALLOWLIST: dict[str, dict[str, tuple[int, str]]] = {
         "tot": (2, "scalar: global count aggregates"),
     },
     "queries/joins.py": {
-        "customer": (1, "scaling-dim: TPC-H customer"),
         "dim": (1, "query: 4-row literal lookup table"),
-        "nation": (1, "fixed-dim: nation is 25 rows by TPC-H spec"),
-        "region": (1, "fixed-dim: region is 5 rows by TPC-H spec"),
     },
     "queries/llm_filters.py": {
         "bench": (1, "sliver: eval-set shingles (documented design)"),
@@ -166,15 +165,10 @@ BROADCAST_ALLOWLIST: dict[str, dict[str, tuple[int, str]]] = {
         "stats": (1, "scalar: avgdl + doc count"),
     },
     "queries/relational.py": {
-        "customer": (2, "scaling-dim: TPC-H customer"),
         "fa": (1, "scaling-dim: per-partkey order frequency"),
         "fb": (1, "scaling-dim: per-partkey order frequency"),
         "n_orders": (1, "scalar: global distinct order count"),
-        "nation": (2, "fixed-dim: nation is 25 rows by TPC-H spec"),
-        "p": (1, "scaling-dim: parent pk side of the FK audit"),
-        "part": (2, "scaling-dim: TPC-H part"),
-        "supplier": (1, "scaling-dim: TPC-H supplier"),
-        "tot": (1, "enum: revenue per part type"),
+        "part": (1, "scaling-dim: TPC-H part"),
     },
     "queries/similarity.py": {
         "q": (2, "query: the single probe vector"),
@@ -505,3 +499,69 @@ def test_derivation_lint_reads_code_not_docstrings():
         '"xxhash64(s)"',
         "xxhash64",
     ]
+
+
+# ---------------------------------------------------------------------------
+# Lint #8: a query of the relational operator modules is written once.
+# Where Spark runs the DuckDB oracle verbatim, that SQL text is the Spark
+# body (``registry.register_sql``): SQL text and DataFrames compile to the
+# same Catalyst plan, so a hand-written DataFrame copy costs code and buys
+# no plan.  A DataFrame body stays only with its reason here.
+
+_SQL_MODULES = {
+    f"wsu_cpts_415_spark.queries.{m}"
+    for m in (
+        "aggregates", "filters", "joins", "relational", "setops", "shapes",
+        "tpch", "windows",
+    )
+}
+
+DATAFRAME_BODIES: dict[str, str] = {
+    "approx_distinct": "value-diff oracle: Spark SQL's approx_count_distinct"
+                       " defaults to rsd 0.05, the body pins 0.02",
+    "copurchase_part_pairs": "staged layer: per-order part sets shared by"
+                             " three consumers",
+    "fulfillment_delay_stats": "DuckDB-only oracle: quantile_cont",
+    "join_asof_last_signup": "DuckDB-only oracle: ASOF JOIN",
+    "join_null_safe_eq": "DuckDB-only oracle: json_extract",
+    "join_shuffle_hash_hint": "hint: SHUFFLE_HASH, pinned by a plan gate",
+    "join_skew_salted": "kernel: ops.skew.salted_join",
+    "json_props_keys": "DuckDB-only oracle: json_keys, array_to_string",
+    "lag_lead": "DuckDB-only oracle: date_diff with a quoted unit",
+    "multi_agg_per_group": "DuckDB-only oracle: list, array_to_string",
+    "percent_rank_scalable": "kernel: top-k threshold, then a bounded rank",
+    "percentiles": "DuckDB-only oracle: quantile_cont",
+    "percentiles_approx": "DuckDB-only oracle: approx_quantile",
+    "pivot_status_by_flag": "API case: DataFrame pivot",
+    "posexplode_tokens": "DuckDB-only oracle: generate_subscripts, unnest",
+    "range_frame_sum": "DuckDB-only oracle: datediff with a quoted unit",
+    "return_rate_by_brand": "value-diff oracle: Spark SQL types the rate as"
+                            " a decimal, DuckDB as a double",
+    "revenue_waterfall": "DuckDB-only oracle: LATERAL VALUES over columns",
+    "runtime_bloom_pruned_join": "hint: conf-scoped runtime bloom filter,"
+                                 " pinned by a plan gate",
+    "string_agg_per_group": "DuckDB-only oracle: string_agg ... ORDER BY",
+    "string_funcs": "value-diff oracle: its regex literal reads '\\d' as 'd'"
+                    " in Spark SQL",
+    "topk_with_ties_dense_rank": "plan gate: the oracle's second window"
+                                 " blocks WindowGroupLimit",
+    "unpivot_measures": "API case: DataFrame unpivot",
+    "weekly_ohlc_orders": "DuckDB-only oracle: arg_min, arg_max",
+}
+
+
+def test_relational_queries_have_no_dataframe_twin():
+    from wsu_cpts_415_spark.registry import all_queries
+
+    bodies = {
+        n for n, q in all_queries().items()
+        if q.fn.__module__ in _SQL_MODULES and not sql_bodied(q.fn)
+    }
+    unlisted = sorted(bodies - DATAFRAME_BODIES.keys())
+    stale = sorted(DATAFRAME_BODIES.keys() - bodies)
+    assert not unlisted, (
+        "DataFrame bodies next to an oracle Spark can run -- register the "
+        "oracle with registry.register_sql, or add a reason to "
+        "DATAFRAME_BODIES:\n" + "\n".join(unlisted)
+    )
+    assert not stale, f"DATAFRAME_BODIES entries with no DataFrame body: {stale}"

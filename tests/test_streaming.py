@@ -4,11 +4,15 @@ and the custom stateful operator's final state matches a batch groupBy."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
+from py4j import protocol
 
 from tests.conftest import SF_SMOKE
 from wsu_cpts_415_spark.io.tables import load_table
 from wsu_cpts_415_spark.streaming.jobs import (
+    path_exists,
     read_events_stream,
     run_available_now,
     running_user_totals,
@@ -359,3 +363,27 @@ def test_watermark_drops_late_rows_and_reports_metric(spark, tmp_path):
     days = sorted(r["w"]["start"].day for r in rows)
     assert dropped == 1, f"expected 1 watermark-dropped row, got {dropped}"
     assert days == [10, 10], f"late March-1 row leaked into results: {days}"
+
+
+def test_path_exists_makes_three_gateway_round_trips(spark, tmp_path, monkeypatch):
+    """A warm ``path_exists`` builds the Hadoop ``Path``, gets its
+    FileSystem and asks it: three Py4J round trips.  Resolving
+    ``org.apache.hadoop.fs.Path`` package by package and fetching the
+    Hadoop configuration on every call made nine."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, caller, sent = client.send_command, threading.get_ident(), []
+    delete = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counting(command, *args, **kwargs):
+        # this thread's commands only: py4j's finalizer thread sends the
+        # deletes of collected proxies whenever it runs
+        if threading.get_ident() == caller and not command.startswith(delete):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    path_exists(spark, str(tmp_path))  # warm
+    monkeypatch.setattr(client, "send_command", counting)
+    assert path_exists(spark, str(tmp_path))
+    assert not path_exists(spark, str(tmp_path / "missing"))
+    monkeypatch.undo()
+    assert len(sent) == 2 * 3

@@ -1,6 +1,15 @@
 """Aggregation queries (SURVEY.md §2.4: A1-A8) plus engine extras the
 reference lacks (rollup/cube, grouping sets, approx aggregates,
-percentiles)."""
+percentiles).
+
+A query whose oracle Spark runs verbatim is registered from that SQL
+text alone (``registry.register_sql``); the DataFrame bodies left here are
+oracles only DuckDB can run (``quantile_cont``, ``list``,
+``string_agg ... ORDER BY``) or whose sketch settings differ from
+Spark's SQL defaults.
+``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives each
+DataFrame body's reason.
+"""
 
 from __future__ import annotations
 
@@ -8,12 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 
-@register(
+register_sql(
     "group_count",
-    oracle="""
+    """A1 word-count shape (analyze_links.py:125-131) done right:
+    count(*) with partial aggregation, not sum(lit(1)).""",
+    """
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders
     FROM orders
@@ -21,15 +32,6 @@ from wsu_cpts_415_spark.registry import register
     ORDER BY o_orderpriority
     """,
 )
-def group_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 word-count shape (analyze_links.py:125-131) done right:
-    count(*) with partial aggregation, not sum(lit(1))."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_orders"))
-        .orderBy("o_orderpriority")
-    )
 
 
 @register(
@@ -92,9 +94,11 @@ def multi_agg_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "dup_detection",
-    oracle="""
+    """A7 duplicate-key detection (validate_data.py:74-83 Mongo pipeline)
+    as GROUP BY + HAVING.""",
+    """
     SELECT o_custkey,
            CAST(COUNT(*) AS BIGINT) AS n
     FROM orders
@@ -103,21 +107,12 @@ def multi_agg_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, o_custkey
     """,
 )
-def dup_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 duplicate-key detection (validate_data.py:74-83 Mongo pipeline)
-    as groupBy + having."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_custkey")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-        .orderBy(F.col("n").desc(), F.col("o_custkey"))
-    )
 
-
-@register(
+register_sql(
     "rollup_agg",
-    oracle="""
+    """ROLLUP hierarchy totals -- engine extra (SURVEY.md §2.4 'not
+    present'); one shuffle, grouping-set expansion is map-side.""",
+    """
     SELECT l_returnflag, l_linestatus,
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
@@ -126,26 +121,11 @@ def dup_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
 )
-def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals -- engine extra (SURVEY.md §2.4 'not
-    present'); one shuffle, grouping-set expansion is map-side."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"),
-        )
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        )
-    )
 
-
-@register(
+register_sql(
     "cube_agg",
-    oracle="""
+    """CUBE over two low-cardinality dims -- engine extra.""",
+    """
     SELECT o_orderstatus, o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n,
            ROUND(SUM(o_totalprice), 2) AS revenue
@@ -154,39 +134,17 @@ def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
     """,
 )
-def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over two low-cardinality dims -- engine extra."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-        .orderBy(
-            F.col("o_orderstatus").asc_nulls_first(),
-            F.col("o_orderpriority").asc_nulls_first(),
-        )
-    )
 
-
-@register(
+register_sql(
     "distinct_counts",
-    oracle="""
+    """Exact multi-column distinct counts (expand + two-phase agg).""",
+    """
     SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_parts,
            CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
            CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_orders
     FROM lineitem
     """,
 )
-def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact multi-column distinct counts (expand + two-phase agg)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_supps"),
-        F.countDistinct("l_orderkey").alias("n_orders"),
-    )
 
 
 @register(
@@ -266,9 +224,11 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "stats_moments",
-    oracle="""
+    """Statistical aggregates incl. Pearson corr (A5 building block --
+    correlation_analysis.py:100-110 is composed from these pairwise).""",
+    """
     SELECT ROUND(AVG(l_quantity), 6) AS mean_qty,
            ROUND(stddev_samp(l_quantity), 6) AS sd_qty,
            ROUND(var_samp(l_quantity), 6) AS var_qty,
@@ -277,22 +237,17 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     """,
 )
-def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregates incl. Pearson corr (A5 building block --
-    correlation_analysis.py:100-110 is composed from these pairwise)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.round(F.avg("l_quantity"), 6).alias("mean_qty"),
-        F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
-        F.round(F.var_samp("l_quantity"), 6).alias("var_qty"),
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-        F.round(F.covar_samp("l_quantity", "l_extendedprice"), 4).alias("cov_qty_price"),
-    )
 
-
-@register(
+register_sql(
     "schema_completeness_scan",
-    oracle="""
+    """A8 schema-completeness scan: per-column null counts over a bounded
+    sample (reference validate_data.py:45-69 loops 10,000 docs client-side
+    and -- a known bug -- checks flat field names that never existed in
+    the nested documents; here the canonical schema is checked with ONE
+    aggregate).  The bound is a deterministic key range, not the
+    reference's order-dependent first-10000, so results are reproducible
+    and the predicate is scan-prunable.""",
+    """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_scanned,
            CAST(SUM(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
                AS null_event_id,
@@ -310,22 +265,6 @@ def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_id < 10000
     """,
 )
-def schema_completeness_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8 schema-completeness scan: per-column null counts over a bounded
-    sample (reference validate_data.py:45-69 loops 10,000 docs client-side
-    and -- a known bug -- checks flat field names that never existed in
-    the nested documents; here the canonical schema is checked with ONE
-    aggregate).  The bound is a deterministic key range, not the
-    reference's order-dependent first-10000, so results are reproducible
-    and the predicate is scan-prunable."""
-    events = load_table(spark, sf_dir, "events")
-    nulls = [
-        F.sum(F.col(c).isNull().cast("bigint")).alias(f"null_{c}")
-        for c in ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    ]
-    return events.filter(F.col("event_id") < 10000).agg(
-        F.count("*").alias("n_scanned"), *nulls
-    )
 
 
 @register(

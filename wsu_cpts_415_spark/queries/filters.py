@@ -6,6 +6,12 @@ conjunctive quality filters (reference trending_predictor.py:63-70), casts
 between (trending_predictor.py:67,110), date parts
 (correlation_analysis.py:86-88), log1p feature math
 (trending_predictor.py:79,93).
+
+A query whose oracle Spark runs verbatim is registered from that SQL
+text alone (``registry.register_sql``); ``string_funcs`` keeps its DataFrame
+body because its oracle's regex literal reads differently in Spark SQL.
+``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives each
+DataFrame body's reason.
 """
 
 from __future__ import annotations
@@ -14,12 +20,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 
-@register(
+register_sql(
     "filter_conjunctive",
-    oracle="""
+    """Conjunctive quality filter (P2: trending_predictor.py:63-70 shape).
+
+    All predicates are plain column comparisons, so every one of them is
+    pushed to the parquet scan (PushedFilters) -- at 100 TB the scan
+    skips whole row groups via min/max stats instead of filtering rows.
+    """,
+    """
     SELECT l_orderkey, l_linenumber, l_quantity,
            l_extendedprice * (1 - l_discount) AS net_price
     FROM lineitem
@@ -30,31 +42,12 @@ from wsu_cpts_415_spark.registry import register
       AND l_returnflag IS NOT NULL
     """,
 )
-def filter_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conjunctive quality filter (P2: trending_predictor.py:63-70 shape).
 
-    All predicates are plain Column expressions, so every one of them is
-    pushed to the parquet scan (PushedFilters) -- at 100 TB the scan
-    skips whole row groups via min/max stats instead of filtering rows.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 10)
-        & F.col("l_returnflag").isNotNull()
-    ).select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_quantity",
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("net_price"),
-    )
-
-
-@register(
+register_sql(
     "project_cast_arith",
-    oracle="""
+    """Type casts + arithmetic + log1p feature math (P4/F3/F4:
+    correlation_analysis.py:90-98, trending_predictor.py:77-94).""",
+    """
     SELECT p_partkey,
            CAST(p_size AS DOUBLE) AS size_d,
            CAST(FLOOR(p_retailprice) AS BIGINT) AS price_int,
@@ -63,22 +56,12 @@ def filter_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     """,
 )
-def project_cast_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type casts + arithmetic + log1p feature math (P4/F3/F4:
-    correlation_analysis.py:90-98, trending_predictor.py:77-94)."""
-    part = load_table(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey",
-        F.col("p_size").cast("double").alias("size_d"),
-        F.floor("p_retailprice").alias("price_int"),
-        F.round(F.log1p("p_retailprice") * 10.0, 6).alias("log_price"),
-        F.upper("p_brand").alias("brand_u"),
-    )
 
-
-@register(
+register_sql(
     "case_when_ladder",
-    oracle="""
+    """Multi-branch CASE (F5: trending_predictor.py:97-114 length-score
+    ladder) feeding an aggregate.""",
+    """
     SELECT CASE
              WHEN p_size < 10 THEN 'small'
              WHEN p_size BETWEEN 10 AND 25 THEN 'medium'
@@ -93,40 +76,11 @@ def project_cast_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY size_class
     """,
 )
-def case_when_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-branch CASE (F5: trending_predictor.py:97-114 length-score
-    ladder) feeding an aggregate."""
-    part = load_table(spark, sf_dir, "part")
-    size_class = (
-        F.when(F.col("p_size") < 10, "small")
-        .when(F.col("p_size").between(10, 25), "medium")
-        .when(F.col("p_size").between(26, 40), "large")
-        .otherwise("jumbo")
-    )
-    return (
-        part.select(size_class.alias("size_class"), "p_retailprice")
-        .groupBy("size_class")
-        .agg(
-            F.count("*").alias("n"),
-            # exact-cents half-up average in integer space (see
-            # multi_agg_per_group): immune to the cross-engine rounding
-            # divergence on exact half-cent means
-            (
-                F.floor(
-                    (2 * F.sum(F.round(F.col("p_retailprice") * 100, 0))
-                     + F.count("*"))
-                    / (2 * F.count("*"))
-                )
-                / 100.0
-            ).alias("avg_price"),
-        )
-        .orderBy("size_class")
-    )
 
-
-@register(
+register_sql(
     "date_parts",
-    oracle="""
+    """Date-part extraction + group (F8: correlation_analysis.py:86-88).""",
+    """
     SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
            CAST(EXTRACT(month FROM o_orderdate) AS INT) AS mo,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -136,22 +90,6 @@ def case_when_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY yr, mo
     """,
 )
-def date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date-part extraction + group (F8: correlation_analysis.py:86-88)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.select(
-            F.year("o_orderdate").alias("yr"),
-            F.month("o_orderdate").alias("mo"),
-            "o_totalprice",
-        )
-        .groupBy("yr", "mo")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-        .orderBy("yr", "mo")
-    )
 
 
 @register(

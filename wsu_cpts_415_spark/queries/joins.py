@@ -2,9 +2,16 @@
 (J1, analyze_links.py:141); the engine exposes Spark's full join surface.
 
 Scale notes apply to every query here: dimension tables (region, nation,
-customer at fixture scale; region/nation always) are broadcast so the fact
-side never shuffles for the join; fact-fact joins shuffle on the join key
-once and AQE handles skew.
+customer at fixture scale; region/nation always) are broadcast by size
+(``spark.sql.autoBroadcastJoinThreshold``) so the fact side never
+shuffles for the join; fact-fact joins shuffle on the join key once and
+AQE handles skew.
+
+A query whose oracle Spark runs verbatim is registered from that SQL
+text alone (``registry.register_sql``); the DataFrame bodies left here are
+a kernel, join-strategy hints and oracles only DuckDB can run.
+``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives each
+DataFrame body's reason.
 """
 
 from __future__ import annotations
@@ -13,12 +20,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 
-@register(
+register_sql(
     "join_star_revenue",
-    oracle="""
+    """Five-table star join -> revenue by region/nation.
+
+    lineitem⋈orders is the only shuffle join (both fact-sized, equi on
+    orderkey); customer/nation/region are broadcast by size
+    (``spark.sql.autoBroadcastJoinThreshold``), so the enriched fact
+    stream never re-shuffles until the final GROUP BY.""",
+    """
     SELECT r.r_name AS region,
            n.n_name AS nation,
            CAST(COUNT(*) AS BIGINT) AS n_items,
@@ -32,36 +45,12 @@ from wsu_cpts_415_spark.registry import register
     ORDER BY region, nation
     """,
 )
-def join_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Five-table star join -> revenue by region/nation.
 
-    lineitem⋈orders is the only shuffle join (both fact-sized, equi on
-    orderkey); customer/nation/region are broadcast, so the enriched fact
-    stream never re-shuffles until the final groupBy."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-        .agg(
-            F.count("*").alias("n_items"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            ),
-        )
-        .orderBy("region", "nation")
-    )
-
-
-@register(
+register_sql(
     "join_left_outer",
-    oracle="""
+    """Left outer join preserving customers with zero orders; COUNT(col)
+    ignores the null-extended rows.""",
+    """
     SELECT c.c_custkey,
            c.c_name,
            CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders
@@ -71,22 +60,13 @@ def join_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.c_custkey
     """,
 )
-def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join preserving customers with zero orders; COUNT(col)
-    ignores the null-extended rows."""
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        customer.join(orders, orders.o_custkey == customer.c_custkey, "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-        .orderBy("c_custkey")
-    )
 
-
-@register(
+register_sql(
     "join_semi",
-    oracle="""
+    """Left-semi join (EXISTS): customers with at least one urgent order.
+    Semi-join keeps the build side tiny -- only the key column crosses the
+    wire, no row multiplication.""",
+    """
     SELECT c_custkey, c_name, c_mktsegment
     FROM customer c
     WHERE EXISTS (
@@ -96,23 +76,13 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c_custkey
     """,
 )
-def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join (EXISTS): customers with at least one urgent order.
-    Semi-join keeps the build side tiny -- only the key column crosses the
-    wire, no row multiplication."""
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        customer.join(urgent, urgent.o_custkey == customer.c_custkey, "left_semi")
-        .select("c_custkey", "c_name", "c_mktsegment")
-        .orderBy("c_custkey")
-    )
 
-
-@register(
+register_sql(
     "join_anti",
-    oracle="""
+    """Left-anti join (NOT EXISTS): parts never ordered in bulk
+    (no lineitem with quantity > 45).  The engine's reject-analysis /
+    dedup-diff primitive (SURVEY.md §2.5 note).""",
+    """
     SELECT p.p_partkey, p.p_name
     FROM part p
     WHERE NOT EXISTS (
@@ -122,23 +92,12 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p.p_partkey
     """,
 )
-def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join (NOT EXISTS): parts never ordered in bulk
-    (no lineitem with quantity > 45).  The engine's reject-analysis /
-    dedup-diff primitive (SURVEY.md §2.5 note)."""
-    part = load_table(spark, sf_dir, "part")
-    li = load_table(spark, sf_dir, "lineitem")
-    bulk = li.filter(F.col("l_quantity") > 45)
-    return (
-        part.join(bulk, bulk.l_partkey == part.p_partkey, "left_anti")
-        .select("p_partkey", "p_name")
-        .orderBy("p_partkey")
-    )
 
-
-@register(
+register_sql(
     "join_full_outer",
-    oracle="""
+    """Full outer join of two aggregates (nations with customers and/or
+    suppliers), null-sides coalesced to 0.""",
+    """
     WITH cust_n AS (
         SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust
         FROM customer GROUP BY c_nationkey
@@ -154,27 +113,15 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY nationkey
     """,
 )
-def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join of two aggregates (nations with customers and/or
-    suppliers), null-sides coalesced to 0."""
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    cust_n = customer.groupBy("c_nationkey").agg(F.count("*").alias("n_cust"))
-    supp_n = supplier.groupBy("s_nationkey").agg(F.count("*").alias("n_supp"))
-    return (
-        cust_n.join(supp_n, cust_n.c_nationkey == supp_n.s_nationkey, "full_outer")
-        .select(
-            F.coalesce("c_nationkey", "s_nationkey").alias("nationkey"),
-            F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-            F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-        )
-        .orderBy("nationkey")
-    )
 
-
-@register(
+register_sql(
     "join_range_theta",
-    oracle="""
+    """Theta join: equi part (nationkey) + range predicate (acctbal >).
+
+    Spark plans the equi component as the join key (hash/broadcast) and
+    evaluates the range predicate as a post-join filter -- the scalable
+    formulation of an otherwise O(n*m) nested loop.""",
+    """
     SELECT s.s_suppkey,
            CAST(COUNT(*) AS BIGINT) AS n_richer_cust
     FROM supplier s
@@ -183,24 +130,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY s.s_suppkey
     """,
 )
-def join_range_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta join: equi part (nationkey) + range predicate (acctbal >).
-
-    Spark plans the equi component as the join key (hash/broadcast) and
-    evaluates the range predicate as a post-join filter -- the scalable
-    formulation of an otherwise O(n*m) nested loop."""
-    supplier = load_table(spark, sf_dir, "supplier")
-    customer = load_table(spark, sf_dir, "customer")
-    return (
-        supplier.join(
-            customer,
-            (customer.c_nationkey == supplier.s_nationkey)
-            & (customer.c_acctbal > supplier.s_acctbal),
-        )
-        .groupBy("s_suppkey")
-        .agg(F.count("*").alias("n_richer_cust"))
-        .orderBy("s_suppkey")
-    )
 
 
 @register(

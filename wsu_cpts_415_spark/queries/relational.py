@@ -2,19 +2,24 @@
 
 Each query is the Spark-first expression of an operator family from
 SURVEY.md §2 (reference file:line cited per query).  The flagship
-``links_top_linked`` transposes the reference's link-analysis join
+``flagship_top_customers`` transposes the reference's link-analysis join
 (analyze_links.py:111-145: explode -> count -> join -> sort) onto
 orders/customer.
+
+A query whose oracle Spark runs verbatim is registered from that SQL
+text alone (``registry.register_sql``).  The DataFrame bodies left here
+are a staged layer (``copurchase_part_pairs``) and queries whose oracle
+only DuckDB can run or differs from Spark in value; ``DATAFRAME_BODIES``
+in ``tests/test_source_lints.py`` gives each one's reason.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 TOP_K = 20
 
@@ -23,9 +28,20 @@ TOP_K = 20
 # Flagship: A1 group-count + J1 inner join + O1/O3 sort/top-k
 # (reference analyze_links.py:120-145, transposed onto orders/customer)
 # --------------------------------------------------------------------------
-@register(
+register_sql(
     "flagship_top_customers",
-    oracle=f"""
+    """Top customers by order count: aggregate the fact side FIRST (so the
+    join input is one row per customer), join the dimension, then
+    TakeOrderedAndProject for the top-k.
+
+    Scale notes: the aggregate shuffles orders once on o_custkey with
+    map-side partial aggregation; customer is a dimension -> broadcast by
+    size, no shuffle of the aggregated side; ORDER BY ... LIMIT k compiles to
+    TakeOrderedAndProject (per-partition heap + driver merge), never a
+    global sort.  The reference instead sorts the counts table BEFORE its
+    join (analyze_links.py:126-131) -- dead work we drop.
+    """,
+    f"""
     SELECT c.c_custkey,
            c.c_name,
            oc.order_cnt,
@@ -42,40 +58,16 @@ TOP_K = 20
     LIMIT {TOP_K}
     """,
 )
-def flagship_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top customers by order count: aggregate the fact side FIRST (so the
-    join input is one row per customer), broadcast-join the dimension, then
-    TakeOrderedAndProject for the top-k.
 
-    Scale notes: the aggregate shuffles orders once on o_custkey with
-    map-side partial aggregation; customer is a dimension -> broadcast, no
-    shuffle of the aggregated side; orderBy().limit(k) compiles to
-    TakeOrderedAndProject (per-partition heap + driver merge), never a
-    global sort.  The reference instead sorts the counts table BEFORE its
-    join (analyze_links.py:126-131) -- dead work we drop.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    counts = orders.groupBy("o_custkey").agg(
-        F.count("*").alias("order_cnt"),
-        F.sum("o_totalprice").alias("total_spent"),
-    )
-    return (
-        counts.join(F.broadcast(customer), counts.o_custkey == customer.c_custkey, "inner")
-        .select(
-            "c_custkey",
-            "c_name",
-            "order_cnt",
-            F.round("total_spent", 2).alias("total_spent"),
-        )
-        .orderBy(F.col("order_cnt").desc(), F.col("c_custkey").asc())
-        .limit(TOP_K)
-    )
-
-
-@register(
+register_sql(
     "sample_systematic",
-    oracle="""
+    """Deterministic 5% systematic sample (key mod 20) aggregated per
+    priority -- the reproducible subsetting pattern for pipeline
+    debugging at scale.  Unlike TABLESAMPLE/df.sample, the predicate is
+    engine-independent (same rows in Spark and DuckDB) and pushes to the
+    scan; for unbiased estimates on skewed keys switch the predicate to
+    a hash of the key, same shape.""",
+    """
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_sampled,
            ROUND(SUM(o_totalprice), 2) AS sampled_total
@@ -85,23 +77,6 @@ def flagship_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderpriority
     """,
 )
-def sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 5% systematic sample (key mod 20) aggregated per
-    priority -- the reproducible subsetting pattern for pipeline
-    debugging at scale.  Unlike TABLESAMPLE/df.sample, the predicate is
-    engine-independent (same rows in Spark and DuckDB) and pushes to the
-    scan; for unbiased estimates on skewed keys switch the predicate to
-    a hash of the key, same shape."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.filter(F.col("o_orderkey") % 20 == 0)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n_sampled"),
-            F.round(F.sum("o_totalprice"), 2).alias("sampled_total"),
-        )
-        .orderBy("o_orderpriority")
-    )
 
 
 _FK_RELS = [
@@ -116,19 +91,8 @@ _FK_RELS = [
 ]
 
 
-@register(
+register_sql(
     "fk_orphan_audit",
-    oracle="\n    UNION ALL\n".join(
-        f"""SELECT '{name}' AS relationship,
-           CAST(COUNT(*) AS BIGINT) AS n_child_rows,
-           CAST(COUNT(*) FILTER (WHERE p.{pk} IS NULL) AS BIGINT) AS n_orphans
-    FROM {child} c LEFT JOIN (SELECT DISTINCT {pk} FROM {parent}) p
-      ON c.{ck} = p.{pk}"""
-        for name, child, ck, parent, pk in _FK_RELS
-    )
-    + "\n    ORDER BY relationship",
-)
-def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit: for every foreign-key relationship in
     the star schema, how many child rows point at a missing parent --
     the data-quality gate a warehouse load runs before publishing (the
@@ -141,34 +105,28 @@ def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join never moves more than (child_key) columns; counts are
     map-side combined.  Relationships are independent, so on a cluster
     all seven run concurrently inside one action (the union is of
-    1-row aggregates, not data)."""
-    results = None
-    for name, child, ck, parent, pk in _FK_RELS:
-        c = load_table(spark, sf_dir, child).select(F.col(ck).alias("ck"))
-        p = (
-            load_table(spark, sf_dir, parent)
-            .select(F.col(pk).alias("pk"))
-            .distinct()
-        )
-        one = (
-            c.join(F.broadcast(p), F.col("ck") == F.col("pk"), "left")
-            .agg(
-                F.count("*").alias("n_child_rows"),
-                F.sum(F.when(F.col("pk").isNull(), 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_orphans"),
-            )
-            .select(
-                F.lit(name).alias("relationship"), "n_child_rows", "n_orphans"
-            )
-        )
-        results = one if results is None else results.unionByName(one)
-    return results.orderBy("relationship")
+    1-row aggregates, not data).""",
+    "\n    UNION ALL\n".join(
+        f"""SELECT '{name}' AS relationship,
+           CAST(COUNT(*) AS BIGINT) AS n_child_rows,
+           CAST(COUNT(*) FILTER (WHERE p.{pk} IS NULL) AS BIGINT) AS n_orphans
+    FROM {child} c LEFT JOIN (SELECT DISTINCT {pk} FROM {parent}) p
+      ON c.{ck} = p.{pk}"""
+        for name, child, ck, parent, pk in _FK_RELS
+    )
+    + "\n    ORDER BY relationship",
+)
 
-
-@register(
+register_sql(
     "monthly_revenue_growth",
-    oracle="""
+    """Period-over-period reporting: monthly revenue with
+    month-over-month and year-over-year growth percentages (LAG 1 and
+    LAG 12 over the month series) -- the canonical finance trend table.
+
+    Scale: orders collapse to |months| rows before the lag window; the
+    calendar-bounded series makes the unpartitioned window safe at any
+    corpus size (same grain argument as CUSUM/KM).""",
+    """
     WITH monthly AS (
         SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
                ROUND(SUM(o_totalprice), 2) AS revenue,
@@ -186,36 +144,6 @@ def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY month
     """,
 )
-def monthly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Period-over-period reporting: monthly revenue with
-    month-over-month and year-over-year growth percentages (LAG 1 and
-    LAG 12 over the month series) -- the canonical finance trend table.
-
-    Scale: orders collapse to |months| rows before the lag window; the
-    calendar-bounded series makes the unpartitioned window safe at any
-    corpus size (same grain argument as CUSUM/KM)."""
-    orders = load_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.trunc("o_orderdate", "month").alias("month")
-    ).agg(
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        F.count("*").alias("n_orders"),
-    )
-    w = Window.orderBy("month")
-    prev = F.lag("revenue").over(w)
-    prev12 = F.lag("revenue", 12).over(w)
-    return monthly.select(
-        "month",
-        "revenue",
-        "n_orders",
-        F.round(F.col("revenue") - prev, 2).alias("mom_change"),
-        F.round((F.col("revenue") / F.nullif(prev, F.lit(0)) - 1) * 100, 4).alias(
-            "mom_pct"
-        ),
-        F.round(
-            (F.col("revenue") / F.nullif(prev12, F.lit(0)) - 1) * 100, 4
-        ).alias("yoy_pct"),
-    ).orderBy("month")
 
 
 @register(
@@ -300,9 +228,16 @@ def revenue_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "order_gap_histogram",
-    oracle="""
+    """Purchase-cycle analysis: the distribution of day-gaps between a
+    customer's consecutive orders, bucketed by month -- the input to
+    replenishment forecasting and churn-risk cutoffs ("customers whose
+    gap exceeds their historical p90 are churning").
+
+    Scale: one customer-partitioned window (lag over each customer's
+    order history), then a rollup on the bounded month-bucket key.""",
+    """
     WITH gaps AS (
         SELECT o_custkey,
                CAST(CAST(o_orderdate AS DATE)
@@ -322,36 +257,6 @@ def revenue_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY gap_bucket_months
     """,
 )
-def order_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Purchase-cycle analysis: the distribution of day-gaps between a
-    customer's consecutive orders, bucketed by month -- the input to
-    replenishment forecasting and churn-risk cutoffs ("customers whose
-    gap exceeds their historical p90 are churning").
-
-    Scale: one customer-partitioned window (lag over each customer's
-    order history), then a rollup on the bounded month-bucket key."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gaps = orders.select(
-        F.datediff(
-            F.to_date("o_orderdate"), F.to_date(F.lag("o_orderdate").over(w))
-        )
-        .cast("bigint")
-        .alias("gap_days")
-    ).filter(F.col("gap_days").isNotNull())
-    return (
-        gaps.groupBy(
-            F.floor(F.col("gap_days") / 30.0).cast("bigint").alias(
-                "gap_bucket_months"
-            )
-        )
-        .agg(
-            F.count("*").alias("n_gaps"),
-            F.min("gap_days").alias("min_days"),
-            F.max("gap_days").alias("max_days"),
-        )
-        .orderBy("gap_bucket_months")
-    )
 
 
 @register(
@@ -571,9 +476,15 @@ def return_rate_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "supplier_concentration_hhi",
-    oracle="""
+    """Supply-chain concentration: the Herfindahl-Hirschman index of
+    supplier revenue shares within each part type (1/n = perfectly
+    split, 1.0 = single-sourced) -- the procurement-risk screen.
+
+    Scale: one fact scan to the (type, supplier) grain, a |types|-row
+    broadcast of totals, rollup on the bounded type key.""",
+    """
     WITH by_type AS (
         SELECT p.p_type, l.l_suppkey,
                SUM(l.l_extendedprice * (1 - l.l_discount)) AS rev
@@ -592,46 +503,14 @@ def return_rate_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY b.p_type
     """,
 )
-def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supply-chain concentration: the Herfindahl-Hirschman index of
-    supplier revenue shares within each part type (1/n = perfectly
-    split, 1.0 = single-sourced) -- the procurement-risk screen.
 
-    Scale: one fact scan to the (type, supplier) grain, a |types|-row
-    broadcast of totals, rollup on the bounded type key."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    by_type = (
-        li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .groupBy("p_type", "l_suppkey")
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "rev"
-            )
-        )
-    )
-    tot = by_type.groupBy(F.col("p_type").alias("t_type")).agg(
-        F.sum("rev").alias("type_rev")
-    )
-    return (
-        by_type.join(
-            F.broadcast(tot), by_type["p_type"] == tot["t_type"]
-        )
-        .groupBy("p_type")
-        .agg(
-            F.count("*").alias("n_suppliers"),
-            F.round(F.max("type_rev"), 2).alias("type_revenue"),
-            F.round(
-                F.sum(F.pow(F.col("rev") / F.col("type_rev"), 2)), 6
-            ).alias("hhi"),
-        )
-        .orderBy("p_type")
-    )
-
-
-@register(
+register_sql(
     "discount_effectiveness",
-    oracle="""
+    """Discount-elasticity view: average quantity and the net-revenue /
+    discount-cost tradeoff per discount percentage band -- does a
+    deeper discount actually move more units (the q6 what-if, as a
+    report).  Scale: single scan, rollup on ~11 discount bands.""",
+    """
     SELECT CAST(ROUND(l_discount * 100) AS BIGINT) AS discount_pct,
            CAST(COUNT(*) AS BIGINT) AS n_lines,
            ROUND(AVG(l_quantity), 4) AS avg_quantity,
@@ -642,35 +521,18 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY discount_pct
     """,
 )
-def discount_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discount-elasticity view: average quantity and the net-revenue /
-    discount-cost tradeoff per discount percentage band -- does a
-    deeper discount actually move more units (the q6 what-if, as a
-    report).  Scale: single scan, rollup on ~11 discount bands."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy(
-            F.round(F.col("l_discount") * 100)
-            .cast("bigint")
-            .alias("discount_pct")
-        )
-        .agg(
-            F.count("*").alias("n_lines"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_quantity"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("net_revenue"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2
-            ).alias("discount_cost"),
-        )
-        .orderBy("discount_pct")
-    )
 
-
-@register(
+register_sql(
     "nation_trade_balance",
-    oracle="""
+    """Two-sided national ledger: revenue each nation SUPPLIES (via its
+    suppliers' line items) vs CONSUMES (via its customers' orders), and
+    the balance -- the q7 volume-shipping view folded into one
+    per-nation report.
+
+    Scale: two independent star rollups over the same fact scan shape
+    (dims broadcast, one fact shuffle each onto the 25-nation key),
+    then a full-outer join of two 25-row tables.""",
+    """
     WITH supply_side AS (
         SELECT n.n_name AS nation,
                SUM(l.l_extendedprice * (1 - l.l_discount)) AS supplied
@@ -697,60 +559,6 @@ def discount_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY nation
     """,
 )
-def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sided national ledger: revenue each nation SUPPLIES (via its
-    suppliers' line items) vs CONSUMES (via its customers' orders), and
-    the balance -- the q7 volume-shipping view folded into one
-    per-nation report.
-
-    Scale: two independent star rollups over the same fact scan shape
-    (dims broadcast, one fact shuffle each onto the 25-nation key),
-    then a full-outer join of two 25-row tables."""
-    li = load_table(spark, sf_dir, "lineitem")
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    supplier = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    customer = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    net = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("net")
-    supply = (
-        li.select("l_suppkey", net)
-        .join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("s_nation"))
-        .agg(F.sum("net").alias("supplied"))
-    )
-    demand = (
-        li.select("l_orderkey", net)
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("d_nation"))
-        .agg(F.sum("net").alias("consumed"))
-    )
-    return (
-        supply.join(
-            demand, supply["s_nation"] == demand["d_nation"], "full_outer"
-        )
-        .select(
-            F.coalesce("s_nation", "d_nation").alias("nation"),
-            F.round(F.coalesce("supplied", F.lit(0.0)), 2).alias(
-                "supplied_revenue"
-            ),
-            F.round(F.coalesce("consumed", F.lit(0.0)), 2).alias(
-                "consumed_revenue"
-            ),
-            F.round(
-                F.coalesce("supplied", F.lit(0.0))
-                - F.coalesce("consumed", F.lit(0.0)),
-                2,
-            ).alias("trade_balance"),
-        )
-        .orderBy("nation")
-    )
 
 
 @register(

@@ -1,34 +1,20 @@
 """Set-operation queries (SURVEY.md §2.8: none in the reference; free in
-Spark, exposed by the engine)."""
+Spark, exposed by the engine).
+
+Each query is written once, as SQL: its DuckDB oracle is also its Spark
+body, run through ``spark.sql`` over the fixture views
+(``registry.register_sql``).  Catalyst plans INTERSECT/EXCEPT as semi
+and anti joins, and the ALL forms as count-compare aggregates.
+"""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from wsu_cpts_415_spark.registry import register_sql
 
-from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
-
-
-def _urgent_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("custkey"))
-        .distinct()
-    )
-
-
-def _building_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    return customer.filter(F.col("c_mktsegment") == "BUILDING").select(
-        F.col("c_custkey").alias("custkey")
-    )
-
-
-@register(
+register_sql(
     "set_union_distinct",
-    oracle="""
+    """UNION (distinct): customers urgent-ordering OR in BUILDING.""",
+    """
     SELECT custkey FROM (
         SELECT DISTINCT o_custkey AS custkey FROM orders
         WHERE o_orderpriority = '1-URGENT'
@@ -39,16 +25,12 @@ def _building_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custkey
     """,
 )
-def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION (distinct): customers urgent-ordering OR in BUILDING."""
-    a = _urgent_custkeys(spark, sf_dir)
-    b = _building_custkeys(spark, sf_dir)
-    return a.union(b).distinct().orderBy("custkey")
 
-
-@register(
+register_sql(
     "set_intersect",
-    oracle="""
+    """INTERSECT: urgent-ordering customers in the BUILDING segment.
+    Catalyst rewrites to a left-semi join -- same plan we'd write by hand.""",
+    """
     SELECT DISTINCT o_custkey AS custkey FROM orders
     WHERE o_orderpriority = '1-URGENT'
     INTERSECT
@@ -57,17 +39,12 @@ def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custkey
     """,
 )
-def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT: urgent-ordering customers in the BUILDING segment.
-    Catalyst rewrites to a left-semi join -- same plan we'd write by hand."""
-    a = _urgent_custkeys(spark, sf_dir)
-    b = _building_custkeys(spark, sf_dir)
-    return a.intersect(b).orderBy("custkey")
 
-
-@register(
+register_sql(
     "set_except",
-    oracle="""
+    """EXCEPT: BUILDING customers who never placed an urgent order
+    (anti-join under the hood).""",
+    """
     SELECT c_custkey AS custkey FROM customer
     WHERE c_mktsegment = 'BUILDING'
     EXCEPT
@@ -76,17 +53,12 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custkey
     """,
 )
-def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT: BUILDING customers who never placed an urgent order
-    (anti-join under the hood)."""
-    a = _building_custkeys(spark, sf_dir)
-    b = _urgent_custkeys(spark, sf_dir)
-    return a.exceptAll(b.distinct()).distinct().orderBy("custkey")
 
-
-@register(
+register_sql(
     "union_all_counts",
-    oracle="""
+    """UNION ALL of heterogeneous sources projected to one shape --
+    the engine's multi-file-ingest shape (S1 is implicitly this).""",
+    """
     SELECT kind, CAST(COUNT(*) AS BIGINT) AS n FROM (
         SELECT 'customer' AS kind, c_nationkey AS nationkey FROM customer
         UNION ALL
@@ -96,19 +68,14 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY kind
     """,
 )
-def union_all_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL of heterogeneous sources aligned by name (unionByName) --
-    the engine's multi-file-ingest shape (S1 is implicitly this)."""
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    a = customer.select(F.lit("customer").alias("kind"), F.col("c_nationkey").alias("nationkey"))
-    b = supplier.select(F.lit("supplier").alias("kind"), F.col("s_nationkey").alias("nationkey"))
-    return a.unionByName(b).groupBy("kind").agg(F.count("*").alias("n")).orderBy("kind")
 
-
-@register(
+register_sql(
     "set_intersect_all",
-    oracle="""
+    """INTERSECT ALL: bag semantics -- a custkey appearing m times on the
+    left and n times on the right survives min(m, n) times.  Spark plans
+    it as a count-compare aggregate (no distinct collapse), one shuffle
+    per side.""",
+    """
     SELECT o_custkey AS custkey FROM orders
     WHERE o_orderpriority = '1-URGENT'
     INTERSECT ALL
@@ -117,24 +84,13 @@ def union_all_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custkey
     """,
 )
-def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT ALL: bag semantics -- a custkey appearing m times on the
-    left and n times on the right survives min(m, n) times.  Spark plans
-    it as a count-compare aggregate (no distinct collapse), one shuffle
-    per side."""
-    orders = load_table(spark, sf_dir, "orders")
-    a = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    b = orders.filter(F.col("o_orderstatus") == "F").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return a.intersectAll(b).orderBy("custkey")
 
-
-@register(
+register_sql(
     "set_except_all",
-    oracle="""
+    """EXCEPT ALL: bag difference -- max(m - n, 0) copies survive, so
+    multiplicity carries information (how many more urgent orders than
+    finished ones a customer has) that EXCEPT's distinct form discards.""",
+    """
     SELECT o_custkey AS custkey FROM orders
     WHERE o_orderpriority = '1-URGENT'
     EXCEPT ALL
@@ -143,15 +99,3 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custkey
     """,
 )
-def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT ALL: bag difference -- max(m - n, 0) copies survive, so
-    multiplicity carries information (how many more urgent orders than
-    finished ones a customer has) that EXCEPT's distinct form discards."""
-    orders = load_table(spark, sf_dir, "orders")
-    a = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    b = orders.filter(F.col("o_orderstatus") == "F").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return a.exceptAll(b).orderBy("custkey")

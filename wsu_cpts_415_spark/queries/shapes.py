@@ -4,6 +4,13 @@ unpivot/melt, positional explode, and JSON key-signature extraction.
 SURVEY.md §2.4 notes grouping sets/cube/rollup are absent in the
 reference but free in Spark; ``rollup_agg``/``cube_agg`` cover the
 hierarchical forms, these cover the explicit-set and reshaping forms.
+
+A query whose oracle Spark runs verbatim is registered from that SQL
+text alone (``registry.register_sql``); ``unpivot_measures`` is the
+``DataFrame.unpivot`` API case, and the other DataFrame bodies have
+oracles only DuckDB can run.
+``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives each
+DataFrame body's reason.
 """
 
 from __future__ import annotations
@@ -12,12 +19,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 
-@register(
+register_sql(
     "grouping_sets_agg",
-    oracle="""
+    """Explicit GROUPING SETS: (flag, status), (flag), and grand total in
+    ONE pass -- the Expand operator replicates each input row once per
+    set, so the fact table is scanned once, not three times.  Fixture
+    keys are non-null, so COALESCE('ALL') is an unambiguous subtotal
+    label.""",
+    """
     SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
            COALESCE(l_linestatus, 'ALL') AS linestatus,
            ROUND(SUM(l_quantity), 2) AS sum_qty,
@@ -27,31 +39,6 @@ from wsu_cpts_415_spark.registry import register
     ORDER BY returnflag, linestatus
     """,
 )
-def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS: (flag, status), (flag), and grand total in
-    ONE pass -- the Expand operator replicates each input row once per
-    set, so the fact table is scanned once, not three times.  Fixture
-    keys are non-null, so COALESCE('ALL') is an unambiguous subtotal
-    label."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupingSets(
-            [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
-            "l_returnflag",
-            "l_linestatus",
-        )
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.count("*").alias("n_rows"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "n_rows",
-        )
-        .orderBy("returnflag", "linestatus")
-    )
 
 
 @register(

@@ -7,7 +7,7 @@ subquery decorrelation and top-k.
 
 Each query is written once, as ANSI SQL.  The same text is the DuckDB
 oracle and, through ``spark.sql`` over the fixture views
-(``io.tables.register_views``), the Spark query: SQL text and DataFrames
+(``registry.register_sql``), the Spark query: SQL text and DataFrames
 compile to the same Catalyst plan, so a second DataFrame formulation
 would buy no plan.  Join strategy is the planner's, through
 ``spark.sql.autoBroadcastJoinThreshold``.
@@ -35,25 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wsu_cpts_415_spark.io.tables import load_table, register_views
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.io.tables import load_table
+from wsu_cpts_415_spark.registry import register, register_sql
 
-
-def _tpch(name: str, note: str, sql: str) -> None:
-    """Register ``sql`` as query ``name``: its DuckDB oracle, and its
-    Spark body run verbatim through ``spark.sql`` over the views of
-    ``sf_dir`` (registered once per session and dataset)."""
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(sql)
-
-    fn.__name__ = fn.__qualname__ = name
-    fn.__doc__ = note
-    register(name, oracle=sql)(fn)
-
-
-_tpch(
+register_sql(
     "q1_pricing_summary",
     """TPC-H Q1: one scan, 2-key GROUP BY, 8 aggregates.  Entirely
     map-side-combinable (partial aggregates before the one exchange); the
@@ -76,7 +61,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q2_min_cost_supplier",
     """TPC-H Q2 shape: the correlated MIN subquery (cheapest supplier per
     part within a region) as a window MIN over the candidate set -- one
@@ -109,7 +94,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q3_shipping_priority",
     """TPC-H Q3 shape: selective customer-segment filter joined into the
     orders/lineitem fact join, then top-10 by aggregated revenue (a
@@ -130,7 +115,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q4_order_priority",
     """TPC-H Q4 shape: EXISTS correlated subquery, decorrelated by
     Catalyst into a LEFT SEMI join of orders against lineitem with the
@@ -147,7 +132,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q5_local_supplier_volume",
     """TPC-H Q5 shape: six-table join with the customer-supplier
     same-nation condition folded into the supplier join.""",
@@ -166,7 +151,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q6_forecast_revenue",
     """TPC-H Q6: pure scan-filter-aggregate; every predicate reaches
     PushedFilters so row groups outside the date/discount range are
@@ -181,7 +166,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q7_volume_shipping",
     """TPC-H Q7: bilateral trade volume between two nations by year.
     ``nation`` joins twice under different keys (supplier side and
@@ -206,7 +191,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q8_market_share",
     """TPC-H Q8: one nation's share of regional revenue for one part type,
     by order year.  Eight-table join; the conditional-sum / sum ratio
@@ -234,7 +219,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q9_product_type_profit",
     """TPC-H Q9 shape: profit by supplier nation and order year for parts
     matching a name pattern.  Adapted: with no ps_supplycost, cost is
@@ -261,7 +246,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q10_returned_items",
     """TPC-H Q10 shape: returned-item revenue per customer, top-20.""",
     """
@@ -279,7 +264,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q11_important_stock",
     """TPC-H Q11 shape: per-part value restricted to one nation's
     suppliers, HAVING a scalar subquery over the same aggregate (parts
@@ -302,7 +287,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q12_shipmode_priority",
     """TPC-H Q12 shape: conditional-count aggregation after a fact-fact
     join; the date filter is pushed into the lineitem scan so the join
@@ -322,7 +307,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q13_customer_distribution",
     """TPC-H Q13: order-count histogram over a left outer join (customers
     with zero qualifying orders must appear with c_count = 0).  Two
@@ -344,7 +329,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q14_promo_revenue",
     """TPC-H Q14 shape: conditional revenue ratio over the part dimension
     join, single global aggregate.""",
@@ -361,7 +346,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q15_top_supplier",
     """TPC-H Q15: supplier(s) with max quarterly revenue -- a scalar MAX
     subquery over a derived view.  Revenue rounds to cents BEFORE the max
@@ -384,7 +369,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q16_parts_supplier_relationship",
     """TPC-H Q16 shape: distinct-supplier counts per part attribute with a
     NOT IN exclusion subquery, planned as a null-aware LEFT ANTI join
@@ -404,7 +389,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q17_small_quantity_revenue",
     """TPC-H Q17: correlated scalar AVG -- lineitems below 20% of their
     part's average quantity.  Catalyst decorrelates it into a per-part
@@ -423,7 +408,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q18_large_orders",
     """TPC-H Q18 shape: HAVING on a fact aggregate, then joins and top-k.
     The lineitem aggregate runs first, so the join input is one row per
@@ -446,7 +431,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q19_disjunctive_revenue",
     """TPC-H Q19 shape: OR-of-ANDs predicates across both join sides.
     Catalyst extracts the single-side conjuncts it can (quantity bounds
@@ -465,7 +450,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q20_potential_promotion",
     """TPC-H Q20 shape: IN over an aggregated subquery, planned as a LEFT
     SEMI join.  Adapted: suppliers who shipped > 100 units of PROMO parts
@@ -487,7 +472,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q21_suppliers_waiting",
     """TPC-H Q21 shape: suppliers who were the SOLE late supplier on a
     multi-supplier order.  The EXISTS / NOT EXISTS pair is written as a
@@ -522,7 +507,7 @@ _tpch(
     """,
 )
 
-_tpch(
+register_sql(
     "q22_global_sales_opportunity",
     """TPC-H Q22 shape: customers with above-average balance and no
     orders -- a scalar AVG subquery plus NOT EXISTS as a LEFT ANTI join.

@@ -1,5 +1,13 @@
 """Window-function queries (SURVEY.md §2.6-2.7: W1-W2, O1-O4) plus the
-frame/lag-lead surface the reference doesn't use."""
+frame/lag-lead surface the reference doesn't use.
+
+A query whose oracle Spark runs verbatim is registered from that SQL
+text alone (``registry.register_sql``); the DataFrame bodies left here are
+a kernel (``percent_rank_scalable``), a plan-gated rank-pushdown shape
+(``topk_with_ties_dense_rank``) and oracles only DuckDB can run.
+``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives each
+DataFrame body's reason.
+"""
 
 from __future__ import annotations
 
@@ -7,12 +15,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 
-@register(
+register_sql(
     "topn_per_group",
-    oracle="""
+    """W1 top-N per key (trending_predictor.py:164-189): row_number over
+    partitioned desc window + rank filter -- the canonical Spark plan
+    (single hash-partition shuffle on the key, per-partition sort, no
+    global sort).  Tie-break on p_partkey makes it deterministic.""",
+    """
     SELECT p_brand, p_partkey, p_retailprice, rnk
     FROM (
         SELECT p_brand, p_partkey, p_retailprice,
@@ -26,38 +38,9 @@ from wsu_cpts_415_spark.registry import register
     ORDER BY p_brand, rnk
     """,
 )
-def topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1 top-N per key (trending_predictor.py:164-189): row_number over
-    partitioned desc window + rank filter -- the canonical Spark plan
-    (single hash-partition shuffle on the key, per-partition sort, no
-    global sort).  Tie-break on p_partkey makes it deterministic."""
-    part = load_table(spark, sf_dir, "part")
-    w = Window.partitionBy("p_brand").orderBy(
-        F.col("p_retailprice").desc(), F.col("p_partkey").asc()
-    )
-    return (
-        part.select(
-            "p_brand",
-            "p_partkey",
-            "p_retailprice",
-            F.row_number().over(w).alias("rnk"),
-        )
-        .filter(F.col("rnk") <= 3)
-        .orderBy("p_brand", "rnk")
-    )
 
-
-@register(
+register_sql(
     "percent_rank_global",
-    oracle="""
-    SELECT s_suppkey,
-           ROUND(PERCENT_RANK() OVER (ORDER BY s_acctbal DESC, s_suppkey), 6)
-               AS pct_rank
-    FROM supplier
-    ORDER BY s_suppkey
-    """,
-)
-def percent_rank_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 global percent_rank (trending_predictor.py:167,188).
 
     .. warning:: PARITY DEMO -- DO NOT LIFT INTO A PIPELINE.  This is
@@ -65,13 +48,15 @@ def percent_rank_global(spark: SparkSession, sf_dir: str) -> DataFrame:
        "before" half of a demonstration pair, valid only on a bounded
        dimension table (supplier).  Fact-table percentiles must use
        ``percent_rank_scalable`` below, the routed formulation in
-       ``pipelines/trending.py``, or ``ops/scalable_rank.py``."""
-    supplier = load_table(spark, sf_dir, "supplier")
-    w = Window.orderBy(F.col("s_acctbal").desc(), F.col("s_suppkey"))
-    return supplier.select(
-        "s_suppkey",
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-    ).orderBy("s_suppkey")
+       ``pipelines/trending.py``, or ``ops/scalable_rank.py``.""",
+    """
+    SELECT s_suppkey,
+           ROUND(PERCENT_RANK() OVER (ORDER BY s_acctbal DESC, s_suppkey), 6)
+               AS pct_rank
+    FROM supplier
+    ORDER BY s_suppkey
+    """,
+)
 
 
 @register(
@@ -128,9 +113,12 @@ def percent_rank_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("pct_rank", "l_orderkey", "l_linenumber")
 
 
-@register(
+register_sql(
     "running_sum_frame",
-    oracle="""
+    """Explicit ROWS frame: per-supplier running quantity in ship order.
+    Total order (shipdate, orderkey, linenumber) makes the cumulative
+    float sum bit-identical across engines.""",
+    """
     SELECT l_suppkey, l_orderkey, l_linenumber,
            ROUND(SUM(l_quantity) OVER (
                PARTITION BY l_suppkey
@@ -142,26 +130,6 @@ def percent_rank_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_suppkey, l_orderkey, l_linenumber
     """,
 )
-def running_sum_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit ROWS frame: per-supplier running quantity in ship order.
-    Total order (shipdate, orderkey, linenumber) makes the cumulative
-    float sum bit-identical across engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    w = (
-        Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        li.filter(F.col("l_suppkey") <= 3)
-        .select(
-            "l_suppkey",
-            "l_orderkey",
-            "l_linenumber",
-            F.round(F.sum("l_quantity").over(w), 2).alias("running_qty"),
-        )
-        .orderBy("l_suppkey", "l_orderkey", "l_linenumber")
-    )
 
 
 @register(
@@ -195,30 +163,28 @@ def lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "top_k_global",
-    oracle="""
+    """O3 global top-k (trending_predictor.py:200): ORDER BY ... LIMIT k
+    compiles to TakeOrderedAndProject -- per-partition heaps + driver
+    merge, never a full sort.""",
+    """
     SELECT o_orderkey, o_custkey, ROUND(o_totalprice, 2) AS o_totalprice
     FROM orders
     ORDER BY o_totalprice DESC, o_orderkey ASC
     LIMIT 25
     """,
 )
-def top_k_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O3 global top-k (trending_predictor.py:200): orderBy().limit(k)
-    compiles to TakeOrderedAndProject -- per-partition heaps + driver
-    merge, never a full sort."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("o_totalprice"))
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(25)
-    )
 
-
-@register(
+register_sql(
     "window_analytics",
-    oracle="""
+    """The analytic-function surface beyond rank/row_number: dense_rank,
+    ntile, cume_dist, first_value, last_value over one per-segment
+    window.  The order key carries a custkey tie-break so ntile bucket
+    boundaries are deterministic.  One shuffle on the partition key
+    serves all five functions (same WindowSpec -> one Window operator).
+    """,
+    """
     SELECT c_custkey, c_mktsegment,
            CAST(DENSE_RANK() OVER w AS BIGINT) AS drank,
            CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
@@ -234,30 +200,6 @@ def top_k_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c_mktsegment, drank, c_custkey
     """,
 )
-def window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The analytic-function surface beyond rank/row_number: dense_rank,
-    ntile, cume_dist, first_value, last_value over one per-segment
-    window.  The order key carries a custkey tie-break so ntile bucket
-    boundaries are deterministic.  One shuffle on the partition key
-    serves all five functions (same WindowSpec -> one Window operator).
-    """
-    customer = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        customer.select(
-            "c_custkey",
-            "c_mktsegment",
-            F.dense_rank().over(w).cast("long").alias("drank"),
-            F.ntile(4).over(w).cast("long").alias("quartile"),
-            F.round(F.cume_dist().over(w), 6).alias("cdist"),
-            F.first("c_custkey").over(w).alias("richest"),
-            F.last("c_custkey").over(w_full).alias("poorest"),
-        )
-        .orderBy("c_mktsegment", "drank", "c_custkey")
-    )
 
 
 @register(

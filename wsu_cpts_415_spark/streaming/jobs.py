@@ -269,9 +269,20 @@ def write_batch(df: DataFrame, batch_id: int, base_dir: str) -> None:
 
 def _hadoop_path(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` through the Hadoop FileSystem API
-    (works on any scheme the session can write; runs no Spark job)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+    (works on any scheme the session can write; runs no Spark job).  The
+    session keeps the ``Path`` class and the Hadoop configuration after
+    its first call: resolving the class package by package costs a Py4J
+    round trip per name, so a warm ``path_exists`` makes three (build
+    the ``Path``, get its FileSystem, ask it) instead of nine."""
+    hadoop = getattr(spark, "_graft_hadoop", None)
+    if hadoop is None:
+        hadoop = spark._graft_hadoop = (
+            spark._jvm.org.apache.hadoop.fs.Path,
+            spark._jsc.hadoopConfiguration(),
+        )
+    path_cls, conf = hadoop
+    jpath = path_cls(path)
+    return jpath.getFileSystem(conf), jpath
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
