@@ -115,9 +115,8 @@ def test_replaced_table_file_is_seen(spark, tmp_path, layout):
 
 def test_sql_round_loads_each_table_once(spark, monkeypatch):
     """Every query whose Spark body is its oracle SQL (TPC-H q1-q22 and
-    the relational operator families), run in one fresh session over
-    one dataset, reads the fixture tables once, for the session's views
-    -- not once per query."""
+    the 74 others), run in one fresh session over one dataset, reads the
+    fixture tables once, for the session's views -- not once per query."""
     calls = []
     load = tables.load_table
 
@@ -131,7 +130,7 @@ def test_sql_round_loads_each_table_once(spark, monkeypatch):
             monkeypatch.setattr(module, "load_table", counting)
     session = spark.newSession()
     sql = [q.fn for q in all_queries().values() if sql_bodied(q.fn)]
-    assert len(sql) == 22 + 37
+    assert len(sql) == 22 + 74
     for fn in sql:
         fn(session, SF_SMOKE)
     assert sorted(calls) == sorted(tables.TABLE_NAMES)

@@ -12,9 +12,9 @@ every-16th sample of the rest keeps registry-wide coverage in the suite
 without the full sweep's ~9 minute bill (the full sweep lives in the
 round artifacts: 310/319 passed before the fixes, 319/319 after).
 
-Not raising is not enough for the relational operator families written
-as their oracle SQL: over zero-row tables each must also equal its
-DuckDB oracle (an empty aggregate's 0 or NULL is part of the answer)."""
+Not raising is not enough for the queries written as their oracle SQL
+(TPC-H aside): over zero-row tables each must also equal its DuckDB
+oracle (an empty aggregate's 0 or NULL is part of the answer)."""
 
 from __future__ import annotations
 
@@ -83,9 +83,9 @@ def empty_files_dir(tmp_path_factory):
 
 
 def _sql_bodied_names() -> list:
-    """The relational operator-family queries whose Spark body is their
-    oracle SQL; Spark's grouping-set aggregates return no grand-total row
-    over an empty input, where DuckDB returns one."""
+    """The queries outside TPC-H whose Spark body is their oracle SQL;
+    Spark's grouping-set aggregates return no grand-total row over an
+    empty input, where DuckDB returns one."""
     no_total = pytest.mark.xfail(
         strict=True,
         reason="Spark returns 0 rows for a grouping set () over an empty "
@@ -95,7 +95,7 @@ def _sql_bodied_names() -> list:
         n for n, q in all_queries().items()
         if sql_bodied(q.fn) and not q.fn.__module__.endswith(".tpch")
     )
-    assert len(names) == 37
+    assert len(names) == 74
     return [
         pytest.param(n, marks=no_total)
         if n in ("rollup_agg", "cube_agg", "grouping_sets_agg") else n

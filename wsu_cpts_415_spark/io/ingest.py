@@ -25,7 +25,6 @@ partitioned layout gives downstream date predicates partition pruning.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window

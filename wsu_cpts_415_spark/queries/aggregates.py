@@ -7,8 +7,8 @@ text alone (``registry.register_sql``); the DataFrame bodies left here are
 oracles only DuckDB can run (``quantile_cont``, ``list``,
 ``string_agg ... ORDER BY``) or whose sketch settings differ from
 Spark's SQL defaults.
-``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives each
-DataFrame body's reason.
+``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives the reason
+of each DataFrame body whose oracle Spark runs and matches.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ retention cohorts and consecutive-day activity streaks (gap-and-islands).
 Product-analytics staples that exercise distinct relational shapes not
 covered elsewhere in the suite: a self-referential min-aggregate join
 (cohort assignment) and the rank-difference islands trick (streaks) --
-both pure DataFrame plans with total-order determinism.
+both with total-order determinism.
 
 Scale design:
   * Cohort assignment is two hash aggregates (distinct user-weeks, then
@@ -14,6 +14,9 @@ Scale design:
     (row_number over activity days); the groupBy on the island key is a
     map-side-combinable aggregate.  Per-user day counts are bounded
     (days since epoch), so no partition can skew unboundedly.
+
+``activity_streaks`` is written once, as its oracle SQL: Spark runs that
+text verbatim over the fixture views (``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ from wsu_cpts_415_spark.ops.scalable_rank import (
     rank_bounds,
 )
 from wsu_cpts_415_spark.ops.staging import staged, staged_model
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 
 @register(
@@ -75,9 +78,12 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "activity_streaks",
-    oracle="""
+    """Consecutive-day activity streaks per user via the gap-and-islands
+    rank-difference trick: activity date minus its per-user row_number is
+    constant exactly along an unbroken daily run.""",
+    """
     WITH days AS (
         SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
     ),
@@ -101,30 +107,6 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id
     """,
 )
-def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consecutive-day activity streaks per user via the gap-and-islands
-    rank-difference trick: activity date minus its per-user row_number is
-    constant exactly along an unbroken daily run."""
-    ev = load_table(spark, sf_dir, "events")
-    days = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
-    w = Window.partitionBy("user_id").orderBy("d")
-    islands = days.select(
-        "user_id",
-        "d",
-        F.date_sub("d", F.row_number().over(w)).alias("island"),
-    )
-    streaks = islands.groupBy("user_id", "island").agg(
-        F.count("*").alias("len")
-    )
-    return (
-        streaks.groupBy("user_id")
-        .agg(
-            F.sum("len").alias("n_active_days"),
-            F.count("*").alias("n_streaks"),
-            F.max("len").alias("max_streak_days"),
-        )
-        .orderBy("user_id")
-    )
 
 
 @register(

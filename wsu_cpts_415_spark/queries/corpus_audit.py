@@ -13,6 +13,10 @@ Scale posture: every operator here is aggregates over bounded key spaces
 (users, sources, splits, vocabulary) or reuses the already-bucketed LSH
 pair table -- nothing is quadratic in the corpus and the only windows run
 per-group after a group-limit pushdown or over group-count-bounded rows.
+
+``heavy_hitters_skew``, ``temperature_mix_weights`` and
+``lang_drift_chisq`` are written once, as their oracle SQL: Spark runs
+that text verbatim over the fixture views (``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ from wsu_cpts_415_spark.queries.similarity import (
     LSH_PAIRS_DUCK_CTES,
     lsh_verified_pairs,
 )
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 TOP_HITTERS = 20
 MIX_ALPHA = 0.7  # temperature exponent (Conneau & Lample 2019 use 0.7)
@@ -44,9 +48,17 @@ MIX_BUDGET = 1000  # documents drawn from the adjusted mixture
 SAMPLE_K = 5  # docs kept per language by the hash sampler
 
 
-@register(
+register_sql(
     "heavy_hitters_skew",
-    oracle=f"""
+    f"""Top-{TOP_HITTERS} heaviest event keys with their share of all rows
+    and their ratio to the mean per-key population -- the pre-shuffle
+    audit that decides whether a join/groupBy on this key needs salting
+    (ops/skew.py) or AQE skew handling.
+
+    One partial-combining aggregate over the key space, a one-row global
+    broadcast back onto it, TakeOrderedAndProject for the top-k: no
+    full sort, nothing driver-side but the report.""",
+    f"""
     WITH per_user AS (
         SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
         FROM events GROUP BY user_id
@@ -64,37 +76,21 @@ SAMPLE_K = 5  # docs kept per language by the hash sampler
     LIMIT {TOP_HITTERS}
     """,
 )
-def heavy_hitters_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{TOP_HITTERS} heaviest event keys with their share of all rows
-    and their ratio to the mean per-key population -- the pre-shuffle
-    audit that decides whether a join/groupBy on this key needs salting
-    (ops/skew.py) or AQE skew handling.
-
-    One partial-combining aggregate over the key space, a one-row global
-    broadcast back onto it, TakeOrderedAndProject for the top-k: no
-    full sort, nothing driver-side but the report."""
-    ev = load_table(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(F.count("*").alias("n"))
-    tot = per_user.agg(
-        F.sum("n").cast("double").alias("total"),
-        F.avg("n").alias("mean_n"),
-    )
-    return (
-        per_user.crossJoin(F.broadcast(tot))
-        .select(
-            "user_id",
-            "n",
-            F.round(F.col("n") / F.col("total") * 100, 6).alias("share_pct"),
-            F.round(F.col("n") / F.col("mean_n"), 6).alias("skew_ratio"),
-        )
-        .orderBy(F.col("n").desc(), "user_id")
-        .limit(TOP_HITTERS)
-    )
 
 
-@register(
+register_sql(
     "temperature_mix_weights",
-    oracle=f"""
+    f"""Temperature-adjusted source mixture: weight each source by
+    n^{MIX_ALPHA} (alpha < 1 flattens the head, upweights the tail --
+    the multilingual-sampling scheme of Conneau & Lample 2019), report
+    the normalized weight, the expected draw at a {MIX_BUDGET}-doc
+    budget, and the up/down-weighting vs the natural frequency.
+
+    Complements ``lang_mix_rebalance`` (queries/mixing.py), which hits
+    externally-specified targets; temperature weighting *derives* the
+    targets from the observed counts.  Cost: one aggregate over the
+    source key space and arithmetic on the resulting handful of rows.""",
+    f"""
     WITH per_src AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
         FROM documents GROUP BY source
@@ -115,43 +111,6 @@ def heavy_hitters_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY source
     """,
 )
-def temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-adjusted source mixture: weight each source by
-    n^{MIX_ALPHA} (alpha < 1 flattens the head, upweights the tail --
-    the multilingual-sampling scheme of Conneau & Lample 2019), report
-    the normalized weight, the expected draw at a {MIX_BUDGET}-doc
-    budget, and the up/down-weighting vs the natural frequency.
-
-    Complements ``lang_mix_rebalance`` (queries/mixing.py), which hits
-    externally-specified targets; temperature weighting *derives* the
-    targets from the observed counts.  Cost: one aggregate over the
-    source key space and arithmetic on the resulting handful of rows."""
-    docs = load_table(spark, sf_dir, "documents")
-    per_src = docs.groupBy("source").agg(F.count("*").alias("n_docs"))
-    w = per_src.select(
-        "source", "n_docs", F.pow("n_docs", F.lit(MIX_ALPHA)).alias("raw_w")
-    )
-    tot = w.agg(
-        F.sum("raw_w").alias("z"),
-        F.sum("n_docs").cast("double").alias("n_total"),
-    )
-    return (
-        w.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_docs",
-            F.round(F.col("raw_w") / F.col("z"), 6).alias("mix_weight"),
-            F.round(F.col("raw_w") / F.col("z") * MIX_BUDGET, 4).alias(
-                "expected_docs"
-            ),
-            F.round(
-                (F.col("raw_w") / F.col("z"))
-                / (F.col("n_docs") / F.col("n_total")),
-                6,
-            ).alias("vs_natural"),
-        )
-        .orderBy("source")
-    )
 
 
 @register(
@@ -862,9 +821,21 @@ def dataset_card_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "lang_drift_chisq",
-    oracle="""
+    """Distribution-shift monitor: per-source chi-square statistic of the
+    source's language mix against the corpus-wide mix (expected counts =
+    source volume x corpus language share).  The drift alarm a corpus
+    refresh pipeline runs per ingest batch -- a source whose mix lurches
+    from the corpus profile gets quarantined before it skews training.
+
+    Three bounded aggregates (source x lang cells, source totals,
+    language shares) and row-local arithmetic; the observed-cell table
+    is the only thing that ever shuffles, and it is |sources| x |langs|
+    rows.  (Cells where a language is absent from a source contribute
+    only through present cells -- both engines enumerate the same
+    observed cells, so the statistic is identically defined.)""",
+    """
     WITH obs AS (
         SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n
         FROM documents GROUP BY source, lang
@@ -891,50 +862,6 @@ def dataset_card_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY source
     """,
 )
-def lang_drift_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-shift monitor: per-source chi-square statistic of the
-    source's language mix against the corpus-wide mix (expected counts =
-    source volume x corpus language share).  The drift alarm a corpus
-    refresh pipeline runs per ingest batch -- a source whose mix lurches
-    from the corpus profile gets quarantined before it skews training.
-
-    Three bounded aggregates (source x lang cells, source totals,
-    language shares) and row-local arithmetic; the observed-cell table
-    is the only thing that ever shuffles, and it is |sources| x |langs|
-    rows.  (Cells where a language is absent from a source contribute
-    only through present cells -- both engines enumerate the same
-    observed cells, so the statistic is identically defined.)"""
-    docs = load_table(spark, sf_dir, "documents")
-    obs = docs.groupBy("source", "lang").agg(F.count("*").alias("n"))
-    src_tot = obs.groupBy("source").agg(
-        F.sum("n").cast("double").alias("src_n")
-    )
-    corpus_n = obs.agg(F.sum("n").cast("double").alias("corpus_n"))
-    lang_share = (
-        obs.groupBy("lang")
-        .agg(F.sum("n").alias("lang_n"))
-        .crossJoin(F.broadcast(corpus_n))
-        .select("lang", (F.col("lang_n") / F.col("corpus_n")).alias("p"))
-    )
-    cells = (
-        obs.join(F.broadcast(src_tot), "source")
-        .join(F.broadcast(lang_share), "lang")
-        .select(
-            "source",
-            (
-                F.pow(F.col("n") - F.col("src_n") * F.col("p"), 2)
-                / (F.col("src_n") * F.col("p"))
-            ).alias("cell"),
-        )
-    )
-    return (
-        cells.groupBy("source")
-        .agg(
-            F.round(F.sum("cell"), 6).alias("chi_sq"),
-            F.count("*").alias("n_cells"),
-        )
-        .orderBy("source")
-    )
 
 
 @register(

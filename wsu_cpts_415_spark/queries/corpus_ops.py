@@ -20,6 +20,10 @@ steps a 100 TB pretraining-data build runs between "filtered corpus" and
 
 Cross-engine determinism: md5-derived integer hashes (identical in Spark
 and DuckDB), identical ROUND(6) on float outputs, total-order sort keys.
+
+``zorder_layout_audit`` and ``gdpr_erasure_audit`` are written once, as
+their oracle SQL: Spark runs that text verbatim over the fixture views
+(``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 # [0,100) bucket from the md5 hex prefix of the row key -- the same
 # engine-stable construction used across queries/text.py and mixing.py.
@@ -472,18 +476,13 @@ def vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _z16(x: str, y: str, spark_side: bool) -> str:
-    """16-bit Morton (Z-order) interleave of two 8-bit keys, emitted as an
-    arithmetic expression valid in the target engine (Spark uses
-    shiftleft/shiftright functions; DuckDB uses << / >> operators)."""
+def _z16(x: str, y: str) -> str:
+    """16-bit Morton (Z-order) interleave of two 8-bit keys, as integer
+    arithmetic with the ``<<`` / ``>>`` operators both engines parse."""
     terms = []
     for i in range(8):
-        if spark_side:
-            terms.append(f"shiftleft((shiftright({x}, {i}) & 1), {2 * i})")
-            terms.append(f"shiftleft((shiftright({y}, {i}) & 1), {2 * i + 1})")
-        else:
-            terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
-            terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
+        terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
+        terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
 
 
@@ -491,26 +490,8 @@ _ZX = "(user_id % 256)"
 _ZY = "(dayofyear(ts) % 256)"
 
 
-@register(
+register_sql(
     "zorder_layout_audit",
-    oracle=f"""
-    SELECT bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(MIN(x) AS BIGINT) AS x_min,
-           CAST(MAX(x) AS BIGINT) AS x_max,
-           CAST(MIN(y) AS BIGINT) AS y_min,
-           CAST(MAX(y) AS BIGINT) AS y_max
-    FROM (
-        SELECT x, y, ({_z16('x', 'y', False)}) >> 8 AS bucket
-        FROM (
-            SELECT {_ZX} AS x, {_ZY} AS y FROM events
-        )
-    )
-    GROUP BY bucket
-    ORDER BY bucket
-    """,
-)
-def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton-curve) layout audit over the events table: each row
     maps (user bucket, day-of-year bucket) onto a 16-bit interleaved
     z-value; rows are grouped into 256 z-buckets (the would-be output
@@ -525,27 +506,24 @@ def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     boxes.  Plan: bit interleaving is pure integer arithmetic in
     whole-stage codegen; one 256-group aggregate; the real write path
     would repartitionByRange(z) with the same expression.
-    """
-    events = load_table(spark, sf_dir, "events")
-    keyed = events.select(
-        F.expr(_ZX).alias("x"), F.expr(_ZY).alias("y")
-    )
-    bucketed = keyed.select(
-        "x",
-        "y",
-        F.expr(f"shiftright({_z16('x', 'y', True)}, 8)").alias("bucket"),
-    )
-    return (
-        bucketed.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("x").cast("bigint").alias("x_min"),
-            F.max("x").cast("bigint").alias("x_max"),
-            F.min("y").cast("bigint").alias("y_min"),
-            F.max("y").cast("bigint").alias("y_max"),
+    """,
+    f"""
+    SELECT bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(MIN(x) AS BIGINT) AS x_min,
+           CAST(MAX(x) AS BIGINT) AS x_max,
+           CAST(MIN(y) AS BIGINT) AS y_min,
+           CAST(MAX(y) AS BIGINT) AS y_max
+    FROM (
+        SELECT x, y, ({_z16('x', 'y')}) >> 8 AS bucket
+        FROM (
+            SELECT {_ZX} AS x, {_ZY} AS y FROM events
         )
-        .orderBy("bucket")
     )
+    GROUP BY bucket
+    ORDER BY bucket
+    """,
+)
 
 
 @register(
@@ -610,9 +588,22 @@ def redact_transform_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ERASE_PRED = "% 37 = 0"  # deletion cohort: every 37th user key
 
 
-@register(
+register_sql(
     "gdpr_erasure_audit",
-    oracle=f"""
+    """Right-to-erasure dry run: a deletion cohort (every 37th user key)
+    traced across every table that references the subject -- row counts
+    to erase, rows remaining, erased fraction per table.  The audit a
+    privacy pipeline emits BEFORE running the anti-join deletes; the
+    delete itself is the same predicate applied with the SCD writer
+    (io/maintenance.py) as a rewrite of only the partitions that contain
+    cohort rows.
+
+    Scale: the fact table filters by a pure key predicate (no join); the
+    dimension tables probe the deletion cohort through a broadcast
+    semi/left join -- the cohort is always small relative to facts.  One
+    aggregate per table, a 3-row result.
+    """,
+    f"""
     WITH del AS (
         SELECT DISTINCT user_id FROM events WHERE user_id {_ERASE_PRED}
     ),
@@ -637,75 +628,8 @@ _ERASE_PRED = "% 37 = 0"  # deletion cohort: every 37th user key
     )
     SELECT table_name, n_rows, n_erased,
            n_rows - n_erased AS n_remaining,
-           ROUND(n_erased * 1.0 / n_rows, 6) AS erased_frac
+           ROUND(n_erased * 1.0 / NULLIF(n_rows, 0), 6) AS erased_frac
     FROM per_table
     ORDER BY table_name
     """,
 )
-def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right-to-erasure dry run: a deletion cohort (every 37th user key)
-    traced across every table that references the subject -- row counts
-    to erase, rows remaining, erased fraction per table.  The audit a
-    privacy pipeline emits BEFORE running the anti-join deletes; the
-    delete itself is the same predicate applied with the SCD writer
-    (io/maintenance.py) as a rewrite of only the partitions that contain
-    cohort rows.
-
-    Scale: the fact table filters by a pure key predicate (no join); the
-    dimension tables probe the deletion cohort through a broadcast
-    semi/left join -- the cohort is always small relative to facts.  One
-    aggregate per table, a 3-row result.
-    """
-    from wsu_cpts_415_spark.io.tables import load_table as _lt
-
-    ev = _lt(spark, sf_dir, "events")
-    del_users = (
-        ev.filter(F.expr(f"user_id {_ERASE_PRED}")).select("user_id").distinct()
-    )
-    ev_audit = ev.agg(
-        F.lit("events").alias("table_name"),
-        F.count("*").alias("n_rows"),
-        F.count(F.when(F.expr(f"user_id {_ERASE_PRED}"), 1))
-        .cast("bigint")
-        .alias("n_erased"),
-    )
-    cust = _lt(spark, sf_dir, "customer")
-    cust_flag = cust.join(
-        F.broadcast(del_users.withColumnRenamed("user_id", "c_custkey")).withColumn(
-            "is_del", F.lit(1)
-        ),
-        "c_custkey",
-        "left",
-    )
-    cust_audit = cust_flag.agg(
-        F.lit("customer").alias("table_name"),
-        F.count("*").alias("n_rows"),
-        F.count("is_del").cast("bigint").alias("n_erased"),
-    )
-    od = _lt(spark, sf_dir, "orders")
-    od_flag = od.join(
-        F.broadcast(del_users.withColumnRenamed("user_id", "o_custkey")).withColumn(
-            "is_del", F.lit(1)
-        ),
-        "o_custkey",
-        "left",
-    )
-    od_audit = od_flag.agg(
-        F.lit("orders").alias("table_name"),
-        F.count("*").alias("n_rows"),
-        F.count("is_del").cast("bigint").alias("n_erased"),
-    )
-    return (
-        ev_audit.unionByName(cust_audit)
-        .unionByName(od_audit)
-        .select(
-            "table_name",
-            "n_rows",
-            "n_erased",
-            (F.col("n_rows") - F.col("n_erased")).alias("n_remaining"),
-            F.round(F.col("n_erased") / F.col("n_rows"), 6).alias(
-                "erased_frac"
-            ),
-        )
-        .orderBy("table_name")
-    )

@@ -6,6 +6,13 @@ engine adds: tumbling/sliding/session windows, JSON prop extraction,
 funnels, sessionization.  Each is written batch-first here; the streaming
 module re-runs the same shapes under Structured Streaming with watermarks
 (wsu_cpts_415_spark/streaming/).
+
+``window_tumbling``, ``funnel_signup_purchase``, ``sessionize_lag``,
+``event_type_daily_rate``, ``range_join_events``, ``zscore_anomalies``,
+``event_transition_matrix``, ``funnel_three_step`` and
+``attribution_linear_multitouch`` are written once, as their oracle SQL:
+Spark runs that text verbatim over the fixture views
+(``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -15,16 +22,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 SESSION_GAP_MIN = 60  # sessionization gap, minutes
 
 
 def session_new_flag(w) -> "F.Column":
     """1 when the row starts a session under the suite's pinned gap rule
-    (first event per user, or gap > SESSION_GAP_MIN), else 0 -- the ONE
-    definition shared by every lag-based sessionizer (sessionize_lag,
-    journey_trigrams, session_bounce_rate's oracle keeps the SQL twin).
+    (first event per user, or gap > SESSION_GAP_MIN), else 0 -- the
+    DataFrame form of the rule (session_bounce_rate); the SQL-bodied
+    sessionizers (sessionize_lag, journey_trigrams) spell it in SQL.
     ``w`` must order by (ts, event_id) within the user partition."""
     return (
         F.when(
@@ -39,9 +46,12 @@ def session_new_flag(w) -> "F.Column":
     )
 
 
-@register(
+register_sql(
     "window_tumbling",
-    oracle="""
+    """Tumbling 1-day window aggregate: events grouped by their day
+    (``streaming/jobs.tumbling_counts`` runs the same window under
+    readStream + watermark).""",
+    """
     SELECT date_trunc('day', ts) AS win_start,
            event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -51,17 +61,6 @@ def session_new_flag(w) -> "F.Column":
     ORDER BY win_start, event_type
     """,
 )
-def window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-day window aggregate via F.window -- the Structured
-    Streaming-compatible formulation (same expression runs under
-    readStream + watermark)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total_value"))
-        .select(F.col("w.start").alias("win_start"), "event_type", "n", "total_value")
-        .orderBy("win_start", "event_type")
-    )
 
 
 @register(
@@ -174,9 +173,12 @@ def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "funnel_signup_purchase",
-    oracle="""
+    """Event funnel: users who signed up, and of those, who purchased
+    AFTER first signup.  One shuffle on user_id; conditional aggregates
+    instead of self-joins.""",
+    """
     WITH firsts AS (
         SELECT user_id,
                MIN(ts) FILTER (WHERE event_type = 'signup') AS first_signup,
@@ -190,28 +192,14 @@ def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM firsts
     """,
 )
-def funnel_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event funnel: users who signed up, and of those, who purchased
-    AFTER first signup.  One shuffle on user_id; conditional aggregates
-    instead of self-joins."""
-    ev = load_table(spark, sf_dir, "events")
-    firsts = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("first_signup"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "first_purchase"
-        ),
-    )
-    return firsts.agg(
-        F.count("first_signup").alias("n_signed_up"),
-        F.count(
-            F.when(F.col("first_purchase") > F.col("first_signup"), F.lit(1))
-        ).alias("n_converted"),
-    )
 
 
-@register(
+register_sql(
     "sessionize_lag",
-    oracle=f"""
+    """Sessionization via lag+gap flags (the windowed alternative to
+    session_window; SURVEY guide 'common OLAP patterns').  Counting
+    sessions = summing new-session flags, no second cumsum window.""",
+    f"""
     WITH gaps AS (
         SELECT user_id,
                CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -226,26 +214,14 @@ def funnel_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id
     """,
 )
-def sessionize_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization via lag+gap flags (the windowed alternative to
-    session_window; SURVEY guide 'common OLAP patterns').  Counting
-    sessions = summing new-session flags, no second cumsum window."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.select(
-        "user_id",
-        session_new_flag(w).alias("is_new"),
-    )
-    return (
-        flagged.groupBy("user_id")
-        .agg(F.sum("is_new").cast("bigint").alias("n_sessions"))
-        .orderBy("user_id")
-    )
 
 
-@register(
+register_sql(
     "event_type_daily_rate",
-    oracle="""
+    """Daily event-type share: aggregate THEN window over the (small)
+    aggregate -- the window input is |days|x|types| rows, never the raw
+    stream.""",
+    """
     WITH daily AS (
         SELECT date_trunc('day', ts) AS d, event_type,
                CAST(COUNT(*) AS BIGINT) AS n
@@ -257,26 +233,23 @@ def sessionize_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY day, event_type
     """,
 )
-def event_type_daily_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily event-type share: aggregate THEN window over the (small)
-    aggregate -- the window input is |days|x|types| rows, never the raw
-    stream."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_trunc("day", "ts").alias("day"), "event_type"
-    ).agg(F.count("*").alias("n"))
-    w = Window.partitionBy("day")
-    return daily.select(
-        "day",
-        "event_type",
-        "n",
-        F.round(F.col("n").cast("double") / F.sum("n").over(w), 6).alias("share"),
-    ).orderBy("day", "event_type")
 
 
-@register(
+register_sql(
     "range_join_events",
-    oracle="""
+    """Batch range join (the batch twin of the streaming interval join,
+    streaming/jobs.py): for every purchase, how many clicks the same
+    user made in the preceding 30 minutes -- the classic
+    attribution-window lookup.
+
+    Scale: the equi-key (user_id) carries the shuffle, so this is a hash
+    or sort-merge join per user with the time-range predicate evaluated
+    inside the matched bucket -- never a cross product (the plan gate
+    asserts no BroadcastNestedLoopJoin).  At 100 TB the same query runs
+    against a time-bucketed layout: pre-bucketing both sides by
+    (user_id) makes the join zero-Exchange, and partition pruning on a
+    date column bounds each side's scan to the attribution horizon.""",
+    """
     SELECT p.event_id,
            CAST(COUNT(c.event_id) AS BIGINT) AS n_prior_clicks
     FROM (SELECT event_id, user_id, ts FROM events
@@ -290,45 +263,20 @@ def event_type_daily_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p.event_id
     """,
 )
-def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch range join (the batch twin of the streaming interval join,
-    streaming/jobs.py): for every purchase, how many clicks the same
-    user made in the preceding 30 minutes -- the classic
-    attribution-window lookup.
-
-    Scale: the equi-key (user_id) carries the shuffle, so this is a hash
-    or sort-merge join per user with the time-range predicate evaluated
-    inside the matched bucket -- never a cross product (the plan gate
-    asserts no BroadcastNestedLoopJoin).  At 100 TB the same query runs
-    against a time-bucketed layout: pre-bucketing both sides by
-    (user_id) makes the join zero-Exchange, and partition pruning on a
-    date column bounds each side's scan to the attribution horizon."""
-    ev = load_table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.col("ts").alias("p_ts")
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("c_event_id"),
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    joined = p.join(
-        c,
-        (F.col("c_user_id") == F.col("user_id"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("c_ts") < F.col("p_ts")),
-        "left",
-    )
-    return (
-        joined.groupBy("event_id")
-        .agg(F.count("c_event_id").alias("n_prior_clicks"))
-        .orderBy("event_id")
-    )
 
 
-@register(
+register_sql(
     "zscore_anomalies",
-    oracle="""
+    """Top-5 z-score outliers per event type: per-type mean/stddev in one
+    aggregate, every event scored against its type's distribution, rank
+    by |z| (rounded before ranking; event_id tie-break).  Rank-based
+    output instead of a |z|>k cut keeps the result deterministic across
+    engines -- a threshold filter on a float boundary is not.
+
+    Scale: one aggregate pass for the stats (broadcast back -- one row
+    per type), one scan to score, one partitioned window with rank
+    pushdown.  No global sort until the 5xtypes-row result.""",
+    """
     WITH stats AS (
         SELECT event_type, AVG(value) AS mu, STDDEV_SAMP(value) AS sigma
         FROM events GROUP BY event_type
@@ -350,45 +298,18 @@ def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY event_type, rnk
     """,
 )
-def zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 z-score outliers per event type: per-type mean/stddev in one
-    aggregate, every event scored against its type's distribution, rank
-    by |z| (rounded before ranking; event_id tie-break).  Rank-based
-    output instead of a |z|>k cut keeps the result deterministic across
-    engines -- a threshold filter on a float boundary is not.
-
-    Scale: one aggregate pass for the stats (broadcast back -- one row
-    per type), one scan to score, one partitioned window with rank
-    pushdown.  No global sort until the 5xtypes-row result."""
-    ev = load_table(spark, sf_dir, "events")
-    stats = ev.groupBy("event_type").agg(
-        F.avg("value").alias("mu"), F.stddev_samp("value").alias("sigma")
-    )
-    scored = ev.join(F.broadcast(stats), "event_type").select(
-        "event_id",
-        "event_type",
-        "value",
-        F.round((F.col("value") - F.col("mu")) / F.col("sigma"), 4).alias(
-            "zscore"
-        ),
-        F.round(
-            F.abs(F.col("value") - F.col("mu")) / F.col("sigma"), 6
-        ).alias("abs_z"),
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("abs_z").desc(), "event_id"
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("event_id", "event_type", "value", "zscore", "rnk")
-        .orderBy("event_type", "rnk")
-    )
 
 
-@register(
+register_sql(
     "event_transition_matrix",
-    oracle="""
+    """First-order Markov transition counts between consecutive events of
+    the same user (total order: ts then event_id): which action follows
+    which -- the input to journey mining and next-event prediction.
+
+    Scale: one window sort per user partition (the same shuffle the
+    sessionizer pays), then a map-side-combinable count on a
+    types^2-bounded key space.""",
+    """
     WITH ordered AS (
         SELECT user_id, event_type,
                LAG(event_type) OVER (
@@ -404,35 +325,22 @@ def zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY from_type, to_type
     """,
 )
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition counts between consecutive events of
-    the same user (total order: ts then event_id): which action follows
-    which -- the input to journey mining and next-event prediction.
-
-    Scale: one window sort per user partition (the same shuffle the
-    sessionizer pays), then a map-side-combinable count on a
-    types^2-bounded key space."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = ev.select(
-        "user_id",
-        "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-    return (
-        ordered.filter(F.col("prev_type").isNotNull())
-        .groupBy(
-            F.col("prev_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .agg(F.count("*").alias("n"))
-        .orderBy("from_type", "to_type")
-    )
 
 
-@register(
+register_sql(
     "funnel_three_step",
-    oracle="""
+    """Strictly-ordered three-step funnel (view -> click -> purchase):
+    each step must happen AFTER the user's first completion of the
+    previous step, so a purchase before the first post-view click does
+    not count -- the semantics product analytics tools call "in order"
+    conversion.
+
+    Scale: three aggregate passes, all keyed on user_id -- the same
+    shuffle key every pass, so on a cluster the second and third joins
+    are co-partitioned with the first's output (AQE reuses the layout);
+    nothing ever shuffles on a non-user key and the final result is a
+    single global row.""",
+    """
     WITH s1 AS (
         SELECT user_id,
                MIN(ts) FILTER (WHERE event_type = 'view') AS first_view
@@ -457,68 +365,13 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(COUNT(first_view) AS BIGINT) AS n_view,
            CAST(COUNT(first_click) AS BIGINT) AS n_view_click,
            CAST(COUNT(first_purchase) AS BIGINT) AS n_view_click_purchase,
-           ROUND(COUNT(first_click) * 1.0 / COUNT(first_view), 6)
+           ROUND(COUNT(first_click) * 1.0 / NULLIF(COUNT(first_view), 0), 6)
                AS view_to_click,
-           ROUND(COUNT(first_purchase) * 1.0 / COUNT(first_click), 6)
+           ROUND(COUNT(first_purchase) * 1.0 / NULLIF(COUNT(first_click), 0), 6)
                AS click_to_purchase
     FROM s3
     """,
 )
-def funnel_three_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strictly-ordered three-step funnel (view -> click -> purchase):
-    each step must happen AFTER the user's first completion of the
-    previous step, so a purchase before the first post-view click does
-    not count -- the semantics product analytics tools call "in order"
-    conversion.
-
-    Scale: three aggregate passes, all keyed on user_id -- the same
-    shuffle key every pass, so on a cluster the second and third joins
-    are co-partitioned with the first's output (AQE reuses the layout);
-    nothing ever shuffles on a non-user key and the final result is a
-    single global row."""
-    ev = load_table(spark, sf_dir, "events")
-    s1 = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias(
-            "first_view"
-        )
-    )
-    s2 = (
-        ev.join(s1, "user_id")
-        .groupBy("user_id", "first_view")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click")
-                    & (F.col("ts") > F.col("first_view")),
-                    F.col("ts"),
-                )
-            ).alias("first_click")
-        )
-    )
-    s3 = (
-        ev.join(s2, "user_id")
-        .groupBy("user_id", "first_view", "first_click")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") > F.col("first_click")),
-                    F.col("ts"),
-                )
-            ).alias("first_purchase")
-        )
-    )
-    return s3.agg(
-        F.count("first_view").alias("n_view"),
-        F.count("first_click").alias("n_view_click"),
-        F.count("first_purchase").alias("n_view_click_purchase"),
-        F.round(
-            F.count("first_click") * F.lit(1.0) / F.count("first_view"), 6
-        ).alias("view_to_click"),
-        F.round(
-            F.count("first_purchase") * F.lit(1.0) / F.count("first_click"), 6
-        ).alias("click_to_purchase"),
-    )
 
 
 EWMA_ALPHA = 0.3
@@ -798,9 +651,23 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 ATTR_WINDOW_DAYS = 7  # lookback for multi-touch credit
 
 
-@register(
+register_sql(
     "attribution_linear_multitouch",
-    oracle=f"""
+    f"""Linear multi-touch attribution: each purchase's value splits
+    EQUALLY across every non-purchase event by the same user in the
+    preceding {ATTR_WINDOW_DAYS} days (the complement of last-touch's
+    winner-take-all).  The credit join is an equi-join on user_id plus
+    a bounded time-range predicate -- per-user touch x purchase pairs
+    within a fixed window, the same bounded-blowup shape as
+    range_join_events; the per-purchase touch count comes from one
+    window over the credited pairs (purchase-grain partitions).
+
+    Scale: never touches x purchases globally -- the user_id equi-key
+    routes the join, and the {ATTR_WINDOW_DAYS}-day bound caps pairs
+    per user at (touch rate x window) per purchase.  At 100 TB add a
+    coarse time-bucket to the join key (events bucketed by week) so
+    state per key stays flat under AQE.""",
+    f"""
     WITH purchases AS (
         SELECT event_id AS p_id, user_id, CAST(ts AS TIMESTAMP) AS p_ts, value
         FROM events WHERE event_type = 'purchase'
@@ -825,56 +692,6 @@ ATTR_WINDOW_DAYS = 7  # lookback for multi-touch credit
     ORDER BY 1
     """,
 )
-def attribution_linear_multitouch(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Linear multi-touch attribution: each purchase's value splits
-    EQUALLY across every non-purchase event by the same user in the
-    preceding {ATTR_WINDOW_DAYS} days (the complement of last-touch's
-    winner-take-all).  The credit join is an equi-join on user_id plus
-    a bounded time-range predicate -- per-user touch x purchase pairs
-    within a fixed window, the same bounded-blowup shape as
-    range_join_events; the per-purchase touch count comes from one
-    window over the credited pairs (purchase-grain partitions).
-
-    Scale: never touches x purchases globally -- the user_id equi-key
-    routes the join, and the {ATTR_WINDOW_DAYS}-day bound caps pairs
-    per user at (touch rate x window) per purchase.  At 100 TB add a
-    coarse time-bucket to the join key (events bucketed by week) so
-    state per key stays flat under AQE."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        "value",
-    )
-    touches = ev.filter(F.col("event_type") != "purchase").select(
-        F.col("user_id").alias("t_user"),
-        F.col("ts").alias("t_ts"),
-        "event_type",
-    )
-    credited = purchases.join(
-        touches,
-        (F.col("p_user") == F.col("t_user"))
-        & (F.col("t_ts") < F.col("p_ts"))
-        & (
-            F.col("t_ts")
-            >= F.col("p_ts") - F.expr(f"INTERVAL {ATTR_WINDOW_DAYS} DAYS")
-        ),
-    )
-    w = Window.partitionBy("p_id")
-    credited = credited.withColumn("n_touches", F.count("*").over(w))
-    return (
-        credited.groupBy(F.col("event_type").alias("touch"))
-        .agg(
-            F.count_distinct("p_id").alias("n_purchases_touched"),
-            F.round(F.sum(F.col("value") / F.col("n_touches")), 4).alias(
-                "attributed_value"
-            ),
-        )
-        .orderBy("touch")
-    )
 
 
 @register(

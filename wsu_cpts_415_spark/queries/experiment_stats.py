@@ -25,24 +25,37 @@ window or join.  Kaplan-Meier's cumulative product runs over |distinct
 durations| rows (days, not users); CUPED's theta is a 1-row scalar
 broadcast; the seasonality windowing is over |dates| rows.  Nothing
 collects to the driver and no window runs over raw events.
+
+``kaplan_meier_conversion``, ``cuped_adjusted_metric`` and
+``anova_variance_decomposition`` are written once, as their oracle SQL:
+Spark runs that text verbatim over the fixture views
+(``registry.register_sql``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 K_THRESHOLD = 5  # k-anonymity reporting threshold
 PRE_DAYS = 15  # CUPED pre-period length (fixture spans 30 days)
 
 
-@register(
+register_sql(
     "kaplan_meier_conversion",
-    oracle="""
+    """Kaplan-Meier survival of days-from-signup-to-purchase per user,
+    right-censored at the corpus observation end.  S(t) is the running
+    product of (1 - d_t / n_t) over conversion days, computed as
+    exp(cumsum(ln(.))) so both engines evaluate the same ordered sum.
+
+    Scale: users collapse to one (duration, converted) row via a single
+    user_id shuffle; everything after runs over |distinct durations|
+    rows (~the day range), so the unpartitioned cumulative window is
+    bounded by the calendar, not the corpus.""",
+    """
     WITH bounds AS (
         SELECT MAX(CAST(ts AS DATE)) AS obs_end FROM events
     ),
@@ -84,79 +97,19 @@ PRE_DAYS = 15  # CUPED pre-period length (fixture spans 30 days)
     ORDER BY day
     """,
 )
-def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier survival of days-from-signup-to-purchase per user,
-    right-censored at the corpus observation end.  S(t) is the running
-    product of (1 - d_t / n_t) over conversion days, computed as
-    exp(cumsum(ln(.))) so both engines evaluate the same ordered sum.
-
-    Scale: users collapse to one (duration, converted) row via a single
-    user_id shuffle; everything after runs over |distinct durations|
-    rows (~the day range), so the unpartitioned cumulative window is
-    bounded by the calendar, not the corpus."""
-    ev = load_table(spark, sf_dir, "events")
-    firsts = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "signup", F.to_date("ts"))
-        ).alias("d_signup"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.to_date("ts"))
-        ).alias("d_purchase"),
-    )
-    bounds = ev.agg(F.max(F.to_date("ts")).alias("obs_end"))
-    subjects = (
-        firsts.filter(F.col("d_signup").isNotNull())
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            F.when(
-                F.col("d_purchase") >= F.col("d_signup"),
-                F.datediff("d_purchase", "d_signup").cast("bigint"),
-            )
-            .otherwise(F.datediff("obs_end", "d_signup").cast("bigint"))
-            .alias("duration"),
-            F.when(F.col("d_purchase") >= F.col("d_signup"), 1)
-            .otherwise(0)
-            .alias("converted"),
-        )
-    )
-    n_total = subjects.agg(F.count("*").alias("n_total"))
-    at_time = subjects.groupBy(F.col("duration").alias("day")).agg(
-        F.sum("converted").alias("n_events"),
-        F.count("*").alias("n_leaving"),
-    )
-    w_prev = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, -1)
-    w_run = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    risk = (
-        at_time.crossJoin(F.broadcast(n_total))
-        .withColumn(
-            "n_risk",
-            (
-                F.col("n_total")
-                - F.coalesce(F.sum("n_leaving").over(w_prev), F.lit(0))
-            ).cast("bigint"),
-        )
-    )
-    return (
-        risk.withColumn(
-            "survival",
-            F.round(
-                F.exp(
-                    F.sum(
-                        F.log(1.0 - F.col("n_events") / F.col("n_risk"))
-                    ).over(w_run)
-                ),
-                5,
-            ),
-        )
-        .filter(F.col("n_events") > 0)
-        .select("day", "n_risk", "n_events", "survival")
-        .orderBy("day")
-    )
 
 
-@register(
+register_sql(
     "cuped_adjusted_metric",
-    oracle=f"""
+    """CUPED variance reduction: per-user post-period value adjusted by
+    the pre-period covariate (theta = cov(X,Y)/var(X)); arms come from a
+    deterministic user-id parity split so the comparison is replayable.
+    var_ratio < 1 is the whole point of the method.
+
+    Scale: one user_id shuffle builds (x_pre, y_post); theta is a 1-row
+    scalar BROADCAST back over users; the output is |arms| rows.  No
+    window over raw events anywhere.""",
+    f"""
     WITH per_user AS (
         SELECT user_id,
                CAST(user_id % 2 AS BIGINT) AS arm,
@@ -186,53 +139,6 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY arm
     """,
 )
-def cuped_adjusted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction: per-user post-period value adjusted by
-    the pre-period covariate (theta = cov(X,Y)/var(X)); arms come from a
-    deterministic user-id parity split so the comparison is replayable.
-    var_ratio < 1 is the whole point of the method.
-
-    Scale: one user_id shuffle builds (x_pre, y_post); theta is a 1-row
-    scalar BROADCAST back over users; the output is |arms| rows.  No
-    window over raw events anywhere."""
-    ev = load_table(spark, sf_dir, "events")
-    start = ev.agg(F.min(F.to_date("ts")).alias("d0"))
-    per_user = (
-        ev.crossJoin(F.broadcast(start))
-        .withColumn(
-            "is_pre", F.to_date("ts") < F.date_add(F.col("d0"), PRE_DAYS)
-        )
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(F.col("is_pre"), F.col("value")).otherwise(0.0)).alias(
-                "x_pre"
-            ),
-            F.sum(
-                F.when(~F.col("is_pre"), F.col("value")).otherwise(0.0)
-            ).alias("y_post"),
-        )
-        .withColumn("arm", (F.col("user_id") % 2).cast("bigint"))
-    )
-    theta = per_user.agg(
-        (F.covar_pop("x_pre", "y_post") / F.var_pop("x_pre")).alias("th"),
-        F.avg("x_pre").alias("x_mean"),
-    )
-    adj = per_user.crossJoin(F.broadcast(theta)).withColumn(
-        "y_cuped",
-        F.col("y_post") - F.col("th") * (F.col("x_pre") - F.col("x_mean")),
-    )
-    return (
-        adj.groupBy("arm")
-        .agg(
-            F.count("*").alias("n_users"),
-            F.round(F.avg("y_post"), 4).alias("mean_y"),
-            F.round(F.avg("y_cuped"), 4).alias("mean_y_cuped"),
-            F.round(F.var_pop("y_cuped") / F.var_pop("y_post"), 4).alias(
-                "var_ratio"
-            ),
-        )
-        .orderBy("arm")
-    )
 
 
 @register(
@@ -553,9 +459,18 @@ def fdr_bh_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "anova_variance_decomposition",
-    oracle="""
+    """One-way ANOVA of event value by type: between-group vs
+    within-group sum of squares, eta-squared (share of variance the
+    grouping explains) and the F statistic -- the
+    does-this-segmentation-matter test run before investing in per-type
+    models.  Same sufficient-statistics discipline as
+    fdr_bh_correction: one grouped pass for (n, sum, sum-of-squares)
+    per type, identical closed forms in both engines so the
+    floating-point cancellation profile matches, everything after is
+    arithmetic on the enum-grain sliver.""",
+    """
     WITH g AS (
         SELECT event_type, COUNT(*) AS n, SUM(value) AS sv,
                SUM(value * value) AS svv
@@ -582,55 +497,3 @@ def fdr_bh_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM parts
     """,
 )
-def anova_variance_decomposition(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """One-way ANOVA of event value by type: between-group vs
-    within-group sum of squares, eta-squared (share of variance the
-    grouping explains) and the F statistic -- the
-    does-this-segmentation-matter test run before investing in per-type
-    models.  Same sufficient-statistics discipline as
-    fdr_bh_correction: one grouped pass for (n, sum, sum-of-squares)
-    per type, identical closed forms in both engines so the
-    floating-point cancellation profile matches, everything after is
-    arithmetic on the enum-grain sliver."""
-    ev = load_table(spark, sf_dir, "events")
-    g = ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("value").alias("sv"),
-        F.sum(F.col("value") * F.col("value")).alias("svv"),
-    )
-    tot = g.agg(
-        F.sum("n").alias("n_all"),
-        F.sum("sv").alias("sv_all"),
-        F.count("*").alias("k"),
-    )
-    parts = (
-        g.crossJoin(F.broadcast(tot))
-        .agg(
-            F.sum(
-                F.col("svv") - F.col("sv") * F.col("sv") / F.col("n")
-            ).alias("ssw"),
-            F.sum(
-                F.col("n")
-                * (F.col("sv") / F.col("n") - F.col("sv_all") / F.col("n_all"))
-                * (F.col("sv") / F.col("n") - F.col("sv_all") / F.col("n_all"))
-            ).alias("ssb"),
-            F.max("n_all").alias("n_all"),
-            F.max("k").alias("k"),
-        )
-    )
-    return parts.select(
-        F.col("k").cast("bigint").alias("k_groups"),
-        F.col("n_all").cast("bigint").alias("n_rows"),
-        F.round("ssb", 4).alias("ss_between"),
-        F.round("ssw", 4).alias("ss_within"),
-        F.round(F.col("ssb") / (F.col("ssb") + F.col("ssw")), 6).alias(
-            "eta_squared"
-        ),
-        F.round(
-            (F.col("ssb") / (F.col("k") - 1))
-            / (F.col("ssw") / (F.col("n_all") - F.col("k"))),
-            6,
-        ).alias("f_stat"),
-    )

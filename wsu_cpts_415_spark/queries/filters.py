@@ -10,8 +10,8 @@ between (trending_predictor.py:67,110), date parts
 A query whose oracle Spark runs verbatim is registered from that SQL
 text alone (``registry.register_sql``); ``string_funcs`` keeps its DataFrame
 body because its oracle's regex literal reads differently in Spark SQL.
-``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives each
-DataFrame body's reason.
+``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives the reason
+of each DataFrame body whose oracle Spark runs and matches.
 """
 
 from __future__ import annotations

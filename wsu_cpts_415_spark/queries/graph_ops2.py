@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.queries.graph_ops import (
     _NEARDUP_DUCK_CTES as _NEARDUP_DUCK_CTES_REF,
-    NEARDUP_THRESHOLD,
 )
 from wsu_cpts_415_spark.queries.similarity import (
     LSH_PAIRS_DUCK_CTES,

@@ -2,8 +2,7 @@
 pipelines (engine extension beyond the reference surface; the reference's
 closest analogue is its filter/aggregate stage, analyze_links.py:133-171).
 
-Four standard pre-training data-prep steps, each as a pure DataFrame plan
-with a DuckDB oracle:
+Four standard pre-training data-prep steps, each with a DuckDB oracle:
 
   * ``sequence_packing``   -- pack documents into fixed token-budget
     training blocks (the "document packing" step before tokenized
@@ -21,6 +20,9 @@ Scale design: packing and span-dedup shuffle on (shard, doc) / gram keys
 only; rebalance aggregates to |languages| rows before its (tiny) window;
 the sampler is a row-local filter with no shuffle at all.  Nothing here
 collects to the driver.
+
+``lang_mix_rebalance`` is written once, as its oracle SQL: Spark runs
+that text verbatim over the fixture views (``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 PACK_BUDGET = 256  # tokens per packed training sequence
 SPAN_N = 5  # span length (tokens) for cross-doc duplicate spans
@@ -189,9 +191,18 @@ def crossdoc_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "lang_mix_rebalance",
-    oracle="""
+    """Language-mix rebalancing: per-language sampling weights that move
+    the corpus toward a uniform language target by DOWN-sampling only
+    (the rarest language keeps probability 1.0; everything else scales
+    by target_share / actual_share, renormalized to the max).
+
+    Scale: the corpus collapses to |languages| rows in one partial-agg
+    pass before any window touches it -- the unpartitioned MAX window
+    runs over a handful of rows, and the emitted keep_prob table is the
+    broadcast side of the actual resampling filter.""",
+    """
     WITH counts AS (
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
         FROM documents GROUP BY lang
@@ -217,41 +228,6 @@ def crossdoc_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY lang
     """,
 )
-def lang_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-mix rebalancing: per-language sampling weights that move
-    the corpus toward a uniform language target by DOWN-sampling only
-    (the rarest language keeps probability 1.0; everything else scales
-    by target_share / actual_share, renormalized to the max).
-
-    Scale: the corpus collapses to |languages| rows in one partial-agg
-    pass before any window touches it -- the unpartitioned MAX window
-    runs over a handful of rows, and the emitted keep_prob table is the
-    broadcast side of the actual resampling filter."""
-    docs = load_table(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang").agg(F.count("*").alias("n_docs"))
-    tot = counts.agg(
-        F.sum("n_docs").cast("double").alias("total"),
-        F.count("*").cast("double").alias("n_langs"),
-    )
-    w = counts.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        "n_docs",
-        (F.col("n_docs") / F.col("total")).alias("share"),
-        (
-            (F.lit(1.0) / F.col("n_langs"))
-            / (F.col("n_docs") / F.col("total"))
-        ).alias("weight"),
-    )
-    all_w = Window.partitionBy()
-    keep = F.col("weight") / F.max("weight").over(all_w)
-    return w.select(
-        "lang",
-        "n_docs",
-        F.round("share", 6).alias("share"),
-        F.round("weight", 6).alias("weight"),
-        F.round(keep, 6).alias("keep_prob"),
-        F.round(F.col("n_docs") * keep, 0).cast("bigint").alias("expected_docs"),
-    ).orderBy("lang")
 
 
 @register(

@@ -25,6 +25,9 @@ matrix (each step one broadcast join + tiny agg; depth is a constant 8);
 the z-test and lift collapse users/pairs to bounded grains before any
 join; CUSUM's only window is over calendar days.  Raw events are
 scanned exactly once per query.
+
+``cusum_changepoints`` is written once, as its oracle SQL: Spark runs
+that text verbatim over the fixture views (``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 POWER_ITERS = 8  # Markov power-iteration depth (5 states mix fast)
 
@@ -251,9 +254,17 @@ def ab_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "cusum_changepoints",
-    oracle="""
+    """Standardized CUSUM path of daily event volume: the running sum of
+    (n - mean)/stddev, whose maximum-|drift| day is the classic single
+    change-point estimate.  Emits the full path (for plotting) with the
+    peak day flagged.
+
+    Scale: events collapse to |dates| rows; the cumulative window runs
+    over the calendar grain only, and the global stats/peak are 1-row
+    broadcasts.""",
+    """
     WITH daily AS (
         SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS n
         FROM events GROUP BY d
@@ -280,37 +291,6 @@ def ab_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY d
     """,
 )
-def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standardized CUSUM path of daily event volume: the running sum of
-    (n - mean)/stddev, whose maximum-|drift| day is the classic single
-    change-point estimate.  Emits the full path (for plotting) with the
-    peak day flagged.
-
-    Scale: events collapse to |dates| rows; the cumulative window runs
-    over the calendar grain only, and the global stats/peak are 1-row
-    broadcasts."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(F.count("*").alias("n"))
-    stats = daily.agg(
-        F.avg("n").alias("mu"), F.stddev_pop("n").alias("s")
-    )
-    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    path = daily.crossJoin(F.broadcast(stats)).withColumn(
-        "cusum", F.sum((F.col("n") - F.col("mu")) / F.col("s")).over(w)
-    )
-    peak = path.agg(F.max(F.abs(F.col("cusum"))).alias("peak_abs"))
-    return (
-        path.crossJoin(F.broadcast(peak))
-        .select(
-            "d",
-            "n",
-            F.round("cusum", 4).alias("cusum"),
-            F.when(F.abs(F.col("cusum")) == F.col("peak_abs"), 1)
-            .otherwise(0)
-            .alias("is_peak_drift"),
-        )
-        .orderBy("d")
-    )
 
 
 @register(

@@ -8,9 +8,9 @@ orders/customer.
 
 A query whose oracle Spark runs verbatim is registered from that SQL
 text alone (``registry.register_sql``).  The DataFrame bodies left here
-are a staged layer (``copurchase_part_pairs``) and queries whose oracle
-only DuckDB can run or differs from Spark in value; ``DATAFRAME_BODIES``
-in ``tests/test_source_lints.py`` gives each one's reason.
+are queries whose oracle only DuckDB can run or differs from Spark in
+value (``copurchase_part_pairs`` is also a staged layer);
+``tests/test_source_lints.py`` measures this for every query.
 """
 
 from __future__ import annotations

@@ -9,8 +9,8 @@ A query whose oracle Spark runs verbatim is registered from that SQL
 text alone (``registry.register_sql``); ``unpivot_measures`` is the
 ``DataFrame.unpivot`` API case, and the other DataFrame bodies have
 oracles only DuckDB can run.
-``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives each
-DataFrame body's reason.
+``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives the reason
+of each DataFrame body whose oracle Spark runs and matches.
 """
 
 from __future__ import annotations

@@ -1,8 +1,9 @@
 """SQL surface: the engine's tables are queryable as plain Spark SQL via
 ``io.tables.register_views`` -- the same text a DuckDB user would write
-runs on Spark (modulo dialect).  One representative query keeps that
-surface oracle-pinned: identical SQL text (minus CAST dialect) feeds both
-engines."""
+runs on Spark (modulo dialect).  The queries both engines accept
+verbatim are written once, as that SQL (``registry.register_sql``); the
+others run each engine's own dialect of the same clause, or exercise an
+API rather than SQL text."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table, register_views
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 _SQL = """
     SELECT s.s_name,
@@ -26,15 +27,15 @@ _SQL = """
 """
 
 
-@register("sql_top_suppliers", oracle=_SQL)
-def sql_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+register_sql(
+    "sql_top_suppliers",
     """Supplier revenue rollup executed through ``spark.sql`` over
     registered views -- LITERALLY the same SQL string as the DuckDB
     oracle.  Catalyst still broadcasts the dims and pushes the returnflag
     filter into the parquet scan (same physical plan as the DataFrame
-    formulation)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SQL)
+    formulation).""",
+    _SQL,
+)
 
 
 _LATERAL_SQL = """
@@ -52,15 +53,15 @@ _LATERAL_SQL = """
 """
 
 
-@register("sql_lateral_topn", oracle=_LATERAL_SQL)
-def sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
+register_sql(
+    "sql_lateral_topn",
     """Correlated LATERAL subquery -- top-2 orders per customer -- as one
     SQL text accepted verbatim by both Spark and DuckDB.  Catalyst
     rewrites the lateral per-row LIMIT into a window rank-filter
     (DecorrelateInnerQuery), so the physical plan is a join + ranked
-    window, never a per-customer re-scan of orders."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_SQL)
+    window, never a per-customer re-scan of orders.""",
+    _LATERAL_SQL,
+)
 
 
 _RECURSIVE_SQL = """
@@ -85,8 +86,8 @@ _RECURSIVE_SQL = """
 """
 
 
-@register("sql_recursive_calendar_fill", oracle=_RECURSIVE_SQL)
-def sql_recursive_calendar_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+register_sql(
+    "sql_recursive_calendar_fill",
     """Recursive-CTE calendar fill: generate every day between the
     stream's min and max timestamps and left-join the daily counts, so
     zero-activity days appear as explicit rows -- the gap-exposing
@@ -100,9 +101,9 @@ def sql_recursive_calendar_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-evaluates the min/max aggregate every iteration -- measured 5.7 s
     vs 0.8 s at sf0.1); the daily aggregate is the usual
     map-side-combined rollup and the join is broadcast-sized.  Recursion
-    depth = days of history, well inside default iteration limits."""
-    register_views(spark, sf_dir)
-    return spark.sql(_RECURSIVE_SQL)
+    depth = days of history, well inside default iteration limits.""",
+    _RECURSIVE_SQL,
+)
 
 
 _FILTERED_AGG_SQL = """
@@ -120,15 +121,15 @@ _FILTERED_AGG_SQL = """
 """
 
 
-@register("sql_filtered_aggregates", oracle=_FILTERED_AGG_SQL)
-def sql_filtered_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
+register_sql(
+    "sql_filtered_aggregates",
     """ANSI FILTER-clause aggregates -- conditional counts and sums
     without CASE scaffolding -- as one SQL text accepted verbatim by
     both engines.  Catalyst compiles each FILTER into the same
     conditional partial aggregate a sum-of-if produces: one scan, one
-    exchange, map-side combine intact."""
-    register_views(spark, sf_dir)
-    return spark.sql(_FILTERED_AGG_SQL)
+    exchange, map-side combine intact.""",
+    _FILTERED_AGG_SQL,
+)
 
 
 @register(
@@ -214,9 +215,19 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "sql_window_named",
-    oracle="""
+    """Named-WINDOW SQL syntax parity: one shared window definition
+    referenced by several functions must evaluate identically through
+    each engine's own WINDOW clause (frame-refining a named window
+    inline is not in Spark's grammar, so the framed variant is its own
+    named window) -- the syntax every analyst actually writes for
+    multi-metric window queries.
+
+    Scale: single user-partitioned window over a pushed-down user
+    slice; the shared definition also guarantees Spark plans ONE window
+    sort for both functions.""",
+    """
     SELECT user_id,
            CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
            ROUND(SUM(value) OVER wf, 4) AS running_value
@@ -230,32 +241,6 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, rn
     """,
 )
-def sql_window_named(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Named-WINDOW SQL syntax parity: one shared window definition
-    referenced by several functions must evaluate identically through each engine's
-    own WINDOW clause (frame-refining a named window inline is not in
-    Spark's grammar, so the framed variant is its own named window) -- the syntax every analyst actually writes for multi-metric
-    window queries.
-
-    Scale: single user-partitioned window over a pushed-down user
-    slice; the shared definition also guarantees Spark plans ONE window
-    sort for both functions."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT user_id,
-               CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
-               ROUND(SUM(value) OVER wf, 4) AS running_value
-        FROM (
-            SELECT user_id, ts, event_id, value FROM events
-            WHERE user_id < 10
-        )
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
-               wf AS (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS UNBOUNDED PRECEDING)
-        ORDER BY user_id, rn
-        """
-    )
 
 
 @register(

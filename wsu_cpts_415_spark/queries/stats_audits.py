@@ -28,6 +28,10 @@ Scale design: every query reduces to a tiny grain before any window or
 join -- calendar days, |strata|, 9 digits, B=64 resamples.  The
 bootstrap replicates per-user rows map-side (64x a user-level sliver,
 never raw events) and collapses immediately to 64 resample means.
+
+``neyman_allocation`` and ``simpson_diversity_by_source`` are written
+once, as their oracle SQL: Spark runs that text verbatim over the
+fixture views (``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -37,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 Z_FLAG = 2.0  # |z| threshold for seasonal anomalies
 SAMPLE_BUDGET = 1000  # Neyman total sample size
@@ -117,9 +121,18 @@ def seasonal_residual_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "neyman_allocation",
-    oracle=f"""
+    f"""Neyman-optimal stratified sample allocation over language strata:
+    each stratum's share of the {SAMPLE_BUDGET}-row budget is
+    N_h*S_h / sum(N_h*S_h) (bigger and more variable strata get more
+    samples -- the design that minimizes the estimator variance).
+    Floor-rounded so the allocation is deterministic.
+
+    Scale: one partial-aggregated shuffle to |strata| rows, then a
+    1-row denominator broadcast.  This is the allocator that should
+    drive ``stratified_sample_lang`` at 100 TB.""",
+    f"""
     WITH strata AS (
         SELECT lang,
                CAST(COUNT(*) AS BIGINT) AS n_h,
@@ -138,38 +151,6 @@ def seasonal_residual_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY lang
     """,
 )
-def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neyman-optimal stratified sample allocation over language strata:
-    each stratum's share of the {SAMPLE_BUDGET}-row budget is
-    N_h*S_h / sum(N_h*S_h) (bigger and more variable strata get more
-    samples -- the design that minimizes the estimator variance).
-    Floor-rounded so the allocation is deterministic.
-
-    Scale: one partial-aggregated shuffle to |strata| rows, then a
-    1-row denominator broadcast.  This is the allocator that should
-    drive ``stratified_sample_lang`` at 100 TB."""
-    docs = load_table(spark, sf_dir, "documents")
-    strata = docs.groupBy("lang").agg(
-        F.count("*").alias("n_h"), F.stddev_pop("n_chars").alias("s_h")
-    )
-    tot = strata.agg(F.sum(F.col("n_h") * F.col("s_h")).alias("denom"))
-    return (
-        strata.crossJoin(F.broadcast(tot))
-        .select(
-            "lang",
-            "n_h",
-            F.round("s_h", 4).alias("stddev_chars"),
-            F.round(F.col("n_h") * F.col("s_h") / F.col("denom"), 6).alias(
-                "weight"
-            ),
-            F.floor(
-                SAMPLE_BUDGET * F.col("n_h") * F.col("s_h") / F.col("denom")
-            )
-            .cast("bigint")
-            .alias("alloc_n"),
-        )
-        .orderBy("lang")
-    )
 
 
 @register(
@@ -663,9 +644,16 @@ def embedding_norm_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "simpson_diversity_by_source",
-    oracle="""
+    """Language diversity per source via the Simpson index (1 - sum of
+    squared shares: the probability two random docs differ in
+    language) -- the one-number mixture check next to the full MI and
+    chi-square drift screens.
+
+    Scale: a (source, lang)-bounded rollup, per-source totals broadcast
+    back, final aggregate on |sources| rows.""",
+    """
     WITH counts AS (
         SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n
         FROM documents GROUP BY source, lang
@@ -683,31 +671,6 @@ def embedding_norm_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.source
     """,
 )
-def simpson_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language diversity per source via the Simpson index (1 - sum of
-    squared shares: the probability two random docs differ in
-    language) -- the one-number mixture check next to the full MI and
-    chi-square drift screens.
-
-    Scale: a (source, lang)-bounded rollup, per-source totals broadcast
-    back, final aggregate on |sources| rows."""
-    docs = load_table(spark, sf_dir, "documents")
-    counts = docs.groupBy("source", "lang").agg(F.count("*").alias("n"))
-    tot = counts.groupBy(F.col("source").alias("t_source")).agg(
-        F.sum("n").alias("src_n")
-    )
-    return (
-        counts.join(F.broadcast(tot), counts["source"] == tot["t_source"])
-        .groupBy("source")
-        .agg(
-            F.max("src_n").cast("bigint").alias("n_docs"),
-            F.count("*").alias("n_langs"),
-            F.round(
-                1 - F.sum(F.pow(F.col("n") / F.col("src_n"), 2)), 6
-            ).alias("simpson_diversity"),
-        )
-        .orderBy("source")
-    )
 
 
 @register(

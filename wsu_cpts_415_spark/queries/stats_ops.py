@@ -6,22 +6,36 @@ suite: a RANGE frame over *time* (vs the value-RANGE frame in
 ``range_frame_sum``), binning as pure arithmetic (the scalable
 alternative to sorting for distribution sketches), and argmax-by-count
 with a total-order tie policy.
+
+``rolling_7d_avg``, ``histogram_bins``, ``mode_per_group`` and
+``mutual_information_lang_source`` are written once, as their oracle
+SQL: Spark runs that text verbatim over the fixture views
+(``registry.register_sql``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 BIN_WIDTH = 5000.0  # histogram bin width over l_extendedprice
 
 
-@register(
+register_sql(
     "rolling_7d_avg",
-    oracle="""
+    """Trailing 7-day average of the daily event-value total: a RANGE
+    frame over TIME (gaps in the calendar shrink the frame -- a ROWS
+    frame would silently average the wrong days).  Daily totals are
+    rounded before the window so the frame consumes identical inputs in
+    both engines.
+
+    Scale: the window runs over the per-DAY aggregate (bounded
+    cardinality: 365 rows/year), not raw events -- the heavy reduction
+    happens in the partial-combining groupBy underneath, so the
+    unpartitioned window is a non-issue at any corpus size.""",
+    """
     WITH daily AS (
         SELECT CAST(ts AS DATE) AS d,
                ROUND(SUM(value), 4) AS daily_total
@@ -36,36 +50,16 @@ BIN_WIDTH = 5000.0  # histogram bin width over l_extendedprice
     ORDER BY d
     """,
 )
-def rolling_7d_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 7-day average of the daily event-value total: a RANGE
-    frame over TIME (gaps in the calendar shrink the frame -- a ROWS
-    frame would silently average the wrong days).  Daily totals are
-    rounded before the window so the frame consumes identical inputs in
-    both engines.
-
-    Scale: the window runs over the per-DAY aggregate (bounded
-    cardinality: 365 rows/year), not raw events -- the heavy reduction
-    happens in the partial-combining groupBy underneath, so the
-    unpartitioned window is a non-issue at any corpus size."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.round(F.sum("value"), 4).alias("daily_total")
-    )
-    # RANGE frame keyed on epoch seconds: -6 days .. current row
-    w = (
-        Window.orderBy(F.unix_timestamp(F.col("d").cast("timestamp")))
-        .rangeBetween(-6 * 86400, 0)
-    )
-    return daily.select(
-        "d",
-        "daily_total",
-        F.round(F.avg("daily_total").over(w), 4).alias("avg_7d"),
-    ).orderBy("d")
 
 
-@register(
+register_sql(
     "histogram_bins",
-    oracle=f"""
+    f"""Fixed-width value histogram of l_extendedprice (width
+    {BIN_WIDTH:.0f}): binning is row-local arithmetic + one hash
+    aggregate on a bounded key space -- the distribution sketch that
+    needs NO sort and NO percentile state, the first thing to reach for
+    at 100 TB before any quantile machinery.""",
+    f"""
     SELECT CAST(FLOOR(CAST(l_extendedprice AS DOUBLE) / {BIN_WIDTH}) AS BIGINT)
                AS bin,
            CAST(FLOOR(CAST(l_extendedprice AS DOUBLE) / {BIN_WIDTH})
@@ -78,31 +72,17 @@ def rolling_7d_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY bin
     """,
 )
-def histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width value histogram of l_extendedprice (width
-    {BIN_WIDTH:.0f}): binning is row-local arithmetic + one hash
-    aggregate on a bounded key space -- the distribution sketch that
-    needs NO sort and NO percentile state, the first thing to reach for
-    at 100 TB before any quantile machinery."""
-    li = load_table(spark, sf_dir, "lineitem")
-    bin_col = F.floor(F.col("l_extendedprice").cast("double") / BIN_WIDTH)
-    return (
-        li.groupBy(
-            bin_col.cast("bigint").alias("bin"),
-            (bin_col * BIN_WIDTH).cast("double").alias("bin_lo"),
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.min("l_extendedprice"), 2).alias("min_price"),
-            F.round(F.max("l_extendedprice"), 2).alias("max_price"),
-        )
-        .orderBy("bin")
-    )
 
 
-@register(
+register_sql(
     "mode_per_group",
-    oracle="""
+    """Most frequent order priority per order status, smallest-value
+    tie-break (Spark's ``mode()`` and DuckDB's ``mode()`` both leave
+    ties unspecified -- an explicit count + rank is the portable,
+    deterministic form).  Two partial-combining aggregates over a
+    statuses x priorities bounded key space; the window sees one row per
+    combination, never data.""",
+    """
     SELECT o_orderstatus, o_orderpriority AS mode_priority, n
     FROM (
         SELECT o_orderstatus, o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
@@ -117,30 +97,6 @@ def histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderstatus
     """,
 )
-def mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Most frequent order priority per order status, smallest-value
-    tie-break (Spark's ``mode()`` and DuckDB's ``mode()`` both leave
-    ties unspecified -- an explicit count + rank is the portable,
-    deterministic form).  Two partial-combining aggregates over a
-    statuses x priorities bounded key space; the window sees one row per
-    combination, never data."""
-    orders = load_table(spark, sf_dir, "orders")
-    counts = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").alias("n")
-    )
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.col("n").desc(), "o_orderpriority"
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_orderstatus",
-            F.col("o_orderpriority").alias("mode_priority"),
-            "n",
-        )
-        .orderBy("o_orderstatus")
-    )
 
 
 @register(
@@ -289,9 +245,19 @@ def linreg_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "mutual_information_lang_source",
-    oracle="""
+    """Mutual information between language and source (nats), plus the
+    joint entropy: the dependence screen run before stratified splits --
+    high MI means language mix is NOT exchangeable across sources, so
+    per-source sampling reweights must condition on language.
+
+    Scale: one grouped count over the corpus, then all probability math
+    runs on the |langs| x |sources| contingency sliver with broadcast
+    marginals.  Exact integer counts in, so only the final log/ratio is
+    float -- deterministic after rounding.
+    """,
+    """
     WITH joint AS (
         SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n
         FROM documents GROUP BY lang, source
@@ -314,45 +280,3 @@ def linreg_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY tot.t
     """,
 )
-def mutual_information_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mutual information between language and source (nats), plus the
-    joint entropy: the dependence screen run before stratified splits --
-    high MI means language mix is NOT exchangeable across sources, so
-    per-source sampling reweights must condition on language.
-
-    Scale: one grouped count over the corpus, then all probability math
-    runs on the |langs| x |sources| contingency sliver with broadcast
-    marginals.  Exact integer counts in, so only the final log/ratio is
-    float -- deterministic after rounding.
-    """
-    from wsu_cpts_415_spark.io.tables import load_table as _lt
-
-    docs = _lt(spark, sf_dir, "documents")
-    joint = docs.groupBy("lang", "source").agg(F.count("*").alias("n"))
-    tot = joint.agg(F.sum("n").alias("t"))
-    ml = joint.groupBy("lang").agg(F.sum("n").alias("nl"))
-    ms = joint.groupBy("source").agg(F.sum("n").alias("ns"))
-    full = (
-        joint.join(F.broadcast(ml), "lang")
-        .join(F.broadcast(ms), "source")
-        .crossJoin(F.broadcast(tot))
-    )
-    p = F.col("n") * 1.0 / F.col("t")
-    return full.groupBy("t").agg(
-        F.count("*").alias("n_cells"),
-        F.round(
-            F.sum(
-                p * F.log((F.col("n") * 1.0 * F.col("t"))
-                          / (F.col("nl") * 1.0 * F.col("ns")))
-            ),
-            6,
-        ).alias("mi_nats"),
-        F.round(-F.sum(F.when(F.col("n") > 0, p * F.log(p))), 6).alias(
-            "h_joint"
-        ),
-    ).select(
-        F.col("t").cast("bigint").alias("n_docs"),
-        "n_cells",
-        "mi_nats",
-        "h_joint",
-    )

@@ -27,6 +27,10 @@ scripts never needed but any 100 TB training-data platform does:
   aggregating one max per chunk (tiny), prefix-maxing the chunk table on
   the driver-side-small aggregate, and broadcasting it back -- no global
   single-partition window over the raw stream.
+
+``snapshot_diff_audit`` and ``journey_trigrams`` are written once, as
+their oracle SQL: Spark runs that text verbatim over the fixture views
+(``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table
 from wsu_cpts_415_spark.queries.events import SESSION_GAP_MIN
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 TIER_UNIT = 50.0  # cumulative-value width of one loyalty tier
 TIER_CAP = 4  # tiers saturate here
@@ -143,9 +147,18 @@ _DIFF_V2 = "o_orderkey % 101 <> 0"
 _DIFF_V2_BUMP = "o_orderkey % 89 = 0"
 
 
-@register(
+register_sql(
     "snapshot_diff_audit",
-    oracle=f"""
+    """Snapshot diff between two simulated versions of ``orders``:
+    added / removed / changed / unchanged row counts by full-outer join
+    on the key and a row fingerprint over the value columns.
+
+    Scale: the fingerprint collapses arbitrary row width to one hash
+    column BEFORE the shuffle, so the join moves (key, fp) pairs only;
+    with both versions bucketed on the key (io/bucketing.py) the join is
+    zero-Exchange and the diff streams partition-by-partition.
+    """,
+    f"""
     WITH v1 AS (
         SELECT o_orderkey AS k,
                md5(CONCAT_WS('|', o_custkey, o_orderstatus,
@@ -171,54 +184,6 @@ _DIFF_V2_BUMP = "o_orderkey % 89 = 0"
     ORDER BY status
     """,
 )
-def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot diff between two simulated versions of ``orders``:
-    added / removed / changed / unchanged row counts by full-outer join
-    on the key and a row fingerprint over the value columns.
-
-    Scale: the fingerprint collapses arbitrary row width to one hash
-    column BEFORE the shuffle, so the join moves (key, fp) pairs only;
-    with both versions bucketed on the key (io/bucketing.py) the join is
-    zero-Exchange and the diff streams partition-by-partition.
-    """
-    od = load_table(spark, sf_dir, "orders")
-
-    def fingerprint(price_col):
-        return F.md5(
-            F.concat_ws(
-                "|",
-                F.col("o_custkey"),
-                F.col("o_orderstatus"),
-                F.round(price_col, 2),
-                F.col("o_orderpriority"),
-            )
-        )
-
-    v1 = od.filter(F.expr(_DIFF_V1)).select(
-        F.col("o_orderkey").alias("k"),
-        fingerprint(F.col("o_totalprice")).alias("fp"),
-    )
-    v2 = od.filter(F.expr(_DIFF_V2)).select(
-        F.col("o_orderkey").alias("k"),
-        fingerprint(
-            F.when(F.expr(_DIFF_V2_BUMP), F.col("o_totalprice") * 1.1).otherwise(
-                F.col("o_totalprice")
-            )
-        ).alias("fp"),
-    )
-    j = v1.alias("a").join(v2.alias("b"), F.col("a.k") == F.col("b.k"), "full")
-    status = (
-        F.when(F.col("a.k").isNull(), "added")
-        .when(F.col("b.k").isNull(), "removed")
-        .when(F.col("a.fp") != F.col("b.fp"), "changed")
-        .otherwise("unchanged")
-    )
-    return (
-        j.select(status.alias("status"))
-        .groupBy("status")
-        .agg(F.count("*").alias("n"))
-        .orderBy("status")
-    )
 
 
 @register(
@@ -330,9 +295,20 @@ def late_event_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "journey_trigrams",
-    oracle=f"""
+    f"""Top-10 three-step user journeys (event-type trigrams) WITHIN a
+    session (gap-based, {SESSION_GAP_MIN} min): the path-mining rollup
+    behind "what do users do right before purchasing" analyses --
+    sessionization composed with sequence extraction.
+
+    Scale: one window sort per user partition produces session ids AND
+    both lookaheads (shared sort, Catalyst collapses the window group);
+    the trigram count is a map-side-combinable aggregate over a
+    |types|^3-bounded key space, then TakeOrderedAndProject for the
+    top-10.  Nothing shuffles twice.
+    """,
+    f"""
     WITH gaps AS (
         SELECT user_id, ts, event_id, event_type,
                CASE WHEN ts - LAG(ts) OVER w > INTERVAL {SESSION_GAP_MIN} MINUTE
@@ -363,51 +339,6 @@ def late_event_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
 )
-def journey_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 three-step user journeys (event-type trigrams) WITHIN a
-    session (gap-based, {SESSION_GAP_MIN} min): the path-mining rollup
-    behind "what do users do right before purchasing" analyses --
-    sessionization composed with sequence extraction.
-
-    Scale: one window sort per user partition produces session ids AND
-    both lookaheads (shared sort, Catalyst collapses the window group);
-    the trigram count is a map-side-combinable aggregate over a
-    |types|^3-bounded key space, then TakeOrderedAndProject for the
-    top-10.  Nothing shuffles twice.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    from wsu_cpts_415_spark.queries.events import session_new_flag
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        session_new_flag(w).alias("is_new"),
-    )
-    sess = flagged.withColumn(
-        "sess_no",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    w2 = Window.partitionBy("user_id", "sess_no").orderBy("ts", "event_id")
-    tri = sess.select(
-        F.concat_ws(
-            " > ",
-            "event_type",
-            F.lead("event_type", 1).over(w2),
-            F.lead("event_type", 2).over(w2),
-        ).alias("journey"),
-        (F.lead("sess_no", 2).over(w2) == F.col("sess_no")).alias("same_sess"),
-        F.lead("event_type", 2).over(w2).alias("third"),
-    )
-    return (
-        tri.filter(F.col("third").isNotNull() & F.col("same_sess"))
-        .groupBy("journey")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.col("n").desc(), "journey")
-        .limit(10)
-    )
 
 
 COVER_SEC = 300  # each event covers [ts, ts + 5 min)

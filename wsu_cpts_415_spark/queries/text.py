@@ -9,6 +9,10 @@ zero Python UDFs, zero shuffles until an explicit cross-document step
 (dedup join, LSH bucket join).  Cross-engine determinism comes from
 md5-derived integer hashes (md5 is identical in Spark and DuckDB; hex ->
 bigint via conv / '0x'-cast).
+
+``lang_source_rollup`` and ``dedup_exact`` are written once, as their
+oracle SQL: Spark runs that text verbatim over the fixture views
+(``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ from wsu_cpts_415_spark.ops.scalable_rank import (
     SCALABLE_RANK_ROWS,
     tiefree_global_row_number,
 )
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 # A deterministic "stopword" list drawn from the fixture vocabulary
 # (function words + generic fillers).
@@ -105,9 +109,11 @@ def token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "lang_source_rollup",
-    oracle="""
+    """Corpus composition rollup by language x source -- the partition
+    audit every training-data pipeline starts with.""",
+    """
     SELECT lang, source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars,
@@ -117,19 +123,6 @@ def token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY lang, source
     """,
 )
-def lang_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus composition rollup by language x source -- the partition
-    audit every training-data pipeline starts with."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.groupBy("lang", "source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.round(F.avg("n_chars"), 6).alias("avg_chars"),
-        )
-        .orderBy("lang", "source")
-    )
 
 
 # Reusable CTE ending in ``qual(doc_id, stop_ratio, unique_ratio,
@@ -302,9 +295,16 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "dedup_exact",
-    oracle="""
+    """Exact deduplication audit: hash the full text (content key, not
+    the row), keep the lowest doc_id per hash (deterministic first-writer
+    -- stricter than the reference's insert-order Mongo dedup,
+    mongo_loader.py:198-212), report kept/dropped counts.
+
+    At 100 TB: the groupBy key is the 128-bit md5, so the shuffle carries
+    hashes not documents; the keep-lowest rule is a min aggregation.""",
+    """
     WITH keyed AS (
         SELECT doc_id, md5(text) AS text_hash,
                ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
@@ -316,31 +316,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM keyed
     """,
 )
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact deduplication audit: hash the full text (content key, not
-    the row), keep the lowest doc_id per hash (deterministic first-writer
-    -- stricter than the reference's insert-order Mongo dedup,
-    mongo_loader.py:198-212), report kept/dropped counts.
-
-    At 100 TB: the groupBy key is the 128-bit md5, so the shuffle carries
-    hashes not documents; the keep-lowest rule is a min aggregation."""
-    docs = load_table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
-    keyed = docs.select(
-        "doc_id",
-        F.md5("text").alias("text_hash"),
-    ).withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("text_hash").orderBy("doc_id")
-        ),
-    )
-    return keyed.agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("text_hash").alias("n_distinct"),
-        F.count(F.when(F.col("rn") > 1, 1)).alias("n_dropped"),
-    )
 
 
 # Shingle CTE shared by the near-dup queries: distinct word bigrams/doc.

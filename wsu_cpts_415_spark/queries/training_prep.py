@@ -42,6 +42,10 @@ Scale design (100 TB posture):
 
 Hashing is md5-derived for bit-identical Spark/DuckDB parity (same
 rationale as queries/similarity.py:5-8).
+
+``quantile_binning`` and ``quantile_normalization_map`` are written
+once, as their oracle SQL: Spark runs that text verbatim over the
+fixture views (``registry.register_sql``).
 """
 
 from __future__ import annotations
@@ -51,7 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from wsu_cpts_415_spark.io.tables import load_table
-from wsu_cpts_415_spark.registry import register
+from wsu_cpts_415_spark.registry import register, register_sql
 
 N_BUCKETS = 256  # DSIR hashed-feature buckets
 TARGET_LANG = "en"  # DSIR target slice
@@ -328,9 +332,17 @@ def quality_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "quantile_binning",
-    oracle="""
+    """Per-language decile discretization of document length: each doc is
+    assigned its within-language length decile, and the output is the
+    bin dictionary (count + [lo, hi] range) a feature store would keep.
+
+    Scale: ntile is partitioned by language -- each partition sorts
+    independently, no global window.  (For a single giant partition the
+    production path is approx-quantile boundaries + bucket join; this
+    exact form is the oracle-checkable semantics.)""",
+    """
     WITH binned AS (
         SELECT lang, n_chars,
                NTILE(10) OVER (
@@ -347,32 +359,6 @@ def quality_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY lang, bin
     """,
 )
-def quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language decile discretization of document length: each doc is
-    assigned its within-language length decile, and the output is the
-    bin dictionary (count + [lo, hi] range) a feature store would keep.
-
-    Scale: ntile is partitioned by language -- each partition sorts
-    independently, no global window.  (For a single giant partition the
-    production path is approx-quantile boundaries + bucket join; this
-    exact form is the oracle-checkable semantics.)"""
-    docs = load_table(spark, sf_dir, "documents")
-    binned = docs.select(
-        "lang",
-        "n_chars",
-        F.ntile(10)
-        .over(Window.partitionBy("lang").orderBy("n_chars", "doc_id"))
-        .alias("bin"),
-    )
-    return (
-        binned.groupBy("lang", "bin")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("n_chars").alias("lo"),
-            F.max("n_chars").alias("hi"),
-        )
-        .orderBy("lang", "bin")
-    )
 
 
 @register(
@@ -492,9 +478,21 @@ def array_hof_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "quantile_normalization_map",
-    oracle="""
+    """Quantile normalization mapping table (the rank-based distribution
+    alignment from microarray statistics, Bolstad et al. 2003, public):
+    each source's within-source length deciles are mapped onto the
+    cross-source reference distribution (the decile-wise mean of source
+    means), yielding the per-(source, decile) shift that makes every
+    source's length profile comparable -- the corpus-balancing sibling
+    of per-feature standardization.
+
+    Scale: the decile window is PARTITIONED by source; sources collapse
+    to a |sources| x 10 mapping before the reference join, which is a
+    broadcast of 10 rows.  Applying the map downstream is a broadcast
+    join + arithmetic, no shuffle.""",
+    """
     WITH binned AS (
         SELECT source, n_chars,
                NTILE(10) OVER (
@@ -520,40 +518,3 @@ def array_hof_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p.source, p.decile
     """,
 )
-def quantile_normalization_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile normalization mapping table (the rank-based distribution
-    alignment from microarray statistics, Bolstad et al. 2003, public):
-    each source's within-source length deciles are mapped onto the
-    cross-source reference distribution (the decile-wise mean of source
-    means), yielding the per-(source, decile) shift that makes every
-    source's length profile comparable -- the corpus-balancing sibling
-    of per-feature standardization.
-
-    Scale: the decile window is PARTITIONED by source; sources collapse
-    to a |sources| x 10 mapping before the reference join, which is a
-    broadcast of 10 rows.  Applying the map downstream is a broadcast
-    join + arithmetic, no shuffle."""
-    docs = load_table(spark, sf_dir, "documents")
-    binned = docs.select(
-        "source",
-        "n_chars",
-        F.ntile(10)
-        .over(Window.partitionBy("source").orderBy("n_chars", "doc_id"))
-        .alias("decile"),
-    )
-    per_src = binned.groupBy("source", "decile").agg(
-        F.count("*").alias("n"), F.avg("n_chars").alias("src_mean")
-    )
-    ref = per_src.groupBy("decile").agg(F.avg("src_mean").alias("ref_mean"))
-    return (
-        per_src.join(F.broadcast(ref), "decile")
-        .select(
-            "source",
-            "decile",
-            "n",
-            F.round("src_mean", 4).alias("src_mean"),
-            F.round("ref_mean", 4).alias("ref_mean"),
-            F.round(F.col("ref_mean") - F.col("src_mean"), 4).alias("shift"),
-        )
-        .orderBy("source", "decile")
-    )

@@ -5,8 +5,8 @@ A query whose oracle Spark runs verbatim is registered from that SQL
 text alone (``registry.register_sql``); the DataFrame bodies left here are
 a kernel (``percent_rank_scalable``), a plan-gated rank-pushdown shape
 (``topk_with_ties_dense_rank``) and oracles only DuckDB can run.
-``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives each
-DataFrame body's reason.
+``DATAFRAME_BODIES`` in ``tests/test_source_lints.py`` gives the reason
+of each DataFrame body whose oracle Spark runs and matches.
 """
 
 from __future__ import annotations
